@@ -48,120 +48,32 @@ object DedupIndex {
   private def sbktOf(id: Column, nBuckets: Int): Column =
     pmod(xxhash64(id), lit(nBuckets.toLong))
 
-  /** Names a manifest may reference — the only names the sweep may
-    * delete (foreign files in the dir are never collected).
+  /** The manifest schema: `bdirs` + `sdirs` + optional `tdirs` +
+    * `meta`, with the (n, buckets) geometry riding in `metaVals`.
     */
-  private def isDedupDataDir(name: String): Boolean =
-    name.matches(
-      """buckets|sets|meta|(buckets|sets)-(delta|compact)-\d{10}""" +
-        """|tombs-\d{10}""")
-
-  /** The live layout + manifest-carried meta. A pre-r18 index (or one
-    * written before manifests existed at all) adopts with
-    * `metaVals = None` — readers then fall back to the 1-row meta
-    * parquet ([[metaOf]]).
-    */
-  private[graft] final case class DedupLayout(seq: Long,
-      bDirs: Seq[String], sDirs: Seq[String], tDirs: Seq[String],
-      metaDir: String,
-      metaVals: Option[Map[String, Long]])
-
-  /** The live (seq, bucket dirs, set dirs, meta dir). A freshly-built
-    * pre-r18 index has no manifest — it adopts as generation 0 (builds
-    * now commit a gen-0 manifest carrying the meta fields).
-    */
-  private[graft] def dedupManifest(spark: SparkSession, dir: String)
-      : DedupLayout = {
-    val (fs, root) = GenManifest.fsRoot(spark, dir)
-    GenManifest.latestSeq(fs, root) match {
-      case None =>
-        DedupLayout(0L, Seq("buckets"), Seq("sets"), Nil, "meta", None)
-      case Some(seq) =>
-        val (b, s, t, m, mv) = dedupManifestAt(fs, root, seq)
-        DedupLayout(seq, b, s, t, m, mv)
-    }
-  }
+  private[graft] val Family = GenManifest.Family("dedup",
+    Seq("bdirs" -> "buckets", "sdirs" -> "sets"), Some("meta"),
+    tombstones = true,
+    ("""buckets|sets|meta|(buckets|sets)-(delta|compact)-\d{10}""" +
+      """|tombs-\d{10}""").r)
 
   /** The (n, nBuckets) geometry: manifest-carried when present (zero
-    * Spark jobs — the serve-path fusion), else the 1-row meta parquet.
+    * Spark jobs — the serve-path fusion), else the 1-row meta parquet
+    * (an index adopted from before manifests carried it).
     */
   private def metaOf(spark: SparkSession, dir: String,
-      lay: DedupLayout): (Int, Int) =
+      lay: GenManifest.Layout): (Int, Int) =
     lay.metaVals match {
       case Some(mv) => (mv("n").toInt, mv("buckets").toInt)
-      case None     => readMeta(spark, dir, lay.metaDir)
+      case None     => readMeta(spark, dir, lay.meta)
     }
 
-  private def dedupManifestAt(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, g: Long)
-      : (Seq[String], Seq[String], Seq[String], String,
-        Option[Map[String, Long]]) =
-    GenManifest.readNode(fs, root, g) match {
-      case Some(node) =>
-        import scala.jdk.CollectionConverters._
-        // Key presence checked explicitly: a manifest from ANOTHER index
-        // family (lex manifests carry "dirs"/"stats") or a truncated one
-        // must surface the curated diagnostic below, not a bare NPE from
-        // inside Jackson traversal (which the sweep's NonFatal catch
-        // would then log as a contentless "null").
-        if (node.get("bdirs") == null || node.get("sdirs") == null ||
-            node.get("meta") == null)
-          throw new IllegalStateException(
-            s"manifest generation $g under $root is not a dedup-index " +
-              "manifest (missing bdirs/sdirs/meta) — wrong directory or " +
-              "damaged index")
-        val b = node.get("bdirs").elements().asScala.map(_.asText()).toSeq
-        val s = node.get("sdirs").elements().asScala.map(_.asText()).toSeq
-        // Empty (or scalar — elements() is then empty) dir nodes would
-        // send the generation readers into a contentless empty-reduce
-        // crash (the lexManifestAt rule).
-        if (b.isEmpty || s.isEmpty)
-          throw new IllegalStateException(
-            s"manifest generation $g under $root references no " +
-              "buckets/sets dirs — truncated or damaged manifest")
-        // Tombstone dirs are OPTIONAL (absent on every pre-retraction
-        // manifest — old indexes read unchanged); decode + damage guard
-        // live ONCE in GenManifest.readTDirs.
-        (b, s,
-          GenManifest.readTDirs(node, s"manifest generation $g under $root"),
-          node.get("meta").asText(),
-          GenManifest.metaVals(node))
-      case None if g == 0L =>
-        (Seq("buckets"), Seq("sets"), Nil, "meta", None)
-      case None =>
-        // Fail-loud on the READ path (the lexManifestAt contract): a
-        // listed-then-vanished manifest is a damaged index or a
-        // single-writer violation. The sweep tolerates this via its own
-        // NonFatal catch.
-        throw new IllegalStateException(
-          s"index manifest generation $g is missing under $root — " +
-            "damaged index or concurrent writer")
-    }
-
-  private def commitDedupManifest(spark: SparkSession, dir: String,
-      seq: Long, bDirs: Seq[String], sDirs: Seq[String],
-      tDirs: Seq[String], metaDir: String, n: Int, nBuckets: Int): Unit = {
-    val node = GenManifest.newNode()
-    val ba = node.putArray("bdirs"); bDirs.foreach(ba.add)
-    val sa = node.putArray("sdirs"); sDirs.foreach(sa.add)
-    if (tDirs.nonEmpty) {
-      val ta = node.putArray("tdirs"); tDirs.foreach(ta.add)
-    }
-    node.put("meta", metaDir)
-    // Geometry rides the manifest so serves never pay the meta parquet
-    // job; the meta table stays the at-rest record + adoption fallback.
-    GenManifest.putMetaVals(node, "n" -> n.toLong,
-      "buckets" -> nBuckets.toLong)
-    GenManifest.commit(spark, dir, seq, node)
-  }
-
-  private def sweepDedupGenerations(spark: SparkSession, dir: String,
-      current: Long): Unit =
-    GenManifest.sweepOwned(spark, dir, current, isDedupDataDir) {
-      (fs, root, g) =>
-        val (b, s, t, m, _) = dedupManifestAt(fs, root, g)
-        b ++ s ++ t :+ m
-    }
+  /** The inverse of [[metaOf]]: the geometry every commit carries, so
+    * serves never pay the meta parquet job; the meta table stays the
+    * at-rest record + adoption fallback.
+    */
+  private def metaVals(n: Int, nBuckets: Int): Option[Map[String, Long]] =
+    Some(Map("n" -> n.toLong, "buckets" -> nBuckets.toLong))
 
   /** Write the bucket + set tables of `docs` under `dir/<bName>` and
     * `dir/<sName>`; returns the bucket row count (0 = nothing written
@@ -239,8 +151,8 @@ object DedupIndex {
     // the pre-r18 adoption layout, which reads fine).
     spark.range(1).select(lit(n).as("n"), lit(nBuckets).as("buckets"))
       .write.mode("overwrite").parquet(s"$dir/meta")
-    commitDedupManifest(spark, dir, 0L, Seq("buckets"), Seq("sets"), Nil,
-      "meta", n, nBuckets)
+    GenManifest.commit(spark, dir, Family,
+      Family.adopted.copy(metaVals = metaVals(n, nBuckets)))
   }
 
   /** APPEND an ingest batch: its bucket/set rows become a new
@@ -252,11 +164,10 @@ object DedupIndex {
     */
   def appendToDedupIndex(newDocs: DataFrame, dir: String): Unit = {
     val spark = newDocs.sparkSession
-    val lay = dedupManifest(spark, dir)
-    import lay.{seq, bDirs, sDirs, tDirs, metaDir}
+    val lay = GenManifest.layout(spark, dir, Family)
     val (n, nBuckets) = metaOf(spark, dir, lay)
-    val newB = f"buckets-delta-${seq + 1}%010d"
-    val newS = f"sets-delta-${seq + 1}%010d"
+    val newB = f"buckets-delta-${lay.seq + 1}%010d"
+    val newS = f"sets-delta-${lay.seq + 1}%010d"
     val rows = writeTables(newDocs, dir, n, nBuckets, newB, newS)
     if (rows == 0L) {
       // writeTables wrote nothing for a 0-row delta; nothing to delete,
@@ -268,9 +179,9 @@ object DedupIndex {
       // Tombstones carry over: a re-ingested doc_id's NEW generation
       // outlives any older tombstone, so the append alone restores its
       // membership (the newest-op-wins rule).
-      commitDedupManifest(spark, dir, seq + 1, bDirs :+ newB,
-        sDirs :+ newS, tDirs, metaDir, n, nBuckets)
-      sweepDedupGenerations(spark, dir, seq + 1)
+      GenManifest.commit(spark, dir, Family,
+        lay.appended("bdirs" -> newB, "sdirs" -> newS)
+          .copy(metaVals = metaVals(n, nBuckets)))
     }
   }
 
@@ -286,14 +197,14 @@ object DedupIndex {
     * left). Single-writer, like append.
     */
   def compactDedupIndex(spark: SparkSession, dir: String): Unit = {
-    val lay = dedupManifest(spark, dir)
-    import lay.{seq, bDirs, sDirs, tDirs, metaDir}
+    val lay = GenManifest.layout(spark, dir, Family)
+    val (bDirs, sDirs, tDirs) = (lay("bdirs"), lay("sdirs"), lay.tDirs)
     if (bDirs.length <= 1 && sDirs.length <= 1 && tDirs.isEmpty) {
-      sweepDedupGenerations(spark, dir, seq)
+      GenManifest.sweep(spark, dir, Family, lay.seq)
       return
     }
-    val newB = f"buckets-compact-${seq + 1}%010d"
-    val newS = f"sets-compact-${seq + 1}%010d"
+    val newB = f"buckets-compact-${lay.seq + 1}%010d"
+    val newS = f"sets-compact-${lay.seq + 1}%010d"
     // Tombstone-free rows rewrite VERBATIM; with retraction generations
     // live the fold keeps only LIVE rows (physically purging taken-down
     // docs) and the tombstones fold away. A fully-retracted fold is
@@ -303,13 +214,14 @@ object DedupIndex {
       // Verbatim fold: a single read-to-write pipeline — barriering the
       // whole index here would checkpoint the table into executor
       // storage for nothing (the common routine-append compaction).
-      readGenerations(spark, dir, bDirs)
+      GenManifest.readGenerations(spark, dir, bDirs)
         .repartition(col("bkt"))
         .write.mode("overwrite").partitionBy("bkt").parquet(s"$dir/$newB")
     } else {
       // With tombstones the emptiness probe and the write must see ONE
       // materialization (validate-before-destroy discipline).
-      val fb = foldedLive(spark, dir, bDirs, tDirs).barrier()
+      val fb = GenManifest.foldedLive(spark, dir, bDirs, tDirs, "doc_id")
+        .barrier()
       try {
         require(fb.count() > 0L,
           s"compactDedupIndex at $dir: every document is retracted — an " +
@@ -319,13 +231,13 @@ object DedupIndex {
           .write.mode("overwrite").partitionBy("bkt").parquet(s"$dir/$newB")
       } finally Barrier.release(fb)
     }
-    foldedLive(spark, dir, sDirs, tDirs)
+    GenManifest.foldedLive(spark, dir, sDirs, tDirs, "doc_id")
       .repartition(col("sbkt"))
       .write.mode("overwrite").partitionBy("sbkt").parquet(s"$dir/$newS")
     val (n, nBuckets) = metaOf(spark, dir, lay)
-    commitDedupManifest(spark, dir, seq + 1, Seq(newB), Seq(newS), Nil,
-      metaDir, n, nBuckets)
-    sweepDedupGenerations(spark, dir, seq + 1)
+    GenManifest.commit(spark, dir, Family,
+      lay.compacted("bdirs" -> newB, "sdirs" -> newS)
+        .copy(metaVals = metaVals(n, nBuckets)))
   }
 
   /** RETRACT documents from the index — the takedown shape the stats
@@ -351,10 +263,10 @@ object DedupIndex {
     */
   def retractFromDedupIndex(docs: DataFrame, dir: String): Unit = {
     val spark = docs.sparkSession
-    val lay = dedupManifest(spark, dir)
-    import lay.{seq, bDirs, sDirs, tDirs, metaDir}
+    val lay = GenManifest.layout(spark, dir, Family)
+    val tDirs = lay.tDirs
     val (n, nBuckets) = metaOf(spark, dir, lay)
-    val newT = f"tombs-${seq + 1}%010d"
+    val newT = f"tombs-${lay.seq + 1}%010d"
     // BARRIERED, not cached (the exact-index takedown discipline): the
     // membership check and the WRITTEN tombstone rows must derive from
     // one materialized id set — a persist can re-evaluate from lineage
@@ -374,7 +286,7 @@ object DedupIndex {
         val sbkts = h.select(sbktOf(col("doc_id"), nBuckets)
             .cast("long").as("s"))
           .distinct().collect().map(_.getLong(0)).toIndexedSeq
-        val ins = GenManifest.readWithGen(spark, dir, sDirs)
+        val ins = GenManifest.readWithGen(spark, dir, lay("sdirs"))
           .filter(col("sbkt").isin(sbkts: _*))
           .join(broadcast(h), Seq("doc_id"), "left_semi")
         val live =
@@ -392,9 +304,8 @@ object DedupIndex {
           .repartition(col("sbkt"))
           .write.mode("overwrite").partitionBy("sbkt")
           .parquet(s"$dir/$newT")
-        commitDedupManifest(spark, dir, seq + 1, bDirs, sDirs,
-          tDirs :+ newT, metaDir, n, nBuckets)
-        sweepDedupGenerations(spark, dir, seq + 1)
+        GenManifest.commit(spark, dir, Family,
+          lay.retracted(newT).copy(metaVals = metaVals(n, nBuckets)))
       }
     } finally Barrier.release(h)
   }
@@ -573,15 +484,15 @@ object DedupIndex {
     */
   def streamingIndexDups(spark: SparkSession, dir: String,
       stream: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val lay = dedupManifest(spark, dir)
-    import lay.{bDirs, sDirs, tDirs}
+    val lay = GenManifest.layout(spark, dir, Family)
     val (n, _) = metaOf(spark, dir, lay)
     val bands = Dedup.Bands
     // Retraction-aware static sides: a taken-down doc must not alert
     // (the exact-index twin's rule) — with tombstone generations live
     // the per-batch scans resolve membership; compact the index to
     // fold them away and return these to bare scans.
-    val baseBuckets = foldedLive(spark, dir, bDirs, tDirs)
+    val baseBuckets =
+      GenManifest.foldedLive(spark, dir, lay("bdirs"), lay.tDirs, "doc_id")
       .select(col("band"), col("key"), col("doc_id").as("base_id"))
     // Per-base-doc key array (band-indexed) for the smallest-colliding-
     // band emission test — static, built once per stream.
@@ -601,7 +512,8 @@ object DedupIndex {
       .select(col("base_id"),
         array((0 until bands).map(i => col(s"bk$i")): _*).as("base_keys"))
       .barrier()
-    val baseSets = foldedLive(spark, dir, sDirs, tDirs)
+    val baseSets =
+      GenManifest.foldedLive(spark, dir, lay("sdirs"), lay.tDirs, "doc_id")
       .select(col("doc_id").as("base_id"), col("sset").as("bset"))
     // Per-row signature: tokens and shingles materialized as their own
     // attributes FIRST (the interpreted-HOF trap), then the SHARED
@@ -654,9 +566,8 @@ object DedupIndex {
     * tables until [[compactDedupIndex]] purges them).
     */
   def takedownHealth(spark: SparkSession, dir: String): DataFrame = {
-    val lay = dedupManifest(spark, dir)
-    import lay.{sDirs, tDirs}
-    GenManifest.takedownCensus(spark, dir, sDirs, tDirs, "doc_id",
+    val lay = GenManifest.layout(spark, dir, Family)
+    GenManifest.takedownCensus(spark, dir, lay("sdirs"), lay.tDirs, "doc_id",
       "live_docs", "dead_docs")
   }
 
@@ -672,11 +583,11 @@ object DedupIndex {
     */
   def indexHealth(spark: SparkSession, dir: String,
       hotDf: Int = 1): DataFrame = {
-    val lay = dedupManifest(spark, dir)
-    import lay.{bDirs, tDirs}
+    val lay = GenManifest.layout(spark, dir, Family)
     // Health reflects LIVE membership: a retracted hot doc must not
     // keep inflating the df census an operator tunes maxBucketDf by.
-    val bk = foldedLive(spark, dir, bDirs, tDirs)
+    val bk = GenManifest.foldedLive(spark, dir, lay("bdirs"), lay.tDirs,
+      "doc_id")
     val perKey = bk.groupBy(col("band"), col("key"))
       .agg(count(lit(1)).as("df"))
     perKey.groupBy(col("band"))
@@ -694,16 +605,8 @@ object DedupIndex {
     */
   private[graft] def readPruned(spark: SparkSession, dir: String,
       dirs: Seq[String], partCol: String, keys: Seq[Long]): DataFrame =
-    readGenerations(spark, dir, dirs)
+    GenManifest.readGenerations(spark, dir, dirs)
       .filter(col(partCol).isin(keys: _*))
-
-  /** The ONE liveness fold — the shared [[GenManifest.foldedLive]]
-    * kernel at this family's doc key. Every retraction-aware reader
-    * (serve legs, streaming twin, health, compaction) routes here.
-    */
-  private def foldedLive(spark: SparkSession, dir: String,
-      dirs: Seq[String], tDirs: Seq[String]): DataFrame =
-    GenManifest.foldedLive(spark, dir, dirs, tDirs, "doc_id")
 
   /** The pruned read with retraction applied — serves route here via
     * the shared [[GenManifest.readPrunedLive]] kernel; the
@@ -715,13 +618,6 @@ object DedupIndex {
       tDirs: Seq[String], tm: Option[DataFrame] = None): DataFrame =
     GenManifest.readPrunedLive(spark, dir, dirs, partCol, keys, tDirs,
       "doc_id", tm)
-
-  /** The generation union-read every consumer shares (serve, health,
-    * compaction) — delegates to the ONE cross-family definition.
-    */
-  private def readGenerations(spark: SparkSession, dir: String,
-      dirs: Seq[String]): DataFrame =
-    GenManifest.readGenerations(spark, dir, dirs)
 
   /** Near-duplicate pairs of an ingest batch against a persisted index
     * AND within the batch itself: every (doc_a, doc_b, jaccard) with
@@ -786,8 +682,8 @@ object DedupIndex {
     import spark.implicits._
     def emptyCross =
       Seq.empty[(Long, Long, Double)].toDF("delta_id", "base_id", "jaccard")
-    val lay = dedupManifest(spark, dir)
-    import lay.{bDirs, sDirs, tDirs}
+    val lay = GenManifest.layout(spark, dir, Family)
+    val (bDirs, sDirs, tDirs) = (lay("bdirs"), lay("sdirs"), lay.tDirs)
     val (n, nBuckets) = metaOf(spark, dir, lay)
     // Null-id delta rows drop up front (the streamingIndexDups rule,
     // batch edition): every pair/verdict join is null-rejecting, so a

@@ -379,90 +379,10 @@ object ExactDedupIndex {
   // OR-merged bloom is bit-identical to a union build (same bit width
   // and hash count — see Bloom.merge). Spec-pinned.
 
-  private def isDataDir(n: String): Boolean =
-    n == "hashes" || n.startsWith("hashes-") ||
-      n == "meta" || n.startsWith("meta-") || n.startsWith("tombs-")
-
-  private[graft] def indexManifest(spark: SparkSession, dir: String)
-      : (Long, Seq[String], Seq[String], String) = {
-    val (fs, root) = GenManifest.fsRoot(spark, dir)
-    GenManifest.latestSeq(fs, root) match {
-      case None => (0L, Seq("hashes"), Nil, "meta")
-      case Some(seq) =>
-        val (h, t, m) = manifestAt(fs, root, seq)
-        (seq, h, t, m)
-    }
-  }
-
-  private def manifestAt(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, g: Long)
-      : (Seq[String], Seq[String], String) =
-    GenManifest.readNode(fs, root, g) match {
-      case Some(node) =>
-        import scala.jdk.CollectionConverters._
-        // Key presence checked explicitly (the dedupManifestAt rule): a
-        // manifest from another index family must surface this curated
-        // diagnostic, not a bare NPE the sweep's NonFatal catch would
-        // log as a contentless "null".
-        if (node.get("hdirs") == null || node.get("meta") == null)
-          throw new IllegalStateException(
-            s"manifest generation $g under $root is not an exact-dedup-" +
-              "index manifest (missing hdirs/meta) — wrong directory or " +
-              "damaged index")
-        val h = node.get("hdirs").elements().asScala.map(_.asText()).toSeq
-        // Empty (or scalar — elements() is then empty) hdirs would send
-        // readHashGenerations into a contentless empty-reduce crash
-        // (the lexManifestAt rule).
-        if (h.isEmpty)
-          throw new IllegalStateException(
-            s"manifest generation $g under $root references no hash " +
-              "dirs — truncated or damaged manifest")
-        // Tombstone dirs are OPTIONAL (absent on every pre-retraction
-        // manifest — old indexes read unchanged); decode + damage guard
-        // live ONCE in GenManifest.readTDirs.
-        (h,
-          GenManifest.readTDirs(node, s"manifest generation $g under $root"),
-          node.get("meta").asText())
-      case None if g == 0L => (Seq("hashes"), Nil, "meta")
-      case None =>
-        // Fail-loud on the READ path (the lexManifestAt contract); the
-        // sweep tolerates this via its own NonFatal catch.
-        throw new IllegalStateException(
-          s"index manifest generation $g is missing under $root — " +
-            "damaged index or concurrent writer")
-    }
-
-  private def commitManifest(spark: SparkSession, dir: String, seq: Long,
-      hDirs: Seq[String], tDirs: Seq[String], metaDir: String): Unit = {
-    val node = GenManifest.newNode()
-    val arr = node.putArray("hdirs")
-    hDirs.foreach(arr.add)
-    if (tDirs.nonEmpty) {
-      val tarr = node.putArray("tdirs")
-      tDirs.foreach(tarr.add)
-    }
-    node.put("meta", metaDir)
-    GenManifest.commit(spark, dir, seq, node)
-  }
-
-  private def sweepGenerations(spark: SparkSession, dir: String,
-      current: Long): Unit =
-    GenManifest.sweepOwned(spark, dir, current, isDataDir) {
-      (fs, root, g) =>
-        val (h, t, m) = manifestAt(fs, root, g)
-        h ++ t :+ m
-    }
-
-  private def readHashGenerations(spark: SparkSession, dir: String,
-      hDirs: Seq[String]): DataFrame =
-    GenManifest.readGenerations(spark, dir, hDirs)
-
-  /** Generation read — the SHARED GenManifest kernel (a verbatim local
-    * copy was the bandKeyArray drift class); rows carry `__g`.
-    */
-  private def readWithGen(spark: SparkSession, dir: String,
-      dirs: Seq[String]): DataFrame =
-    GenManifest.readWithGen(spark, dir, dirs)
+  /** The manifest schema: `hdirs` + optional `tdirs` + `meta`. */
+  private[graft] val Family = GenManifest.Family("exact-dedup",
+    Seq("hdirs" -> "hashes"), Some("meta"), tombstones = true,
+    "hashes|meta|(hashes|meta|tombs)-.*".r)
 
   /** CURRENT members among insert/tombstone rows carrying the `__g`
     * generation: a hash is live iff its newest INSERT outlives its
@@ -553,8 +473,9 @@ object ExactDedupIndex {
     */
   def indexClean(spark: SparkSession, dir: String,
       delta: DataFrame): DataFrame = {
-    val (_, hDirs, tDirs, metaDir) = indexManifest(spark, dir)
-    val meta = spark.read.parquet(s"$dir/$metaDir").head()
+    val lay = GenManifest.layout(spark, dir, Family)
+    val (hDirs, tDirs) = (lay("hdirs"), lay.tDirs)
+    val meta = spark.read.parquet(s"$dir/${lay.meta}").head()
     val buckets = meta.getAs[Int]("buckets")
     val blooms = readBlooms(meta)
     require(meta.getAs[Long]("n_hashes") > 0, s"index at $dir is empty")
@@ -582,14 +503,14 @@ object ExactDedupIndex {
       // over-approximation invisible again.
       val confirmed =
         if (tDirs.isEmpty) {
-          val scoped = readHashGenerations(spark, dir, hDirs)
+          val scoped = GenManifest.readGenerations(spark, dir, hDirs)
             .filter(col("hbkt").isin(bkts: _*))
           scoped.join(broadcast(cand), Seq("text_hash"), "left_semi")
         } else {
-          val ins = readWithGen(spark, dir, hDirs)
+          val ins = GenManifest.readWithGen(spark, dir, hDirs)
             .filter(col("hbkt").isin(bkts: _*))
             .join(broadcast(cand), Seq("text_hash"), "left_semi")
-          val tmb = readWithGen(spark, dir, tDirs)
+          val tmb = GenManifest.readWithGen(spark, dir, tDirs)
             .filter(col("hbkt").isin(bkts: _*))
             .join(broadcast(cand), Seq("text_hash"), "left_semi")
           resolveMembers(ins, tmb)
@@ -610,9 +531,9 @@ object ExactDedupIndex {
     * dead_ppm is both the compact-now and the bloom-precision signal.
     */
   def takedownHealth(spark: SparkSession, dir: String): DataFrame = {
-    val (_, hDirs, tDirs, _) = indexManifest(spark, dir)
-    GenManifest.takedownCensus(spark, dir, hDirs, tDirs, "text_hash",
-      "live_hashes", "dead_hashes")
+    val lay = GenManifest.layout(spark, dir, Family)
+    GenManifest.takedownCensus(spark, dir, lay("hdirs"), lay.tDirs,
+      "text_hash", "live_hashes", "dead_hashes")
   }
 
   /** Append an ingested batch's hashes as a new generation: per-
@@ -638,8 +559,8 @@ object ExactDedupIndex {
     */
   private def appendHashes(spark: SparkSession, hs: DataFrame,
       dir: String): Unit = {
-    val (seq, hDirs, tDirs, metaDir) = indexManifest(spark, dir)
-    val meta = spark.read.parquet(s"$dir/$metaDir").head()
+    val lay = GenManifest.layout(spark, dir, Family)
+    val meta = spark.read.parquet(s"$dir/${lay.meta}").head()
     val nHashes = meta.getAs[Long]("n_hashes")
     require(nHashes > 0,
       s"index at $dir has an empty base — rebuild with buildIndex " +
@@ -648,8 +569,8 @@ object ExactDedupIndex {
     val expectedItems = meta.getAs[Long]("expected_items")
     val numBits = meta.getAs[Long]("num_bits")
     val baseBlooms = readBlooms(meta)
-    val newH = s"hashes-${seq + 1}"
-    val newM = s"meta-${seq + 1}"
+    val newH = s"hashes-${lay.seq + 1}"
+    val newM = s"meta-${lay.seq + 1}"
     val (nNew, deltaBlooms) = Barrier.withCached(hs) { h =>
       h.withColumn("hbkt", hbktOf(col("text_hash"), buckets))
         .repartition(col("hbkt"))
@@ -673,8 +594,8 @@ object ExactDedupIndex {
       // Tombstones carry over: a re-ingested hash's NEW generation
       // outlives any older tombstone, so the append alone restores its
       // membership (resolveMembers' newest-op-wins rule).
-      commitManifest(spark, dir, seq + 1, hDirs :+ newH, tDirs, newM)
-      sweepGenerations(spark, dir, seq + 1)
+      GenManifest.commit(spark, dir, Family,
+        lay.appended("hdirs" -> newH).copy(metaDir = Some(newM)))
     }
   }
 
@@ -698,8 +619,9 @@ object ExactDedupIndex {
     */
   def streamingExactDups(spark: SparkSession, dir: String,
       stream: DataFrame): DataFrame = {
-    val (_, hDirs, tDirs, metaDir) = indexManifest(spark, dir)
-    val meta = spark.read.parquet(s"$dir/$metaDir").head()
+    val lay = GenManifest.layout(spark, dir, Family)
+    val (hDirs, tDirs) = (lay("hdirs"), lay.tDirs)
+    val meta = spark.read.parquet(s"$dir/${lay.meta}").head()
     require(meta.getAs[Long]("n_hashes") > 0, s"index at $dir is empty")
     val blooms = readBlooms(meta)
     // With retraction generations live, the static side resolves to the
@@ -715,9 +637,10 @@ object ExactDedupIndex {
     // insert generation outlives its newest tombstone — equivalent).
     val hashes =
       if (tDirs.isEmpty)
-        readHashGenerations(spark, dir, hDirs).select(col("text_hash"))
+        GenManifest.readGenerations(spark, dir, hDirs)
+          .select(col("text_hash"))
       else GenManifest.liveRows(
-          readWithGen(spark, dir, hDirs), "text_hash",
+          GenManifest.readWithGen(spark, dir, hDirs), "text_hash",
           GenManifest.tombMax(spark, dir, tDirs, "text_hash"))
         .select(col("text_hash"))
     bloomPositives(
@@ -774,7 +697,7 @@ object ExactDedupIndex {
     * empty frames (isin over an empty literal list never matches).
     */
   private def prunedSlivers(spark: SparkSession, dir: String,
-      hDirs: Seq[String], tDirs: Seq[String], buckets: Int,
+      lay: GenManifest.Layout, buckets: Int,
       h: DataFrame): (DataFrame, DataFrame) = {
     val bkts = h.select(hbktOf(col("text_hash"), buckets)
         .cast("long").as("b"))
@@ -785,12 +708,12 @@ object ExactDedupIndex {
       val empty = h.limit(0).withColumn("__g", lit(0L))
       (empty, empty)
     } else {
-      val ins = readWithGen(spark, dir, hDirs)
+      val ins = GenManifest.readWithGen(spark, dir, lay("hdirs"))
         .filter(col("hbkt").isin(bkts: _*))
         .join(broadcast(h), Seq("text_hash"), "left_semi")
       val tmb =
-        if (tDirs.isEmpty) ins.limit(0)
-        else readWithGen(spark, dir, tDirs)
+        if (lay.tDirs.isEmpty) ins.limit(0)
+        else GenManifest.readWithGen(spark, dir, lay.tDirs)
           .filter(col("hbkt").isin(bkts: _*))
           .join(broadcast(h), Seq("text_hash"), "left_semi")
       (ins, tmb)
@@ -799,10 +722,10 @@ object ExactDedupIndex {
 
   private def retractHashes(spark: SparkSession, hs: DataFrame,
       dir: String): Unit = {
-    val (seq, hDirs, tDirs, metaDir) = indexManifest(spark, dir)
-    val meta = spark.read.parquet(s"$dir/$metaDir").head()
-    val buckets = meta.getAs[Int]("buckets")
-    val newT = s"tombs-${seq + 1}"
+    val lay = GenManifest.layout(spark, dir, Family)
+    val buckets =
+      spark.read.parquet(s"$dir/${lay.meta}").head().getAs[Int]("buckets")
+    val newT = s"tombs-${lay.seq + 1}"
     // BARRIERED, not cached (the indexClean discipline): the bucket
     // literals, the over-retraction membership check, and the WRITTEN
     // tombstone rows must all derive from the same materialized hash
@@ -819,8 +742,7 @@ object ExactDedupIndex {
       } else {
         // Membership check over the SAME pruned-bucket discipline serves
         // use — the takedown set is bounded, so this reads slivers.
-        val (ins, tmb) = prunedSlivers(spark, dir, hDirs, tDirs,
-          buckets, h)
+        val (ins, tmb) = prunedSlivers(spark, dir, lay, buckets, h)
         val nonMembers = h.join(resolveMembers(ins, tmb),
           Seq("text_hash"), "left_anti").count()
         require(nonMembers == 0L,
@@ -832,8 +754,7 @@ object ExactDedupIndex {
           .repartition(col("hbkt"))
           .write.mode("overwrite").partitionBy("hbkt")
           .parquet(s"$dir/$newT")
-        commitManifest(spark, dir, seq + 1, hDirs, tDirs :+ newT, metaDir)
-        sweepGenerations(spark, dir, seq + 1)
+        GenManifest.commit(spark, dir, Family, lay.retracted(newT))
       }
     } finally Barrier.release(h)
   }
@@ -888,9 +809,9 @@ object ExactDedupIndex {
     */
   def syncIndex(v1Docs: DataFrame, v2Docs: DataFrame, dir: String): Unit = {
     val spark = v1Docs.sparkSession
-    val (_, hDirs, tDirs, metaDir) = indexManifest(spark, dir)
+    val lay = GenManifest.layout(spark, dir, Family)
     val buckets =
-      spark.read.parquet(s"$dir/$metaDir").head().getAs[Int]("buckets")
+      spark.read.parquet(s"$dir/${lay.meta}").head().getAs[Int]("buckets")
     val v1H = hashesOf(v1Docs)
     val v2H = hashesOf(v2Docs)
     // Bucket-pruned membership classification of a transition-sized
@@ -904,7 +825,7 @@ object ExactDedupIndex {
     // manifest read — deliberate defense in depth on the write path,
     // two pruned sliver jobs per sync.)
     def classify(h: DataFrame): (DataFrame, DataFrame) = {
-      val (ins, tmb) = prunedSlivers(spark, dir, hDirs, tDirs, buckets, h)
+      val (ins, tmb) = prunedSlivers(spark, dir, lay, buckets, h)
       (ins.select(col("text_hash")).distinct(), resolveMembers(ins, tmb))
     }
     // Retract-then-append is the family convention (newest-op-wins);
@@ -945,23 +866,24 @@ object ExactDedupIndex {
     * sweep would otherwise live forever). Single-writer, like append.
     */
   def compactIndex(spark: SparkSession, dir: String): Unit = {
-    val (seq, hDirs, tDirs, metaDir) = indexManifest(spark, dir)
+    val lay = GenManifest.layout(spark, dir, Family)
+    val (hDirs, tDirs) = (lay("hdirs"), lay.tDirs)
     if (hDirs.length <= 1 && tDirs.isEmpty) {
-      sweepGenerations(spark, dir, seq)
+      GenManifest.sweep(spark, dir, Family, lay.seq)
       return
     }
-    val meta = spark.read.parquet(s"$dir/$metaDir").head()
+    val meta = spark.read.parquet(s"$dir/${lay.meta}").head()
     val buckets = meta.getAs[Int]("buckets")
     val expectedItems = meta.getAs[Long]("expected_items")
     val numBits = meta.getAs[Long]("num_bits")
-    val newH = s"hashes-${seq + 1}"
-    val newM = s"meta-${seq + 1}"
+    val newH = s"hashes-${lay.seq + 1}"
+    val newM = s"meta-${lay.seq + 1}"
     val folded =
       if (tDirs.isEmpty)
-        readHashGenerations(spark, dir, hDirs)
+        GenManifest.readGenerations(spark, dir, hDirs)
           .select(col("text_hash"), col("hbkt")).distinct()
-      else resolveMembers(
-          readWithGen(spark, dir, hDirs), readWithGen(spark, dir, tDirs))
+      else resolveMembers(GenManifest.readWithGen(spark, dir, hDirs),
+          GenManifest.readWithGen(spark, dir, tDirs))
         .withColumn("hbkt", hbktOf(col("text_hash"), buckets))
     val (n, blooms) = Barrier.withCached(folded) { f =>
       val cnt = f.count()
@@ -985,8 +907,8 @@ object ExactDedupIndex {
       (cnt, bf)
     }
     writeMeta(spark, dir, newM, n, buckets, expectedItems, numBits, blooms)
-    commitManifest(spark, dir, seq + 1, Seq(newH), Nil, newM)
-    sweepGenerations(spark, dir, seq + 1)
+    GenManifest.commit(spark, dir, Family,
+      lay.compacted("hdirs" -> newH).copy(metaDir = Some(newM)))
   }
 
 }

@@ -1,25 +1,32 @@
 package graft.operators
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Generation-manifest lifecycle shared by every persisted index format
-  * ([[Similarity]]'s ANN cell dirs, [[Search]]'s lexical postings):
-  * numbered JSON manifests, dot-temp staged commits, and the
-  * grace-window generation sweep. Format semantics — the adoption layout
-  * of pre-manifest indexes, the manifest's fields, which names count as
-  * data dirs, and the referenced set a sweep must retain — stay with
-  * each owner; this object owns only the crash-safety-critical
-  * mechanics, so a commit- or sweep-protocol fix lands exactly once.
+/** Generation-manifest codec and lifecycle shared by the six persisted
+  * index families ([[ExactDedupIndex]], [[DedupIndex]], [[MediaIndex]],
+  * [[StatsIndex]], [[Search]]'s lexical postings, [[Similarity]]'s ANN
+  * cell dirs): numbered JSON manifests, dot-temp staged commits, and the
+  * grace-window generation sweep.
+  *
+  * The split: each family declares its manifest SCHEMA once, as a
+  * constant [[Family]] (its dir-list keys with their gen-0 adoption
+  * names, its meta key, whether it carries tombstones, and which names
+  * count as sweepable data dirs). This object owns everything that
+  * reads or writes a manifest — the [[layout]] read (including the
+  * adoption of a pre-manifest index as generation 0), the decode with
+  * its family guard, the [[commit]], and the [[sweep]] — so a format,
+  * guard or crash-safety fix lands exactly once. What a family's dirs
+  * HOLD (row encodings, bucket functions, the mapping from
+  * [[Layout.metaVals]] to its geometry) stays with the family.
   *
   * Commit protocol (the [[graft.streaming.IncrementalTrend]] pattern):
   * data dirs exist on disk BEFORE any manifest references them, and the
   * rename of the staged dot-temp onto `manifest-<seq>.json` is the
   * atomic commit point — a reader resolves either the old generation or
   * the new one, never a torn index. Writers are SINGLE-WRITER by
-  * contract; [[commit]] refuses an already-existing destination so a
+  * contract; the commit refuses an already-existing destination so a
   * same-generation race fails loudly even on posix-like filesystems
   * (where a bare rename silently REPLACES the winner's manifest — HDFS
   * rename fails instead). The check-then-rename is not atomic, so this
@@ -27,8 +34,54 @@ import org.apache.spark.sql.SparkSession
   */
 private[graft] object GenManifest {
 
-  val ManifestRe = """manifest-(\d{10})\.json""".r
+  private val ManifestRe = """manifest-(\d{10})\.json""".r
   def manifestName(seq: Long): String = f"manifest-$seq%010d.json"
+
+  /** One index family's manifest schema. `dirKeys` lists the JSON key
+    * of each named dir list with the dir a pre-manifest index holds it
+    * in (its gen-0 adoption name), in the order the keys are written;
+    * `metaKey` names the meta-dir key (its adoption dir has the same
+    * name); `tombstones` admits the optional `tdirs` list; `dataDir`
+    * positive-matches the ONLY names a sweep may delete, so index
+    * metadata can never be collected by a bug in the referenced-set
+    * arithmetic.
+    */
+  final case class Family(name: String, dirKeys: Seq[(String, String)],
+      metaKey: Option[String], tombstones: Boolean,
+      dataDir: scala.util.matching.Regex) {
+    /** The layout keys a manifest of this family carries, exactly. */
+    val keys: Set[String] = dirKeys.map(_._1).toSet ++ metaKey
+
+    /** Generation 0 of an index built before manifests existed. */
+    def adopted: Layout =
+      Layout(0L, dirKeys.map { case (k, d) => k -> Seq(d) }.toMap, Nil,
+        metaKey, None)
+  }
+
+  /** One committed generation: its seq, the named dir lists (keyed by
+    * the family's `dirKeys`), the tombstone dirs, the meta dir, and the
+    * manifest-carried meta fields (None on an adopted or pre-metaVals
+    * index — readers then read the family's meta parquet).
+    */
+  final case class Layout(seq: Long, dirs: Map[String, Seq[String]],
+      tDirs: Seq[String], metaDir: Option[String],
+      metaVals: Option[Map[String, Long]]) {
+    def apply(key: String): Seq[String] = dirs(key)
+    def meta: String = metaDir.getOrElse(
+      throw new NoSuchElementException("this index family has no meta dir"))
+    /** Every dir name this generation keeps alive. */
+    def referenced: Seq[String] = dirs.values.flatten.toSeq ++ tDirs ++ metaDir
+
+    /** The next generation with each `key -> dir` added to its list. */
+    def appended(adds: (String, String)*): Layout = copy(seq = seq + 1,
+      dirs = dirs ++ adds.map { case (k, d) => k -> (dirs(k) :+ d) })
+    /** The next generation with `tDir` added as a tombstone dir. */
+    def retracted(tDir: String): Layout =
+      copy(seq = seq + 1, tDirs = tDirs :+ tDir)
+    /** The next generation folded to one dir per key, tombstones gone. */
+    def compacted(folds: (String, String)*): Layout = copy(seq = seq + 1,
+      dirs = folds.map { case (k, d) => k -> Seq(d) }.toMap, tDirs = Nil)
+  }
 
   def fsRoot(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val root = new Path(dir)
@@ -36,11 +89,10 @@ private[graft] object GenManifest {
   }
 
   /** Recursively delete an index root before a full rebuild — ONE
-    * implementation for every index family (lex, ANN, exact-dedup), so
-    * a future reset-protocol change (trash-instead-of-delete, extra
-    * validation) lands exactly once — the same single-definition rule
-    * this object exists for. Callers own validate-BEFORE-destroy: every
-    * build must run its input guards before calling this.
+    * implementation for every index family, so a future reset-protocol
+    * change (trash-instead-of-delete, extra validation) lands exactly
+    * once. Callers own validate-BEFORE-destroy: every build must run its
+    * input guards before calling this.
     */
   def resetDir(spark: SparkSession, dir: String): Unit = {
     val (fs, root) = fsRoot(spark, dir)
@@ -48,8 +100,8 @@ private[graft] object GenManifest {
   }
 
   /** Highest committed generation, None when no manifest file exists
-    * (callers adopt pre-manifest indexes as generation 0). */
-  def latestSeq(fs: FileSystem, root: Path): Option[Long] = {
+    * (the index then adopts as generation 0). */
+  private def latestSeq(fs: FileSystem, root: Path): Option[Long] = {
     val seqs =
       if (!fs.exists(root)) Seq.empty[Long]
       else fs.listStatus(root).toSeq.map(_.getPath.getName).collect {
@@ -58,32 +110,73 @@ private[graft] object GenManifest {
     if (seqs.isEmpty) None else Some(seqs.max)
   }
 
-  /** The parsed manifest of a SPECIFIC generation, None when its file is
-    * absent — gen 0 of an adopted index is synthesized by the caller,
-    * never on disk. */
-  def readNode(fs: FileSystem, root: Path, seq: Long): Option[JsonNode] = {
-    val p = new Path(root, manifestName(seq))
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new ObjectMapper().readTree(in)) finally in.close()
-    }
+  /** The live layout of `fam`'s index at `dir`: the newest manifest, or
+    * the family's adoption layout when none exists yet. */
+  def layout(spark: SparkSession, dir: String, fam: Family): Layout = {
+    val (fs, root) = fsRoot(spark, dir)
+    layoutAt(fs, root, fam, latestSeq(fs, root).getOrElse(0L))
   }
 
-  def newNode(): ObjectNode = new ObjectMapper().createObjectNode()
+  /** The layout of a SPECIFIC generation. Gen 0 without a manifest file
+    * is the adoption layout — the sweep must treat it as live, or the
+    * first post-adoption commit would delete the adopted dirs out from
+    * under a reader. Any other missing generation fails loudly on the
+    * read path (a damaged index or a single-writer violation; an empty
+    * layout would surface as an unrelated empty-reduce crash). */
+  private def layoutAt(fs: FileSystem, root: Path, fam: Family,
+      g: Long): Layout = {
+    val p = new Path(root, manifestName(g))
+    if (fs.exists(p)) {
+      val in = fs.open(p)
+      val node = try new ObjectMapper().readTree(in) finally in.close()
+      decode(node, fam, g, s"manifest generation $g under $root")
+    } else if (g == 0L) fam.adopted
+    else throw new IllegalStateException(
+      s"index manifest generation $g is missing under $root — " +
+        "damaged index or concurrent writer")
+  }
 
-  /** Decode a manifest's OPTIONAL `tdirs` node — ONE definition for
-    * every tombstone family (this was five near-verbatim copies, the
-    * exact drift class this object exists to prevent). Absent = a
+  /** Decode one manifest behind the family guard: its layout keys (all
+    * but `metaVals`, and `tdirs` for a tombstone family) must be EXACTLY
+    * the family's keys. Key presence alone is not enough: a stats
+    * manifest (cdirs/hdirs/meta) carries every key of an exact-dedup one
+    * (hdirs/meta), and a reader that accepted it would die later on an
+    * uncurated error against the wrong tables. An empty (or scalar —
+    * elements() is then empty) dir list is damage, not an empty index.
+    */
+  private def decode(node: JsonNode, fam: Family, g: Long,
+      what: String): Layout = {
+    import scala.jdk.CollectionConverters._
+    val found = node.fieldNames().asScala.toSet - "metaVals" --
+      (if (fam.tombstones) Set("tdirs") else Set.empty[String])
+    if (found != fam.keys) {
+      val article = if ("aeiouAEIOU".contains(fam.name.head)) "an" else "a"
+      throw new IllegalStateException(
+        s"$what is not $article ${fam.name}-index manifest (keys " +
+          s"${found.toSeq.sorted.mkString("/")}, expected " +
+          s"${fam.keys.toSeq.sorted.mkString("/")}) — wrong directory or " +
+          "damaged index")
+    }
+    val dirs = fam.dirKeys.map { case (k, adoptName) =>
+      val ds = node.get(k).elements().asScala.map(_.asText()).toSeq
+      if (ds.isEmpty)
+        throw new IllegalStateException(
+          s"$what references no $adoptName dirs — truncated or damaged " +
+            "manifest")
+      k -> ds
+    }.toMap
+    Layout(g, dirs, readTDirs(node, what),
+      fam.metaKey.map(node.get(_).asText()), metaVals(node))
+  }
+
+  /** Decode a manifest's OPTIONAL `tdirs` node. Absent = a
     * pre-retraction manifest, tombstone-free by construction; a
     * PRESENT node decoding to nothing (empty array, or a scalar whose
-    * elements() iterator is empty) is DAMAGE — unrepresentable from any
+    * elements() iterator is empty) is DAMAGE — unrepresentable from the
     * committer — and reading it as tombstone-free would silently
-    * RESURRECT retracted content, strictly worse than a crash. `what`
-    * names the manifest for the diagnostic (e.g. "manifest generation
-    * 3 under /idx").
+    * RESURRECT retracted content, strictly worse than a crash.
     */
-  def readTDirs(node: JsonNode, what: String): Seq[String] = {
+  private def readTDirs(node: JsonNode, what: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val t = Option(node.get("tdirs"))
       .map(_.elements().asScala.map(_.asText()).toSeq)
@@ -94,46 +187,61 @@ private[graft] object GenManifest {
     t.getOrElse(Nil)
   }
 
-  /** Integer meta/config fields carried IN the manifest (r18 serve-path
+  /** Integer meta/config fields carried IN the manifest (the serve-path
     * fusion): a serve already reads the manifest driver-side to resolve
     * the layout, so carrying the index geometry/stats in the SAME node
     * removes the 1-row meta/stats parquet read — one whole Spark job —
     * from every serve. The parquet meta table stays the at-rest source
     * of truth and the fallback for manifests written before these
     * fields existed AND for adopted gen-0 indexes with no manifest at
-    * all (readers must treat [[metaVals]] = None as "read the parquet").
+    * all. A PRESENT-but-malformed node fails loudly (the readTDirs
+    * damage rule): silently falling back to a parquet meta that a later
+    * commit may have rolled past would serve a stale geometry.
     */
-  def putMetaVals(node: ObjectNode, fields: (String, Long)*): Unit = {
-    val m = node.putObject("metaVals")
-    fields.foreach { case (k, v) => m.put(k, v) }
-  }
-
-  /** The manifest-carried meta fields, None when the node predates them.
-    * A PRESENT-but-malformed node fails loudly (the readTDirs damage
-    * rule): silently falling back to a parquet meta that a later commit
-    * may have rolled past would serve a stale geometry.
-    */
-  def metaVals(node: JsonNode): Option[Map[String, Long]] =
+  private def metaVals(node: JsonNode): Option[Map[String, Long]] =
     Option(node.get("metaVals")).map { m =>
       import scala.jdk.CollectionConverters._
       if (!m.isObject)
         throw new IllegalStateException(
           "manifest metaVals node is not an object — damaged manifest")
-      m.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
+      scala.collection.immutable.ListMap.from(m.properties().asScala.iterator
+        .map(e => e.getKey -> e.getValue.asLong()))
     }
 
-  /** Stage `node` to a dot-temp, then rename onto the numbered manifest —
-    * the atomic commit point. Fails loudly if the destination already
-    * exists (single-writer contract violated) or the rename is refused;
-    * the orphaned data dir of an aborted commit is overwritten by the
-    * next attempt at this generation. */
-  def commit(spark: SparkSession, dir: String, seq: Long,
-      node: ObjectNode): Unit = {
+  /** Commit `lay` as generation `lay.seq` of `fam`'s index, then sweep
+    * what it superseded. Keys are written in the family's order (dir
+    * lists, `tdirs` when non-empty, the meta key, `metaVals` when
+    * present), so the bytes match every earlier writer of the format.
+    * The node is staged to a dot-temp and renamed onto the numbered
+    * manifest — the atomic commit point. Fails loudly if the destination
+    * already exists (single-writer contract violated) or the rename is
+    * refused; the orphaned data dir of an aborted commit is overwritten
+    * by the next attempt at this generation.
+    */
+  def commit(spark: SparkSession, dir: String, fam: Family,
+      lay: Layout): Unit = {
+    require(lay.dirs.keySet == fam.dirKeys.map(_._1).toSet &&
+        lay.dirs.values.forall(_.nonEmpty) &&
+        lay.metaDir.isDefined == fam.metaKey.isDefined &&
+        (fam.tombstones || lay.tDirs.isEmpty),
+      s"layout $lay does not fit the ${fam.name}-index manifest")
+    val node = new ObjectMapper().createObjectNode()
+    fam.dirKeys.foreach { case (k, _) =>
+      val a = node.putArray(k); lay(k).foreach(a.add)
+    }
+    if (lay.tDirs.nonEmpty) {
+      val a = node.putArray("tdirs"); lay.tDirs.foreach(a.add)
+    }
+    fam.metaKey.foreach(node.put(_, lay.meta))
+    lay.metaVals.foreach { mv =>
+      val m = node.putObject("metaVals")
+      mv.foreach { case (k, v) => m.put(k, v) }
+    }
     val (fs, root) = fsRoot(spark, dir)
     // Destination check BEFORE staging: strictly cheaper, shrinks the
     // race window, and the abort path leaves no orphan dot-temp behind
     // (the aborted pipeline won't run the sweep that would collect it).
-    val dst = new Path(root, manifestName(seq))
+    val dst = new Path(root, manifestName(lay.seq))
     if (fs.exists(dst))
       throw new IllegalStateException(
         s"manifest commit failed: $dst already exists — concurrent " +
@@ -149,37 +257,38 @@ private[graft] object GenManifest {
       throw new IllegalStateException(
         s"manifest commit failed: rename $tmp -> $dst")
     }
+    sweep(spark, dir, fam, lay.seq)
   }
 
-  /** Grace-window sweep after a durable commit at `current`: deletes
-    * manifests older than `current - 1`, crashed dot-temp stages, and
-    * every name `isDataDir` admits that `referenced` — the union of the
-    * current and predecessor generations' dirs, computed by the owner —
-    * does not contain. Retaining the predecessor gives an in-flight
-    * reader of the previous generation one further commit of grace
-    * (the IncrementalTrend RetainedGenerations=2 policy). `isDataDir`
-    * must positive-match ONLY sweepable data-dir names, so index
-    * metadata can never be deleted by a bug in the referenced-set
-    * arithmetic.
+  /** Grace-window sweep at generation `current`: deletes manifests older
+    * than `current - 1`, crashed dot-temp stages, and every name the
+    * family's `dataDir` admits that neither the current nor the
+    * predecessor generation references. Retaining the predecessor gives
+    * an in-flight reader of the previous generation one further commit
+    * of grace (the IncrementalTrend RetainedGenerations=2 policy).
     *
-    * BEST-EFFORT: runs after the commit is durable — a failure here must
-    * never surface as an operation failure, because the natural caller
-    * response (retry the append) would encode the SAME delta under a new
-    * generation and duplicate every row. Leftovers are unreferenced and
-    * the next commit's sweep collects them. Idempotent; safe to run
-    * standalone (e.g. a no-op compaction still sweeping old garbage).
+    * BEST-EFFORT: runs after the commit is durable — a failure here
+    * (including a referenced-set read that fails, which skips the sweep
+    * and leaves the index correct) must never surface as an operation
+    * failure, because the natural caller response (retry the append)
+    * would encode the SAME delta under a new generation and duplicate
+    * every row. Leftovers are unreferenced and the next commit's sweep
+    * collects them. Idempotent; safe to run standalone (e.g. a no-op
+    * compaction still sweeping old garbage).
     */
-  def sweep(spark: SparkSession, dir: String, current: Long,
-      referenced: Set[String], isDataDir: String => Boolean): Unit =
+  def sweep(spark: SparkSession, dir: String, fam: Family,
+      current: Long): Unit =
     try {
       val (fs, root) = fsRoot(spark, dir)
+      val referenced = Seq(current - 1, current).filter(_ >= 0)
+        .flatMap(g => layoutAt(fs, root, fam, g).referenced).toSet
       fs.listStatus(root).foreach { st =>
         st.getPath.getName match {
           case ManifestRe(d) if d.toLong < current - 1 =>
             fs.delete(st.getPath, false)
           case n if n.startsWith(".manifest-") =>
             fs.delete(st.getPath, false)
-          case n if isDataDir(n) && !referenced.contains(n) =>
+          case n if fam.dataDir.matches(n) && !referenced.contains(n) =>
             fs.delete(st.getPath, true)
           case _ => ()
         }
@@ -188,37 +297,9 @@ private[graft] object GenManifest {
       case scala.util.control.NonFatal(e) =>
         System.err.println(
           s"[graft] generation sweep at $dir (gen $current) failed " +
-            s"(commit already durable; next commit re-collects): " +
-            e.getMessage)
+            s"(commit already durable; index remains correct; next " +
+            s"commit re-collects): ${e.getMessage}")
     }
-
-  /** The owner-side sweep scaffold every index family was copy-pasting
-    * (ANN, lexical, dedup): compute the referenced set over the retained
-    * generations (current and current−1 — the reader-grace window) via
-    * the family's manifest decoder, skipping the sweep LOUDLY-BUT-SAFELY
-    * if that read fails (the commit is already durable; a failed
-    * best-effort sweep must never fail the operation or trigger a
-    * retry-append that would duplicate the delta). Only the per-format
-    * decoding stays with each owner.
-    */
-  def sweepOwned(spark: SparkSession, dir: String, current: Long,
-      isDataDir: String => Boolean)(
-      referencedOf: (FileSystem, Path, Long) => Seq[String]): Unit = {
-    val referenced =
-      try {
-        val (fs, root) = fsRoot(spark, dir)
-        Seq(current - 1, current).filter(_ >= 0)
-          .flatMap(g => referencedOf(fs, root, g))
-          .filter(_.nonEmpty).toSet
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[graft] generation sweep at $dir " +
-            s"skipped (referenced-set read failed; index remains " +
-            s"correct): ${e.getMessage}")
-          return
-      }
-    sweep(spark, dir, current, referenced, isDataDir)
-  }
 
   // ---- retraction kernels (shared by the doc-keyed tombstone families:
   // DedupIndex + MediaIndex; ExactDedupIndex keeps its hash-keyed

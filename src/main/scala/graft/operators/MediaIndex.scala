@@ -46,117 +46,38 @@ object MediaIndex {
   private def bbktCol(nBuckets: Int): Column =
     pmod(xxhash64(col("b"), col("bk")), lit(nBuckets.toLong))
 
-  /** Names a manifest may reference — the only names the sweep may
-    * delete (foreign files in the dir are never collected).
+  /** The manifest schema: `bdirs` + optional `tdirs` + `meta`, with the
+    * hash geometry riding in `metaVals`.
     */
-  private def isMediaDataDir(name: String): Boolean =
-    name.matches("""blocks|meta|blocks-(delta|compact)-\d{10}""" +
-      """|tombs-\d{10}""")
-
-  /** The live layout + manifest-carried meta (r18 — builds now commit a
-    * gen-0 manifest carrying the hash geometry, so serves skip the meta
-    * parquet job; a pre-r18 index adopts with `metaVals = None` and
-    * readers fall back to the parquet via [[metaOf]]).
-    */
-  private[graft] final case class MediaLayout(seq: Long,
-      bDirs: Seq[String], tDirs: Seq[String], metaDir: String,
-      metaVals: Option[Map[String, Long]])
-
-  private[graft] def mediaManifest(spark: SparkSession, dir: String)
-      : MediaLayout = {
-    val (fs, root) = GenManifest.fsRoot(spark, dir)
-    GenManifest.latestSeq(fs, root) match {
-      case None => MediaLayout(0L, Seq("blocks"), Nil, "meta", None)
-      case Some(seq) =>
-        val (b, t, m, mv) = mediaManifestAt(fs, root, seq)
-        MediaLayout(seq, b, t, m, mv)
-    }
-  }
+  private[graft] val Family = GenManifest.Family("media",
+    Seq("bdirs" -> "blocks"), Some("meta"), tombstones = true,
+    """blocks|meta|blocks-(delta|compact)-\d{10}|tombs-\d{10}""".r)
 
   /** The (frame_bytes, every_nth, max_dist, buckets) geometry:
     * manifest-carried when present (zero Spark jobs — the serve-path
-    * fusion), else the 1-row meta parquet.
+    * fusion), else the 1-row meta parquet (an index adopted from before
+    * manifests carried it).
     */
   private def metaOf(spark: SparkSession, dir: String,
-      lay: MediaLayout): (Int, Int, Int, Int) =
+      lay: GenManifest.Layout): (Int, Int, Int, Int) =
     lay.metaVals match {
       case Some(mv) =>
         (mv("frame_bytes").toInt, mv("every_nth").toInt,
           mv("max_dist").toInt, mv("buckets").toInt)
       case None =>
-        val meta = spark.read.parquet(s"$dir/${lay.metaDir}").head()
+        val meta = spark.read.parquet(s"$dir/${lay.meta}").head()
         (meta.getAs[Int]("frame_bytes"), meta.getAs[Int]("every_nth"),
           meta.getAs[Int]("max_dist"), meta.getAs[Int]("buckets"))
     }
 
-  private def mediaManifestAt(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, g: Long)
-      : (Seq[String], Seq[String], String, Option[Map[String, Long]]) =
-    GenManifest.readNode(fs, root, g) match {
-      case Some(node) =>
-        import scala.jdk.CollectionConverters._
-        // Key presence checked explicitly (the dedupManifestAt rule): a
-        // manifest from another index family must surface this curated
-        // diagnostic, not a Jackson NPE the sweep's catch would log as
-        // a contentless "null". The sdirs REJECTION matters: a
-        // DedupIndex manifest carries bdirs+sdirs+meta, so a
-        // presence-only check would ACCEPT it here and die later on an
-        // uncurated getAs("frame_bytes") against the dedup meta table —
-        // the exact wrong-directory failure this guard exists to name.
-        if (node.get("bdirs") == null || node.get("meta") == null ||
-            node.get("sdirs") != null)
-          throw new IllegalStateException(
-            s"manifest generation $g under $root is not a media-index " +
-              "manifest (missing bdirs/meta, or a dedup-index manifest " +
-              "with sdirs) — wrong directory or damaged index")
-        val b = node.get("bdirs").elements().asScala.map(_.asText()).toSeq
-        // Empty (or scalar — elements() is then empty) bdirs would send
-        // the generation readers into a contentless empty-reduce crash
-        // (the lexManifestAt rule).
-        if (b.isEmpty)
-          throw new IllegalStateException(
-            s"manifest generation $g under $root references no block " +
-              "dirs — truncated or damaged manifest")
-        // Tombstone dirs are OPTIONAL (absent on every pre-retraction
-        // manifest — old indexes read unchanged); decode + damage guard
-        // live ONCE in GenManifest.readTDirs.
-        (b,
-          GenManifest.readTDirs(node, s"manifest generation $g under $root"),
-          node.get("meta").asText(),
-          GenManifest.metaVals(node))
-      case None if g == 0L => (Seq("blocks"), Nil, "meta", None)
-      case None =>
-        // Fail-loud on the READ path; the sweep tolerates this via its
-        // own NonFatal catch.
-        throw new IllegalStateException(
-          s"index manifest generation $g is missing under $root — " +
-            "damaged index or concurrent writer")
-    }
-
-  private def commitMediaManifest(spark: SparkSession, dir: String,
-      seq: Long, bDirs: Seq[String], tDirs: Seq[String],
-      metaDir: String, geom: (Int, Int, Int, Int)): Unit = {
-    val node = GenManifest.newNode()
-    val ba = node.putArray("bdirs"); bDirs.foreach(ba.add)
-    if (tDirs.nonEmpty) {
-      val ta = node.putArray("tdirs"); tDirs.foreach(ta.add)
-    }
-    node.put("meta", metaDir)
-    // Geometry rides the manifest so serves never pay the meta parquet
-    // job; the meta table stays the at-rest record + adoption fallback.
-    GenManifest.putMetaVals(node,
-      "frame_bytes" -> geom._1.toLong, "every_nth" -> geom._2.toLong,
-      "max_dist" -> geom._3.toLong, "buckets" -> geom._4.toLong)
-    GenManifest.commit(spark, dir, seq, node)
-  }
-
-  private def sweepMediaGenerations(spark: SparkSession, dir: String,
-      current: Long): Unit =
-    GenManifest.sweepOwned(spark, dir, current, isMediaDataDir) {
-      (fs, root, g) =>
-        val (b, t, m, _) = mediaManifestAt(fs, root, g)
-        b ++ t :+ m
-    }
+  /** The inverse of [[metaOf]]: the geometry every commit carries, so
+    * serves never pay the meta parquet job; the meta table stays the
+    * at-rest record + adoption fallback.
+    */
+  private def metaVals(geom: (Int, Int, Int, Int))
+      : Option[Map[String, Long]] =
+    Some(Map("frame_bytes" -> geom._1.toLong, "every_nth" -> geom._2.toLong,
+      "max_dist" -> geom._3.toLong, "buckets" -> geom._4.toLong))
 
   /** The exploded block table of `payloads` — the one row shape every
     * write path and the serve's delta side share.
@@ -227,8 +148,8 @@ object MediaIndex {
           lit(frameBytes).as("frame_bytes"), lit(everyNth).as("every_nth"),
           lit(maxDist).as("max_dist"), lit(nBuckets).as("buckets"))
         .write.mode("overwrite").parquet(s"$dir/meta")
-      commitMediaManifest(spark, dir, 0L, Seq("blocks"), Nil, "meta",
-        (frameBytes, everyNth, maxDist, nBuckets))
+      GenManifest.commit(spark, dir, Family, Family.adopted.copy(
+        metaVals = metaVals((frameBytes, everyNth, maxDist, nBuckets))))
     } finally Barrier.release(bl)
   }
 
@@ -240,10 +161,9 @@ object MediaIndex {
     */
   def appendToMediaIndex(newPayloads: DataFrame, dir: String): Unit = {
     val spark = newPayloads.sparkSession
-    val lay = mediaManifest(spark, dir)
-    import lay.{seq, bDirs, tDirs, metaDir}
+    val lay = GenManifest.layout(spark, dir, Family)
     val geom = metaOf(spark, dir, lay)
-    val newB = f"blocks-delta-${seq + 1}%010d"
+    val newB = f"blocks-delta-${lay.seq + 1}%010d"
     val rows = writeBlocks(newPayloads, dir,
       geom._1, geom._2, geom._3, geom._4, newB)
     if (rows == 0L) {
@@ -253,9 +173,8 @@ object MediaIndex {
     } else {
       // Tombstones carry over: a re-ingested doc_id's NEW generation
       // outlives any older tombstone (the newest-op-wins rule).
-      commitMediaManifest(spark, dir, seq + 1, bDirs :+ newB, tDirs,
-        metaDir, geom)
-      sweepMediaGenerations(spark, dir, seq + 1)
+      GenManifest.commit(spark, dir, Family,
+        lay.appended("bdirs" -> newB).copy(metaVals = metaVals(geom)))
     }
   }
 
@@ -267,13 +186,13 @@ object MediaIndex {
     * garbage a previously-failed best-effort sweep left).
     */
   def compactMediaIndex(spark: SparkSession, dir: String): Unit = {
-    val lay = mediaManifest(spark, dir)
-    import lay.{seq, bDirs, tDirs, metaDir}
+    val lay = GenManifest.layout(spark, dir, Family)
+    val (bDirs, tDirs) = (lay("bdirs"), lay.tDirs)
     if (bDirs.length <= 1 && tDirs.isEmpty) {
-      sweepMediaGenerations(spark, dir, seq)
+      GenManifest.sweep(spark, dir, Family, lay.seq)
       return
     }
-    val newB = f"blocks-compact-${seq + 1}%010d"
+    val newB = f"blocks-compact-${lay.seq + 1}%010d"
     // Tombstone-free rows rewrite verbatim as a single read-to-write
     // pipeline (barriering the whole index would checkpoint it for
     // nothing); with retraction generations live the fold keeps only
@@ -281,11 +200,12 @@ object MediaIndex {
     // probe + write share ONE materialization — a fully-retracted fold
     // is unrepresentable (schema-less dir), so fail loudly.
     if (tDirs.isEmpty) {
-      readGenerations(spark, dir, bDirs)
+      GenManifest.readGenerations(spark, dir, bDirs)
         .repartition(col("bbkt"))
         .write.mode("overwrite").partitionBy("bbkt").parquet(s"$dir/$newB")
     } else {
-      val fb = foldedLive(spark, dir, bDirs, tDirs).barrier()
+      val fb = GenManifest.foldedLive(spark, dir, bDirs, tDirs, "doc_id")
+        .barrier()
       try {
         require(fb.count() > 0L,
           s"compactMediaIndex at $dir: every payload is retracted — an " +
@@ -295,14 +215,9 @@ object MediaIndex {
           .write.mode("overwrite").partitionBy("bbkt").parquet(s"$dir/$newB")
       } finally Barrier.release(fb)
     }
-    commitMediaManifest(spark, dir, seq + 1, Seq(newB), Nil, metaDir,
-      metaOf(spark, dir, lay))
-    sweepMediaGenerations(spark, dir, seq + 1)
+    GenManifest.commit(spark, dir, Family, lay.compacted("bdirs" -> newB)
+      .copy(metaVals = metaVals(metaOf(spark, dir, lay))))
   }
-
-  private def foldedLive(spark: SparkSession, dir: String,
-      dirs: Seq[String], tDirs: Seq[String]): DataFrame =
-    GenManifest.foldedLive(spark, dir, dirs, tDirs, "doc_id")
 
   /** RETRACT payloads from the index — the doc-keyed takedown shape
     * shared with [[DedupIndex.retractFromDedupIndex]] (the GenManifest
@@ -317,9 +232,9 @@ object MediaIndex {
     */
   def retractFromMediaIndex(docs: DataFrame, dir: String): Unit = {
     val spark = docs.sparkSession
-    val lay = mediaManifest(spark, dir)
-    import lay.{seq, bDirs, tDirs, metaDir}
-    val newT = f"tombs-${seq + 1}%010d"
+    val lay = GenManifest.layout(spark, dir, Family)
+    val tDirs = lay.tDirs
+    val newT = f"tombs-${lay.seq + 1}%010d"
     // BARRIERED, not cached (the exact-index takedown discipline): the
     // membership check and the WRITTEN tombstone rows must derive from
     // one materialized id set.
@@ -332,7 +247,7 @@ object MediaIndex {
           s"[graft] media-index retraction of an EMPTY set at $dir " +
             "skipped (no commit)")
       } else {
-        val ins = GenManifest.readWithGen(spark, dir, bDirs)
+        val ins = GenManifest.readWithGen(spark, dir, lay("bdirs"))
           .select(col("doc_id"), col("__g"))
           .join(broadcast(h), Seq("doc_id"), "left_semi")
         val live =
@@ -347,9 +262,8 @@ object MediaIndex {
             "retracted) — a takedown of absent payloads is a caller " +
             "bug, not a no-op")
         h.write.mode("overwrite").parquet(s"$dir/$newT")
-        commitMediaManifest(spark, dir, seq + 1, bDirs, tDirs :+ newT,
-          metaDir, metaOf(spark, dir, lay))
-        sweepMediaGenerations(spark, dir, seq + 1)
+        GenManifest.commit(spark, dir, Family, lay.retracted(newT)
+          .copy(metaVals = metaVals(metaOf(spark, dir, lay))))
       }
     } finally Barrier.release(h)
   }
@@ -392,7 +306,8 @@ object MediaIndex {
   def syncMediaIndex(v1Payloads: DataFrame, v2Payloads: DataFrame,
       dir: String): Unit = {
     val spark = v1Payloads.sparkSession
-    val frameBytes = metaOf(spark, dir, mediaManifest(spark, dir))._1
+    val frameBytes =
+      metaOf(spark, dir, GenManifest.layout(spark, dir, Family))._1
     val transitions = Curation.corpusDiffBy(v1Payloads, v2Payloads,
         md5(coalesce(col("payload"), lit(Array.empty[Byte]))))
       .where(col("status") =!= "unchanged")
@@ -431,9 +346,8 @@ object MediaIndex {
     * occupy block files until [[compactMediaIndex]] purges them).
     */
   def takedownHealth(spark: SparkSession, dir: String): DataFrame = {
-    val lay = mediaManifest(spark, dir)
-    import lay.{bDirs, tDirs}
-    GenManifest.takedownCensus(spark, dir, bDirs, tDirs, "doc_id",
+    val lay = GenManifest.layout(spark, dir, Family)
+    GenManifest.takedownCensus(spark, dir, lay("bdirs"), lay.tDirs, "doc_id",
       "live_docs", "dead_docs")
   }
 
@@ -445,10 +359,10 @@ object MediaIndex {
     */
   def mediaIndexHealth(spark: SparkSession, dir: String,
       hotDf: Int = 1): DataFrame = {
-    val lay = mediaManifest(spark, dir)
-    import lay.{bDirs, tDirs}
+    val lay = GenManifest.layout(spark, dir, Family)
     // Health reflects LIVE membership (the DedupIndex rule).
-    val bk = foldedLive(spark, dir, bDirs, tDirs)
+    val bk = GenManifest.foldedLive(spark, dir, lay("bdirs"), lay.tDirs,
+      "doc_id")
     bk.groupBy(col("b"), col("bk"))
       .agg(count(lit(1)).as("df"))
       .groupBy(col("b"))
@@ -465,12 +379,8 @@ object MediaIndex {
     */
   private[graft] def readPruned(spark: SparkSession, dir: String,
       dirs: Seq[String], keys: Seq[Long]): DataFrame =
-    readGenerations(spark, dir, dirs)
-      .filter(col("bbkt").isin(keys: _*))
-
-  private def readGenerations(spark: SparkSession, dir: String,
-      dirs: Seq[String]): DataFrame =
     GenManifest.readGenerations(spark, dir, dirs)
+      .filter(col("bbkt").isin(keys: _*))
 
   /** INGEST-TIME alert stream of (doc_id, base_id, shared) perceptual
     * near-dup pairs between arriving payloads and the persisted index —
@@ -491,11 +401,11 @@ object MediaIndex {
   def streamingMediaIndexDups(spark: SparkSession, dir: String,
       stream: DataFrame, minShared: Int = 2,
       maxBlockDf: Int = 100): DataFrame = {
-    val lay = mediaManifest(spark, dir)
-    import lay.{bDirs, tDirs}
+    val lay = GenManifest.layout(spark, dir, Family)
     val geom = metaOf(spark, dir, lay)
     // Retraction-aware: a taken-down payload must not alert.
-    val bbl = foldedLive(spark, dir, bDirs, tDirs)
+    val bbl = GenManifest.foldedLive(spark, dir, lay("bdirs"), lay.tDirs,
+        "doc_id")
       .select(col("doc_id").as("base_id"), col("v"), col("b"), col("bk"))
     Multimodal.streamingNearCore(spark, bbl, stream,
       geom._1, geom._2, geom._3, minShared, maxBlockDf)
@@ -619,8 +529,7 @@ object MediaIndex {
       delta: DataFrame, maxBlockDf: Int)(
       body: Option[ServeLegs] => A): A = {
     require(maxBlockDf >= 1, s"maxBlockDf=$maxBlockDf must be >= 1")
-    val lay = mediaManifest(spark, dir)
-    import lay.{bDirs, tDirs}
+    val lay = GenManifest.layout(spark, dir, Family)
     val (frameBytes, everyNth, maxDist, nBuckets) = metaOf(spark, dir, lay)
     // Null-id batch rows drop up front (the servePairLegs rule): every
     // join below is null-rejecting and a null-id payload would silently
@@ -644,8 +553,8 @@ object MediaIndex {
       // projection + liveness join, plan-locked in PlanShapeSpec; the
       // tombstone-free plan — every registered query today — is
       // unchanged).
-      val basePruned = GenManifest.readPrunedLive(spark, dir, bDirs,
-        "bbkt", bbkts, tDirs, "doc_id")
+      val basePruned = GenManifest.readPrunedLive(spark, dir, lay("bdirs"),
+        "bbkt", bbkts, lay.tDirs, "doc_id")
       val baseTouch = basePruned
         .join(broadcast(dbl.select(col("b"), col("bk")).distinct()),
           Seq("b", "bk"))

@@ -236,8 +236,8 @@ object Search {
       spark.range(1).select(lit(nDocs).as("n_docs"),
           lit(t.getLong(1)).as("total_tokens"), lit(buckets).as("buckets"))
         .write.mode("overwrite").parquet(s"$dir/stats")
-      commitLexManifest(spark, dir, 0L, Seq("postings"), Nil, "stats",
-        nDocs, t.getLong(1), buckets)
+      GenManifest.commit(spark, dir, Family, Family.adopted.copy(
+        metaVals = statsVals(nDocs, t.getLong(1), buckets)))
     }
   }
 
@@ -261,8 +261,7 @@ object Search {
     // silently double the affected per-term scores — fail instead.
     require(queries.map(_._1).distinct.size == queries.size,
       "lexIndexTopK query ids must be distinct")
-    val lay = lexManifest(spark, dir)
-    import lay.{pDirs, tDirs}
+    val lay = GenManifest.layout(spark, dir, Family)
     val (nDocs, totalTokens, buckets) = statsOf(spark, dir, lay)
     require(nDocs > 0, s"index at $dir is empty")
     val qt = {
@@ -288,7 +287,7 @@ object Search {
     // idf the moment the tombstone commits (retraction ≡ rebuild
     // exactly: df/scores recompute from live rows, stats were
     // decremented at takedown).
-    val scoped = foldedLivePostings(spark, dir, pDirs, tDirs,
+    val scoped = foldedLivePostings(spark, dir, lay,
       _.filter(col("bkt").isin(bkts: _*)))
     val dfTab = dfOver(scoped, qt)
     val matched0 = scoped.join(broadcast(qt.join(dfTab, Seq("term"))),
@@ -329,25 +328,14 @@ object Search {
   // doc_id uniqueness across generations — a re-ingested doc_id would
   // double-count in df and N.
 
-  /** The live (seq, postings dirs, tombstone dirs, stats dir). A
-    * freshly-built index has no manifest — it adopts as
-    * (0, ["postings"], Nil, "stats"), so indexes written before the
-    * append lifecycle existed read unchanged.
+  /** The manifest schema: `dirs` (postings) + optional `tdirs` +
+    * `stats`, with the corpus stats riding in `metaVals`. A freshly-built
+    * index written before the append lifecycle adopts as
+    * (0, ["postings"], Nil, "stats").
     */
-  private[graft] final case class LexLayout(seq: Long,
-      pDirs: Seq[String], tDirs: Seq[String], statsDir: String,
-      metaVals: Option[Map[String, Long]])
-
-  private[graft] def lexManifest(spark: SparkSession, dir: String)
-      : LexLayout = {
-    val (fs, root) = GenManifest.fsRoot(spark, dir)
-    // One definition of the adoption layout: the no-manifest case routes
-    // through lexManifestAt's g == 0 branch instead of duplicating the
-    // (Seq("postings"), "stats") constant here.
-    val seq = GenManifest.latestSeq(fs, root).getOrElse(0L)
-    val (dirs, tdirs, stats, mv) = lexManifestAt(fs, root, seq)
-    LexLayout(seq, dirs, tdirs, stats, mv)
-  }
+  private[graft] val Family = GenManifest.Family("lex",
+    Seq("dirs" -> "postings"), Some("stats"), tombstones = true,
+    "postings|stats|(postings|stats|tombs)-.*".r)
 
   /** The (n_docs, total_tokens, buckets) stats: manifest-carried when
     * present (zero Spark jobs — the r18 serve-path fusion; the values
@@ -355,24 +343,24 @@ object Search {
     * mirror, so they can never diverge), else the 1-row stats parquet.
     */
   private def statsOf(spark: SparkSession, dir: String,
-      lay: LexLayout): (Long, Long, Int) =
+      lay: GenManifest.Layout): (Long, Long, Int) =
     lay.metaVals match {
       case Some(mv) =>
         (mv("n_docs"), mv("total_tokens"), mv("buckets").toInt)
       case None =>
-        val st = spark.read.parquet(s"$dir/${lay.statsDir}").head()
+        val st = spark.read.parquet(s"$dir/${lay.meta}").head()
         (st.getAs[Long]("n_docs"), st.getAs[Long]("total_tokens"),
           st.getAs[Int]("buckets"))
     }
 
-  /** Cross-generation postings read — ONE definition for the serve and
-    * compaction paths (the DedupIndex.readGenerations rule: two
-    * hand-synced union reads could apply future schema handling to one
-    * path and silently diverge the other).
+  /** The inverse of [[statsOf]]: the stats every commit carries (in the
+    * SAME atomic rename as the stats dir they mirror) so serves never
+    * pay the 1-row parquet job.
     */
-  private def readLexGenerations(spark: SparkSession, dir: String,
-      pDirs: Seq[String]): DataFrame =
-    GenManifest.readGenerations(spark, dir, pDirs)
+  private def statsVals(nDocs: Long, totalTokens: Long,
+      buckets: Int): Option[Map[String, Long]] =
+    Some(Map("n_docs" -> nDocs, "total_tokens" -> totalTokens,
+      "buckets" -> buckets.toLong))
 
   /** The ONE liveness fold over the postings generations (GenManifest's
     * doc-keyed tombstone kernels, shared with DedupIndex/MediaIndex): a
@@ -385,83 +373,13 @@ object Search {
     * [[GenManifest.liveRows]].
     */
   private def foldedLivePostings(spark: SparkSession, dir: String,
-      pDirs: Seq[String], tDirs: Seq[String],
+      lay: GenManifest.Layout,
       prune: DataFrame => DataFrame = identity): DataFrame =
-    if (tDirs.isEmpty) prune(readLexGenerations(spark, dir, pDirs))
+    if (lay.tDirs.isEmpty)
+      prune(GenManifest.readGenerations(spark, dir, lay("dirs")))
     else GenManifest.liveRows(
-      prune(GenManifest.readWithGen(spark, dir, pDirs)), "doc_id",
-      GenManifest.tombMax(spark, dir, tDirs, "doc_id"))
-
-  /** The (postings dirs, tombstone dirs, stats dir) a SPECIFIC
-    * generation references. Generation 0 is the adoption layout.
-    */
-  private def lexManifestAt(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, g: Long)
-      : (Seq[String], Seq[String], String, Option[Map[String, Long]]) =
-    GenManifest.readNode(fs, root, g) match {
-      case Some(node) =>
-        import scala.jdk.CollectionConverters._
-        // Key presence checked explicitly (the dedupManifestAt rule): a
-        // manifest from ANOTHER index family (dedup manifests carry
-        // bdirs/sdirs/meta) or a truncated one must surface the curated
-        // diagnostic, not a bare NPE from inside Jackson traversal that
-        // the sweep's NonFatal catch logs as a contentless "null".
-        if (node.get("dirs") == null || node.get("stats") == null)
-          throw new IllegalStateException(
-            s"manifest generation $g under $root is not a lex-index " +
-              "manifest (missing dirs/stats) — wrong directory or " +
-              "damaged index")
-        val dirs =
-          node.get("dirs").elements().asScala.map(_.asText()).toSeq
-        // An empty (or scalar — its elements() iterator is empty) dirs
-        // node would send readers into the contentless empty-reduce
-        // crash the fail-loud arm below exists to prevent.
-        if (dirs.isEmpty)
-          throw new IllegalStateException(
-            s"manifest generation $g under $root references no postings " +
-              "dirs — truncated or damaged manifest")
-        // Tombstone dirs are OPTIONAL (absent on every pre-retraction
-        // manifest — old indexes read unchanged); decode + damage guard
-        // live ONCE in GenManifest.readTDirs.
-        (dirs,
-          GenManifest.readTDirs(node, s"manifest generation $g under $root"),
-          node.get("stats").asText(),
-          GenManifest.metaVals(node))
-      case None if g == 0L => (Seq("postings"), Nil, "stats", None)
-      case None =>
-        // Fail-loud on the READ path: a listed-then-vanished manifest is
-        // a damaged index (or a single-writer violation) — returning an
-        // empty layout here would send lexIndexTopK into an unrelated
-        // empty-reduce crash. The sweep tolerates this via its own
-        // try/catch (it skips collection and the index stays correct).
-        throw new IllegalStateException(
-          s"index manifest generation $g is missing under $root — " +
-            "damaged index or concurrent writer")
-    }
-
-  /** Names a manifest may reference — the only names the sweep may
-    * delete, so foreign files in the index dir are never collected.
-    */
-  private def isLexDataDir(n: String): Boolean =
-    n == "postings" || n.startsWith("postings-") ||
-      n == "stats" || n.startsWith("stats-") || n.startsWith("tombs-")
-
-  private def commitLexManifest(spark: SparkSession, dir: String, seq: Long,
-      dirs: Seq[String], tDirs: Seq[String], statsDir: String,
-      nDocs: Long, totalTokens: Long, buckets: Int): Unit = {
-    val node = GenManifest.newNode()
-    val arr = node.putArray("dirs")
-    dirs.foreach(arr.add)
-    if (tDirs.nonEmpty) {
-      val ta = node.putArray("tdirs"); tDirs.foreach(ta.add)
-    }
-    node.put("stats", statsDir)
-    // Stats ride the manifest (same atomic commit as the stats dir they
-    // mirror) so serves never pay the 1-row parquet job.
-    GenManifest.putMetaVals(node, "n_docs" -> nDocs,
-      "total_tokens" -> totalTokens, "buckets" -> buckets.toLong)
-    GenManifest.commit(spark, dir, seq, node)
-  }
+      prune(GenManifest.readWithGen(spark, dir, lay("dirs"))), "doc_id",
+      GenManifest.tombMax(spark, dir, lay.tDirs, "doc_id"))
 
   /** APPEND new documents to a persisted inverted index: the delta's
     * postings are written as a new bucket-partitioned generation dir
@@ -477,8 +395,7 @@ object Search {
     */
   def appendToLexIndex(newDocs: DataFrame, dir: String): Unit = {
     val spark = newDocs.sparkSession
-    val lay = lexManifest(spark, dir)
-    import lay.{seq, pDirs, tDirs}
+    val lay = GenManifest.layout(spark, dir, Family)
     val (nDocs, totalTokens, buckets) = statsOf(spark, dir, lay)
     // Fail-fast on an empty BASE (a build over a token-less corpus):
     // its postings dir holds no parquet files, and committing a manifest
@@ -489,8 +406,8 @@ object Search {
     require(nDocs > 0,
       s"index at $dir has an empty base (token-less build) — rebuild " +
         "with buildLexIndex instead of appending")
-    val newPDir = s"postings-${seq + 1}"
-    val newSDir = s"stats-${seq + 1}"
+    val newPDir = s"postings-${lay.seq + 1}"
+    val newSDir = s"stats-${lay.seq + 1}"
     val (deltaDocs, deltaTokens) = Barrier.withCached(postings(newDocs)) { p =>
       // Totals FIRST (fills the cache): an empty delta is discovered
       // before the partitioned write job runs at all — no scratch dir to
@@ -517,9 +434,10 @@ object Search {
       // outlives any older tombstone, so the append alone restores its
       // membership AND its stats contribution (the stats were
       // decremented when it was taken down).
-      commitLexManifest(spark, dir, seq + 1, pDirs :+ newPDir, tDirs,
-        newSDir, nDocs + deltaDocs, totalTokens + deltaTokens, buckets)
-      sweepLexGenerations(spark, dir, seq + 1)
+      GenManifest.commit(spark, dir, Family,
+        lay.appended("dirs" -> newPDir).copy(metaDir = Some(newSDir),
+          metaVals = statsVals(nDocs + deltaDocs, totalTokens + deltaTokens,
+            buckets)))
     }
   }
 
@@ -555,14 +473,13 @@ object Search {
     */
   def retractFromLexIndex(docs: DataFrame, dir: String): Unit = {
     val spark = docs.sparkSession
-    val lay = lexManifest(spark, dir)
-    import lay.{seq, pDirs, tDirs}
+    val lay = GenManifest.layout(spark, dir, Family)
     val (nDocs, totalTokens, buckets) = statsOf(spark, dir, lay)
     require(nDocs > 0,
       s"index at $dir has an empty base (token-less build) — nothing " +
         "to retract")
-    val newT = s"tombs-${seq + 1}"
-    val newS = s"stats-${seq + 1}"
+    val newT = s"tombs-${lay.seq + 1}"
+    val newS = s"stats-${lay.seq + 1}"
     import Barrier.BarrierOps
     // BARRIERED, not cached (the family takedown discipline): the
     // membership require and the WRITTEN tombstone rows must derive
@@ -580,7 +497,7 @@ object Search {
         // LIVE marker rows (first_pos == 0 — exactly one per tokenized
         // doc per live generation) for the takedown ids: membership
         // evidence and the stats decrement in ONE map-side pass.
-        val markers = foldedLivePostings(spark, dir, pDirs, tDirs,
+        val markers = foldedLivePostings(spark, dir, lay,
             _.join(broadcast(h), Seq("doc_id"), "left_semi"))
           .filter(col("first_pos") === 0L)
           .select(col("doc_id"), col("dl"))
@@ -616,9 +533,9 @@ object Search {
               lit(totalTokens - mtok).as("total_tokens"),
               lit(buckets).as("buckets"))
             .write.mode("overwrite").parquet(s"$dir/$newS")
-          commitLexManifest(spark, dir, seq + 1, pDirs, tDirs :+ newT,
-            newS, nDocs - mn, totalTokens - mtok, buckets)
-          sweepLexGenerations(spark, dir, seq + 1)
+          GenManifest.commit(spark, dir, Family,
+            lay.retracted(newT).copy(metaDir = Some(newS),
+              metaVals = statsVals(nDocs - mn, totalTokens - mtok, buckets)))
         } finally Barrier.release(markers)
       }
     } finally Barrier.release(h)
@@ -697,28 +614,10 @@ object Search {
     * serve read proportionally to dead_ppm.
     */
   def takedownHealth(spark: SparkSession, dir: String): DataFrame = {
-    val lay = lexManifest(spark, dir)
-    import lay.{pDirs, tDirs}
-    GenManifest.takedownCensus(spark, dir, pDirs, tDirs, "doc_id",
+    val lay = GenManifest.layout(spark, dir, Family)
+    GenManifest.takedownCensus(spark, dir, lay("dirs"), lay.tDirs, "doc_id",
       "live_docs", "dead_docs")
   }
-
-  /** Sweep everything the retained generations (current and current-1 —
-    * one-commit reader grace) do not reference: older manifests,
-    * orphaned dot-temps, and unreferenced postings/stats dirs (appends
-    * only orphan stats dirs; a [[compactLexIndex]] also orphans the
-    * folded-away postings dirs). Mechanics and the best-effort contract
-    * live in [[GenManifest.sweep]]; this computes the lexical
-    * referenced set (postings dirs AND the stats dir of each retained
-    * generation).
-    */
-  private def sweepLexGenerations(spark: SparkSession, dir: String,
-      current: Long): Unit =
-    GenManifest.sweepOwned(spark, dir, current, isLexDataDir) {
-      (fs, root, g) =>
-        val (ds, ts, sd, _) = lexManifestAt(fs, root, g)
-        ds ++ ts :+ sd
-    }
 
   /** COMPACT a persisted inverted index: fold every live postings
     * generation back into ONE bucket-partitioned dir and commit with the
@@ -732,17 +631,17 @@ object Search {
     * like append.
     */
   def compactLexIndex(spark: SparkSession, dir: String): Unit = {
-    val lay = lexManifest(spark, dir)
-    import lay.{seq, pDirs, tDirs, statsDir}
+    val lay = GenManifest.layout(spark, dir, Family)
+    val (pDirs, tDirs) = (lay("dirs"), lay.tDirs)
     if (pDirs.length <= 1 && tDirs.isEmpty) {
       // Nothing to fold, but compaction is the maintenance pass: still
       // collect garbage a previously-failed best-effort sweep left
       // behind (an otherwise idle index would keep it forever).
-      sweepLexGenerations(spark, dir, seq)
+      GenManifest.sweep(spark, dir, Family, lay.seq)
       return
     }
-    val newP = s"postings-${seq + 1}"
-    val newS = s"stats-${seq + 1}"
+    val newP = s"postings-${lay.seq + 1}"
+    val newS = s"stats-${lay.seq + 1}"
     // Tombstone-free rows rewrite VERBATIM (one read-to-write pipeline);
     // with retraction generations live the fold keeps only LIVE postings
     // (physically purging taken-down docs) and the tombstones fold away.
@@ -752,12 +651,12 @@ object Search {
     // read, so the tombstoned arm still probes emptiness on the SAME
     // materialization it writes (the dedup-compact discipline).
     if (tDirs.isEmpty) {
-      readLexGenerations(spark, dir, pDirs)
+      GenManifest.readGenerations(spark, dir, pDirs)
         .repartition(col("bkt"))
         .write.mode("overwrite").partitionBy("bkt").parquet(s"$dir/$newP")
     } else {
       import Barrier.BarrierOps
-      val fp = foldedLivePostings(spark, dir, pDirs, tDirs).barrier()
+      val fp = foldedLivePostings(spark, dir, lay).barrier()
       try {
         require(fp.count() > 0L,
           s"compactLexIndex at $dir: every document is retracted — an " +
@@ -767,12 +666,12 @@ object Search {
           .write.mode("overwrite").partitionBy("bkt").parquet(s"$dir/$newP")
       } finally Barrier.release(fp)
     }
-    spark.read.parquet(s"$dir/$statsDir")
+    spark.read.parquet(s"$dir/${lay.meta}")
       .write.mode("overwrite").parquet(s"$dir/$newS")
     val (nDocs, totalTokens, buckets) = statsOf(spark, dir, lay)
-    commitLexManifest(spark, dir, seq + 1, Seq(newP), Nil, newS,
-      nDocs, totalTokens, buckets)
-    sweepLexGenerations(spark, dir, seq + 1)
+    GenManifest.commit(spark, dir, Family,
+      lay.compacted("dirs" -> newP).copy(metaDir = Some(newS),
+        metaVals = statsVals(nDocs, totalTokens, buckets)))
   }
 
   /** Driver-side query-by-example term extraction — the client half of

@@ -424,6 +424,11 @@ object Similarity {
         "IVF index (build probe)", noun = "corpus vectors").as("ev"))
         .limit(1).collect().nonEmpty,
       s"buildIvfIndex at $dir: corpus is empty — previous index left intact")
+    // A (re)build supersedes EVERY prior generation: stale append
+    // manifests/delta dirs from an earlier lifecycle would otherwise leak
+    // into the fresh index and double-count the appended rows.
+    // Rebuild-in-place is not reader-concurrent — production rebuilds
+    // write a sibling dir and swap the pointer.
     GenManifest.resetDir(v.sparkSession, dir)
     centsDf(v.sparkSession, book).write.mode("overwrite")
       .parquet(s"$dir/centroids")
@@ -446,47 +451,16 @@ object Similarity {
 
   // ---- persisted-index manifest (the append lifecycle) -----------------
 
-  /** A (re)build supersedes EVERY prior generation: drop the whole index
-    * dir first, so stale append manifests/delta dirs from an earlier
-    * lifecycle can't leak into the fresh index (a rebuild after appends
-    * would otherwise double-count the appended rows through the old
-    * manifest). Rebuild-in-place is not reader-concurrent — production
-    * rebuilds write a sibling dir and swap the pointer.
+  /** The manifest schema: `dirs` (cell-partitioned generations) +
+    * optional `tdirs`, no meta (the centroid book and codebooks are
+    * build-time constants outside the generation lifecycle). A
+    * freshly-built index written before the append lifecycle adopts as
+    * (0, ["cells"], Nil); metadata (`centroids`, `codebooks`) is never
+    * a sweepable data dir.
     */
-
-  /** The live (seq, data-dir names, tombstone-dir names) of a persisted
-    * index. A freshly-built index has no manifest file — it adopts as
-    * (0, ["cells"], Nil), so indexes written before the append lifecycle
-    * existed read unchanged.
-    */
-  private[graft] def indexManifest(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Long, Seq[String], Seq[String]) = {
-    val (fs, root) = GenManifest.fsRoot(spark, dir)
-    GenManifest.latestSeq(fs, root) match {
-      case None => (0L, Seq("cells"), Nil)
-      case Some(seq) =>
-        val (ds, ts) = manifestDirsAt(fs, root, seq)
-        (seq, ds, ts)
-    }
-  }
-
-  /** Commit the dirs list via the shared [[GenManifest]] protocol: cell
-    * files exist on disk BEFORE any manifest references them; the staged
-    * dot-temp rename is the atomic commit point; a same-generation race
-    * fails loudly. The orphaned data dir of an aborted commit is
-    * overwritten by the next append at this seq.
-    */
-  private def commitIndexManifest(spark: org.apache.spark.sql.SparkSession,
-      dir: String, seq: Long, dirs: Seq[String],
-      tDirs: Seq[String]): Unit = {
-    val node = GenManifest.newNode()
-    val arr = node.putArray("dirs")
-    dirs.foreach(arr.add)
-    if (tDirs.nonEmpty) {
-      val ta = node.putArray("tdirs"); tDirs.foreach(ta.add)
-    }
-    GenManifest.commit(spark, dir, seq, node)
-  }
+  private[graft] val Family = GenManifest.Family("ANN",
+    Seq("dirs" -> "cells"), None, tombstones = true,
+    """cells|delta-\d{10}|compact-\d{10}|tombs-\d{10}""".r)
 
   /** The LIVE corpus of a persisted index: the union of its manifest's
     * cell-partitioned data dirs. Each dir is read as its own partitioned
@@ -502,8 +476,8 @@ object Similarity {
     */
   private def readCells(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val (_, dirs, tDirs) = indexManifest(spark, dir)
-    GenManifest.foldedLive(spark, dir, dirs, tDirs, "vec_id")
+    val lay = GenManifest.layout(spark, dir, Family)
+    GenManifest.foldedLive(spark, dir, lay("dirs"), lay.tDirs, "vec_id")
   }
 
   /** The centroid book of a persisted index, collected to the driver —
@@ -540,8 +514,8 @@ object Similarity {
   def appendToIvfIndex(delta: DataFrame, dir: String): Unit = {
     val spark = delta.sparkSession
     val book = readBook(spark, dir)
-    val (seq, dirs, tDirs) = indexManifest(spark, dir)
-    val newDir = f"delta-${seq + 1}%010d"
+    val lay = GenManifest.layout(spark, dir, Family)
+    val newDir = f"delta-${lay.seq + 1}%010d"
     // Null-id delta rows dropped like the build (the lex postings rule —
     // see writeIvfIndex; also keeps append ≡ rebuild on nullable input).
     delta.where(col("vec_id").isNotNull)
@@ -558,7 +532,7 @@ object Similarity {
         nearestId(col("ev"), book).as("cell"))
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/$newDir")
-    commitAppendedDir(spark, dir, newDir, seq, dirs, tDirs)
+    commitAppendedDir(spark, dir, newDir, lay)
   }
 
   /** Commit an appended generation dir — unless the delta was EMPTY: a
@@ -570,8 +544,7 @@ object Similarity {
     * a no-op: the dir is dropped and no manifest is written.
     */
   private def commitAppendedDir(spark: org.apache.spark.sql.SparkSession,
-      dir: String, newDir: String, seq: Long, dirs: Seq[String],
-      tDirs: Seq[String]): Unit = {
+      dir: String, newDir: String, lay: GenManifest.Layout): Unit = {
     val (fs, root) = GenManifest.fsRoot(spark, dir)
     val p = new org.apache.hadoop.fs.Path(root, newDir)
     val hasCells = fs.exists(p) &&
@@ -584,8 +557,7 @@ object Similarity {
       // Tombstones carry over: a re-ingested vec_id's NEW generation
       // outlives any older tombstone, so the append alone restores its
       // membership (the newest-op-wins rule).
-      commitIndexManifest(spark, dir, seq + 1, dirs :+ newDir, tDirs)
-      sweepIndexGenerations(spark, dir, seq + 1)
+      GenManifest.commit(spark, dir, Family, lay.appended("dirs" -> newDir))
     }
   }
 
@@ -799,8 +771,8 @@ object Similarity {
     val coarse = readBook(spark, dir)
     val m = books.length
     val sub = books.head.head.length
-    val (seq, dirs, tDirs) = indexManifest(spark, dir)
-    val newDir = f"delta-${seq + 1}%010d"
+    val lay = GenManifest.layout(spark, dir, Family)
+    val newDir = f"delta-${lay.seq + 1}%010d"
     // Same width guard as the IVF append (see there): a mismatched delta
     // would otherwise PQ-code every row to code 0 per subspace and
     // commit the garbage silently.
@@ -816,82 +788,8 @@ object Similarity {
     pqEncodedCells(guarded, books, coarse, m, sub)
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/$newDir")
-    commitAppendedDir(spark, dir, newDir, seq, dirs, tDirs)
+    commitAppendedDir(spark, dir, newDir, lay)
   }
-
-  /** Names a manifest may list as data dirs — the ONLY names the
-    * generation sweep is allowed to delete. Positive-match so index
-    * metadata (`centroids`, `codebooks`, manifests) can never be swept
-    * by a bug in the unreferenced-set arithmetic.
-    */
-  private def isIndexDataDir(name: String): Boolean =
-    name.matches("""cells|delta-\d{10}|compact-\d{10}|tombs-\d{10}""")
-
-  /** The dirs a SPECIFIC manifest generation references. Generation 0 of
-    * a pre-append-era index is synthesized, not on disk ([[indexManifest]]
-    * adopts it as (0, ["cells"])) — the sweep must treat it as live, or
-    * the first post-adoption commit would delete `cells` out from under a
-    * reader that resolved the adopted generation.
-    */
-  private def manifestDirsAt(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, gen: Long)
-      : (Seq[String], Seq[String]) =
-    GenManifest.readNode(fs, root, gen) match {
-      case Some(node) =>
-        import scala.jdk.CollectionConverters._
-        // Family guard (the dedupManifestAt rule, previously MISSING
-        // here — this was the one family that NPE'd on a foreign
-        // manifest): a dedup/stats/media manifest has no "dirs" key; a
-        // LEX manifest also carries "dirs" but is distinguishable by its
-        // "stats" key — accepting it would die later on an uncurated
-        // parquet error against postings files.
-        if (node.get("dirs") == null || node.get("stats") != null)
-          throw new IllegalStateException(
-            s"manifest generation $gen under $root is not an ANN-index " +
-              "manifest (missing dirs, or a lex-index manifest with " +
-              "stats) — wrong directory or damaged index")
-        val ds = node.get("dirs").elements().asScala.map(_.asText()).toSeq
-        // Empty (or scalar) dirs would surface as the contentless
-        // empty-reduce crash inside readCells (the lexManifestAt rule).
-        if (ds.isEmpty)
-          throw new IllegalStateException(
-            s"manifest generation $gen under $root references no cell " +
-              "dirs — truncated or damaged manifest")
-        // Tombstone dirs are OPTIONAL (absent pre-retraction); decode +
-        // damage guard live ONCE in GenManifest.readTDirs.
-        (ds,
-          GenManifest.readTDirs(node,
-            s"manifest generation $gen under $root"))
-      case None if gen == 0L => (Seq("cells"), Nil)
-      case None =>
-        // Fail-loud on the READ path (mirrors Search.lexManifestAt): a
-        // listed-then-vanished manifest is a damaged index or a
-        // single-writer violation — Seq.empty here would surface as an
-        // unrelated empty-reduce UnsupportedOperationException inside
-        // readCells. The generation sweep tolerates this via its own
-        // NonFatal catch (it skips collection; the index stays correct).
-        throw new IllegalStateException(
-          s"index manifest generation $gen is missing under $root — " +
-            "damaged index or concurrent writer")
-    }
-
-  /** Sweep what the just-committed generation superseded: the shared
-    * [[GenManifest.sweep]] grace-window protocol (retain the committed
-    * manifest AND its predecessor — one further commit of reader grace)
-    * with the ANN referenced set (the retained generations' cell dirs).
-    * Appends are additive (each manifest references every prior dir), so
-    * after an append this only trims stale manifest files; after a
-    * [[compactIndex]] the pre-compaction dirs survive exactly one more
-    * commit. Best-effort — see [[GenManifest.sweep]] for why a failure
-    * here must never fail the already-durable commit.
-    */
-  private def sweepIndexGenerations(spark: org.apache.spark.sql.SparkSession,
-      dir: String, seq: Long): Unit =
-    GenManifest.sweepOwned(spark, dir, seq, isIndexDataDir) {
-      (fs, root, g) =>
-        val (ds, ts) = manifestDirsAt(fs, root, g)
-        ds ++ ts
-    }
 
   /** COMPACT a persisted IVF / IVF-PQ index: fold every live generation
     * back into ONE cell-partitioned dir and commit the move with the same
@@ -909,7 +807,7 @@ object Similarity {
     * ONE implementation serve both index layouts.
     *
     * Commit protocol: write the folded dir while nothing references it,
-    * atomic manifest rename, then [[sweepIndexGenerations]] — the
+    * atomic manifest rename, then the [[GenManifest.sweep]] — the
     * pre-compaction generation keeps its files for one further commit so
     * in-flight readers finish their scans ([[graft.streaming.IncrementalTrend.compact]]
     * composes with its retention sweep the same way). SINGLE-WRITER, same
@@ -923,15 +821,16 @@ object Similarity {
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    val (seq, dirs, tDirs) = indexManifest(spark, dir)
-    if (dirs.length <= 1 && tDirs.isEmpty) {
+    val lay = GenManifest.layout(spark, dir, Family)
+    val tDirs = lay.tDirs
+    if (lay("dirs").length <= 1 && tDirs.isEmpty) {
       // Nothing to fold, but compaction is the maintenance pass: still
       // collect garbage a previously-failed best-effort sweep left
       // behind (an otherwise idle index would keep it forever).
-      sweepIndexGenerations(spark, dir, seq)
+      GenManifest.sweep(spark, dir, Family, lay.seq)
       return
     }
-    val newDir = f"compact-${seq + 1}%010d"
+    val newDir = f"compact-${lay.seq + 1}%010d"
     // readCells already resolves liveness, so with retraction
     // generations present the fold physically purges tombstoned rows
     // and the tombstones fold away. A fully-retracted fold is
@@ -955,8 +854,7 @@ object Similarity {
           .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/$newDir")
       } finally Barrier.release(fc)
     }
-    commitIndexManifest(spark, dir, seq + 1, Seq(newDir), Nil)
-    sweepIndexGenerations(spark, dir, seq + 1)
+    GenManifest.commit(spark, dir, Family, lay.compacted("dirs" -> newDir))
   }
 
   /** RETRACT vectors from a persisted IVF / IVF-PQ index — the takedown
@@ -990,8 +888,8 @@ object Similarity {
     */
   def retractFromAnnIndex(vecs: DataFrame, dir: String): Unit = {
     val spark = vecs.sparkSession
-    val (seq, dirs, tDirs) = indexManifest(spark, dir)
-    val newT = f"tombs-${seq + 1}%010d"
+    val lay = GenManifest.layout(spark, dir, Family)
+    val newT = f"tombs-${lay.seq + 1}%010d"
     // BARRIERED, not cached (the family takedown discipline): the
     // membership require and the WRITTEN tombstone rows must derive
     // from one materialized id set.
@@ -1037,8 +935,7 @@ object Similarity {
             "live vector — an all-empty index is unrepresentable; " +
             "rebuild when content returns")
         h.write.mode("overwrite").parquet(s"$dir/$newT")
-        commitIndexManifest(spark, dir, seq + 1, dirs, tDirs :+ newT)
-        sweepIndexGenerations(spark, dir, seq + 1)
+        GenManifest.commit(spark, dir, Family, lay.retracted(newT))
       }
     } finally Barrier.release(h)
   }
@@ -1055,7 +952,8 @@ object Similarity {
     */
   def takedownHealth(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val (_, dirs, tDirs) = indexManifest(spark, dir)
+    val lay = GenManifest.layout(spark, dir, Family)
+    val (dirs, tDirs) = (lay("dirs"), lay.tDirs)
     val rows = GenManifest.readWithGen(spark, dir, dirs)
     val classified =
       if (tDirs.isEmpty) rows.withColumn("__live", lit(true))
@@ -1301,6 +1199,15 @@ object Similarity {
           k, probes, candidates)
         .select(col("query_id"), col("neighbor_id"))
       (g, Await.result(fBf, Duration.Inf))
+    } catch {
+      case t: Throwable =>
+        // A failed leg must not abandon the exact one: await it, release
+        // its barrier, and keep its own failure as suppressed.
+        scala.util.Try(Await.result(fBf, Duration.Inf)) match {
+          case scala.util.Success(b) => Barrier.release(b)
+          case scala.util.Failure(e) => if (e ne t) t.addSuppressed(e)
+        }
+        throw t
     } finally pool.shutdown()
     val bfn = bf.groupBy(col("query_id")).agg(count(lit(1)).as("bf_n"))
     val h = bf.join(got, Seq("query_id", "neighbor_id"))
@@ -2041,6 +1948,15 @@ object Similarity {
           .barrier()
       }
       (r, Await.result(fBf, Duration.Inf))
+    } catch {
+      case t: Throwable =>
+        // A failed leg must not abandon the exact one: await it, release
+        // its barrier, and keep its own failure as suppressed.
+        scala.util.Try(Await.result(fBf, Duration.Inf)) match {
+          case scala.util.Success(b) => Barrier.release(b)
+          case scala.util.Failure(e) => if (e ne t) t.addSuppressed(e)
+        }
+        throw t
     } finally pool.shutdown()
     val pq = ranked.filter(col("rk") <= k)
       .select(col("query_id"), col("vec_id").as("neighbor_id"))

@@ -56,78 +56,15 @@ import graft.operators.Barrier.BarrierOps
   */
 object StatsIndex {
 
-  private def isDataDir(n: String): Boolean =
-    n == "cells" || n.startsWith("cells-") ||
-      n == "hist" || n.startsWith("hist-") ||
-      n == "meta" || n.startsWith("meta-")
+  /** The manifest schema: `cdirs` + `hdirs` + `meta`, no tombstones
+    * (a retraction is a generation of negated sums, not a tombstone). */
+  private[graft] val Family = GenManifest.Family("stats",
+    Seq("cdirs" -> "cells", "hdirs" -> "hist"), Some("meta"),
+    tombstones = false, "cells|hist|meta|(cells|hist|meta)-.*".r)
 
-  /** (generation, cellDirs, histDirs, metaDir) of the live index. */
-  private[graft] def statsManifest(spark: SparkSession, dir: String)
-      : (Long, Seq[String], Seq[String], String) = {
-    val (fs, root) = GenManifest.fsRoot(spark, dir)
-    // One definition of the adoption layout: the no-manifest case routes
-    // through manifestAt's g == 0 branch (the lexManifest rule).
-    val seq = GenManifest.latestSeq(fs, root).getOrElse(0L)
-    val (c, h, m) = manifestAt(fs, root, seq)
-    (seq, c, h, m)
-  }
-
-  private def manifestAt(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, g: Long)
-      : (Seq[String], Seq[String], String) =
-    GenManifest.readNode(fs, root, g) match {
-      case Some(node) =>
-        import scala.jdk.CollectionConverters._
-        // Family guard (the media-index rule): a manifest written by a
-        // DIFFERENT index family must surface this curated diagnostic,
-        // not an NPE the sweep's NonFatal catch would log as "null".
-        if (node.get("cdirs") == null || node.get("hdirs") == null ||
-            node.get("meta") == null)
-          throw new IllegalStateException(
-            s"manifest generation $g under $root is not a stats-index " +
-              "manifest (missing cdirs/hdirs/meta) — wrong directory or " +
-              "damaged index")
-        val c = node.get("cdirs").elements().asScala.map(_.asText()).toSeq
-        val h = node.get("hdirs").elements().asScala.map(_.asText()).toSeq
-        // Empty (or scalar — elements() is then empty) dir nodes would
-        // send readGens into a contentless empty-reduce crash.
-        if (c.isEmpty || h.isEmpty)
-          throw new IllegalStateException(
-            s"manifest generation $g under $root references no " +
-              "cells/hist dirs — truncated or damaged manifest")
-        (c, h, node.get("meta").asText())
-      case None if g == 0L => (Seq("cells"), Seq("hist"), "meta")
-      case None =>
-        // Fail-loud on the READ path (the lexManifestAt contract); the
-        // sweep tolerates this via its own NonFatal catch.
-        throw new IllegalStateException(
-          s"index manifest generation $g is missing under $root — " +
-            "damaged index or concurrent writer")
-    }
-
-  private def commitManifest(spark: SparkSession, dir: String, seq: Long,
-      cDirs: Seq[String], hDirs: Seq[String], metaDir: String): Unit = {
-    val node = GenManifest.newNode()
-    val ca = node.putArray("cdirs")
-    cDirs.foreach(ca.add)
-    val ha = node.putArray("hdirs")
-    hDirs.foreach(ha.add)
-    node.put("meta", metaDir)
-    GenManifest.commit(spark, dir, seq, node)
-  }
-
-  private def sweepGenerations(spark: SparkSession, dir: String,
-      current: Long): Unit =
-    GenManifest.sweepOwned(spark, dir, current, isDataDir) {
-      (fs, root, g) =>
-        val (c, h, m) = manifestAt(fs, root, g)
-        c ++ h :+ m
-    }
-
-  private def readGens(spark: SparkSession, dir: String,
-      dirs: Seq[String]): DataFrame =
-    dirs.map(d => spark.read.parquet(s"$dir/$d"))
-      .reduce(_.unionByName(_))
+  /** The (cells, hist, meta) dir names generation `g` writes. */
+  private def genDirs(g: Long): (String, String, String) =
+    (s"cells-$g", s"hist-$g", s"meta-$g")
 
   private def writeMeta(spark: SparkSession, dir: String, metaDir: String,
       nRows: Long): Unit =
@@ -211,14 +148,12 @@ object StatsIndex {
     */
   def appendToStatsIndex(newDocs: DataFrame, dir: String): Unit = {
     val spark = newDocs.sparkSession
-    val (seq, cDirs, hDirs, metaDir) = statsManifest(spark, dir)
-    val nBase = readMetaRows(spark, dir, metaDir)
+    val lay = GenManifest.layout(spark, dir, Family)
+    val nBase = readMetaRows(spark, dir, lay.meta)
     require(nBase > 0L,
       s"stats index at $dir has an empty base — rebuild with " +
         "buildStatsIndex instead of appending")
-    val newC = s"cells-${seq + 1}"
-    val newH = s"hist-${seq + 1}"
-    val newM = s"meta-${seq + 1}"
+    val (newC, newH, newM) = genDirs(lay.seq + 1)
     Barrier.withCached(microCells(newDocs)) { m =>
       val nNew = countRows(m)
       if (nNew == 0L) {
@@ -228,9 +163,9 @@ object StatsIndex {
       } else {
         writeTables(m, dir, newC, newH)
         writeMeta(spark, dir, newM, nBase + nNew)
-        commitManifest(spark, dir, seq + 1, cDirs :+ newC, hDirs :+ newH,
-          newM)
-        sweepGenerations(spark, dir, seq + 1)
+        GenManifest.commit(spark, dir, Family, lay
+          .appended("cdirs" -> newC, "hdirs" -> newH)
+          .copy(metaDir = Some(newM)))
       }
     }
   }
@@ -256,13 +191,11 @@ object StatsIndex {
     */
   def retractFromStatsIndex(removedDocs: DataFrame, dir: String): Unit = {
     val spark = removedDocs.sparkSession
-    val (seq, cDirs, hDirs, metaDir) = statsManifest(spark, dir)
-    val nBase = readMetaRows(spark, dir, metaDir)
+    val lay = GenManifest.layout(spark, dir, Family)
+    val nBase = readMetaRows(spark, dir, lay.meta)
     require(nBase > 0L,
       s"stats index at $dir is empty — nothing to retract from")
-    val newC = s"cells-${seq + 1}"
-    val newH = s"hist-${seq + 1}"
-    val newM = s"meta-${seq + 1}"
+    val (newC, newH, newM) = genDirs(lay.seq + 1)
     Barrier.withCached(microCells(removedDocs)) { m =>
       val nGone = countRows(m)
       require(nGone <= nBase,
@@ -277,9 +210,9 @@ object StatsIndex {
           (-col("n_docs")).as("n_docs"), (-col("chars")).as("chars"))
         writeTables(neg, dir, newC, newH)
         writeMeta(spark, dir, newM, nBase - nGone)
-        commitManifest(spark, dir, seq + 1, cDirs :+ newC, hDirs :+ newH,
-          newM)
-        sweepGenerations(spark, dir, seq + 1)
+        GenManifest.commit(spark, dir, Family, lay
+          .appended("cdirs" -> newC, "hdirs" -> newH)
+          .copy(metaDir = Some(newM)))
       }
     }
   }
@@ -363,15 +296,13 @@ object StatsIndex {
     * failed best-effort sweep would otherwise live forever).
     */
   def compactStatsIndex(spark: SparkSession, dir: String): Unit = {
-    val (seq, cDirs, hDirs, metaDir) = statsManifest(spark, dir)
-    if (cDirs.length <= 1 && hDirs.length <= 1) {
-      sweepGenerations(spark, dir, seq)
+    val lay = GenManifest.layout(spark, dir, Family)
+    if (lay("cdirs").length <= 1 && lay("hdirs").length <= 1) {
+      GenManifest.sweep(spark, dir, Family, lay.seq)
       return
     }
-    val nRows = readMetaRows(spark, dir, metaDir)
-    val newC = s"cells-${seq + 1}"
-    val newH = s"hist-${seq + 1}"
-    val newM = s"meta-${seq + 1}"
+    val nRows = readMetaRows(spark, dir, lay.meta)
+    val (newC, newH, newM) = genDirs(lay.seq + 1)
     // Partial sums fold by the SAME group keys they were stored under —
     // plain re-aggregation, not the micro derivation (cells rows carry
     // tokens already; re-deriving len·n_docs would be meaningless here).
@@ -379,20 +310,20 @@ object StatsIndex {
     // EVERY measure) are purged from the folded tables — compaction is
     // where retracted data physically leaves the disk; a group zero on
     // some measures but not all is corruption and is kept visible.
-    readGens(spark, dir, cDirs)
+    GenManifest.readGenerations(spark, dir, lay("cdirs"))
       .groupBy(col("lang"), col("source"))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("tokens")).as("tokens"),
         sum(col("chars")).as("chars"))
       .where(col("n_docs") =!= 0L || col("tokens") =!= 0L ||
         col("chars") =!= 0L)
       .write.mode("overwrite").parquet(s"$dir/$newC")
-    readGens(spark, dir, hDirs)
+    GenManifest.readGenerations(spark, dir, lay("hdirs"))
       .groupBy(col("lang"), col("len")).agg(sum(col("cnt")).as("cnt"))
       .where(col("cnt") =!= 0L)
       .write.mode("overwrite").parquet(s"$dir/$newH")
     writeMeta(spark, dir, newM, nRows)
-    commitManifest(spark, dir, seq + 1, Seq(newC), Seq(newH), newM)
-    sweepGenerations(spark, dir, seq + 1)
+    GenManifest.commit(spark, dir, Family, lay
+      .compacted("cdirs" -> newC, "hdirs" -> newH).copy(metaDir = Some(newM)))
   }
 
   private def readMetaRows(spark: SparkSession, dir: String,
@@ -409,10 +340,10 @@ object StatsIndex {
     * like the negative cells `indexHealth` counts.
     */
   def statsCells(spark: SparkSession, dir: String): DataFrame = {
-    val (_, cDirs, _, metaDir) = statsManifest(spark, dir)
-    require(readMetaRows(spark, dir, metaDir) > 0L,
+    val lay = GenManifest.layout(spark, dir, Family)
+    require(readMetaRows(spark, dir, lay.meta) > 0L,
       s"stats index at $dir is empty")
-    readGens(spark, dir, cDirs)
+    GenManifest.readGenerations(spark, dir, lay("cdirs"))
       .groupBy(col("lang"), col("source"))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("tokens")).as("tokens"),
         sum(col("chars")).as("chars"))
@@ -427,15 +358,15 @@ object StatsIndex {
     */
   def statsQuantiles(spark: SparkSession, dir: String,
       qsPpm: Seq[Long] = TextAnalysis.DefaultQuantilesPpm): DataFrame = {
-    val (_, _, hDirs, metaDir) = statsManifest(spark, dir)
-    require(readMetaRows(spark, dir, metaDir) > 0L,
+    val lay = GenManifest.layout(spark, dir, Family)
+    require(readMetaRows(spark, dir, lay.meta) > 0L,
       s"stats index at $dir is empty")
     // Zero-count rows must go BEFORE the quantile tail: a length whose
     // ingest and retraction cancelled is not merely inert — a language
     // whose EVERY length cancelled would otherwise survive with
     // total = 0, where the rank test `cum·1e6 >= q·0` is vacuously true
     // and the tail would emit quantiles for a corpus-absent language.
-    val hist = readGens(spark, dir, hDirs)
+    val hist = GenManifest.readGenerations(spark, dir, lay("hdirs"))
       .groupBy(col("lang"), col("len")).agg(sum(col("cnt")).as("cnt"))
       .where(col("cnt") =!= 0L)
     TextAnalysis.quantilesFromHist(hist, qsPpm)
@@ -449,14 +380,17 @@ object StatsIndex {
     * lockstep).
     */
   def indexHealth(spark: SparkSession, dir: String): DataFrame = {
-    val (_, cDirs, hDirs, metaDir) = statsManifest(spark, dir)
-    val nRows = readMetaRows(spark, dir, metaDir)
-    val c = readGens(spark, dir, cDirs)
+    val lay = GenManifest.layout(spark, dir, Family)
+    val (cDirs, hDirs) = (lay("cdirs"), lay("hdirs"))
+    val nRows = readMetaRows(spark, dir, lay.meta)
+    val c = GenManifest.readGenerations(spark, dir, cDirs)
       .groupBy(col("lang"), col("source"))
       .agg(sum(col("n_docs")).as("nd"))
       .agg(count(when(col("nd") < 0L, 1)).as("neg_cells"))
-    val cr = readGens(spark, dir, cDirs).agg(count(lit(1)).as("cells_rows"))
-    val h = readGens(spark, dir, hDirs).agg(count(lit(1)).as("hist_rows"))
+    val cr = GenManifest.readGenerations(spark, dir, cDirs)
+      .agg(count(lit(1)).as("cells_rows"))
+    val h = GenManifest.readGenerations(spark, dir, hDirs)
+      .agg(count(lit(1)).as("hist_rows"))
     cr.crossJoin(h).crossJoin(c).select(
       lit(cDirs.length.toLong).as("n_gens"),
       col("cells_rows"), col("hist_rows"),

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AsOf, Curation, Dedup, EventAnalytics, Multimodal, RangeJoin, Search, Selection, Similarity, TextAnalysis}
+import graft.operators.{AsOf, Curation, Dedup, EventAnalytics, GenManifest, Multimodal, RangeJoin, Search, Selection, Similarity, TextAnalysis}
 
 /** Behavioral specs for the training-data-pipeline operators (dedup,
   * similarity, text analysis, multimodal plumbing) on tiny fixtures with
@@ -868,13 +868,13 @@ class PipelineOperatorsSpec extends SparkSpec {
     // Empty delta (token-less docs) is a no-op: no new generation.
     Search.appendToLexIndex(
       docs(2000L -> "   ").select(col("doc_id"), col("text")), appended)
-    assert(Search.lexManifest(spark, appended).seq == 2L)
+    assert(GenManifest.layout(spark, appended, Search.Family).seq == 2L)
     // COMPACT folds the generations to one dir; search is bit-identical
     // across the fold, and the folded-away dirs get one commit of grace.
     val before = run(appended)
     Search.compactLexIndex(spark, appended)
-    val layLC = Search.lexManifest(spark, appended)
-    assert(layLC.seq == 3L && layLC.pDirs == Seq("postings-3"))
+    val layLC = GenManifest.layout(spark, appended, Search.Family)
+    assert(layLC.seq == 3L && layLC("dirs") == Seq("postings-3"))
     assert(run(appended) == before)
     val postC = new java.io.File(appended).listFiles().map(_.getName).toSet
     assert(postC.contains("postings") && postC.contains("postings-2")) // grace
@@ -887,10 +887,10 @@ class PipelineOperatorsSpec extends SparkSpec {
       !postA.contains("postings-2"))
     assert(postA.contains("postings-3") && postA.contains("postings-4"))
     // No-op on a single-generation index.
-    val layB = Search.lexManifest(spark, rebuilt)
+    val layB = GenManifest.layout(spark, rebuilt, Search.Family)
     Search.compactLexIndex(spark, rebuilt)
-    assert(Search.lexManifest(spark, rebuilt) == layB &&
-      layB.tDirs == Nil && layB.statsDir == "stats")
+    assert(GenManifest.layout(spark, rebuilt, Search.Family) == layB &&
+      layB.tDirs == Nil && layB.meta == "stats")
   }
 
   test("syncLexIndex: v1→v2 sync ≡ rebuild-on-v2 exactly; changed docs score with NEW content; v1-token-less changed docs append without retraction; unchanged corpus is a no-op") {
@@ -928,9 +928,9 @@ class PipelineOperatorsSpec extends SparkSpec {
     assert(s1.exists(_._2 == 5L), "the added doc scores (bb/cc/dd hits)")
     // An unchanged corpus syncs as a complete no-op (no retraction, no
     // append, no commit).
-    val seq0 = Search.lexManifest(spark, synced).seq
+    val seq0 = GenManifest.layout(spark, synced, Search.Family).seq
     Search.syncLexIndex(v2, v2, synced)
-    assert(Search.lexManifest(spark, synced).seq == seq0)
+    assert(GenManifest.layout(spark, synced, Search.Family).seq == seq0)
     assert(run(synced) == s1)
   }
 
@@ -978,10 +978,10 @@ class PipelineOperatorsSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("not currently live"))
     // Empty takedown set is a no-op (no commit).
-    val seq0 = Search.lexManifest(spark, retracted).seq
+    val seq0 = GenManifest.layout(spark, retracted, Search.Family).seq
     Search.retractFromLexIndex(
       docs(5000L -> "x").filter(col("doc_id") < 0), retracted)
-    val seq1 = Search.lexManifest(spark, retracted).seq
+    val seq1 = GenManifest.layout(spark, retracted, Search.Family).seq
     assert(seq1 == seq0)
     // A takedown that would empty the index throws (unrepresentable).
     val solo = java.nio.file.Files
@@ -1011,8 +1011,8 @@ class PipelineOperatorsSpec extends SparkSpec {
     assert(preCompact == after)
     Search.compactLexIndex(spark, retracted)
     assert(run(retracted) == preCompact)
-    val layRC = Search.lexManifest(spark, retracted)
-    val (dirsC, tDirsC) = (layRC.pDirs, layRC.tDirs)
+    val layRC = GenManifest.layout(spark, retracted, Search.Family)
+    val (dirsC, tDirsC) = (layRC("dirs"), layRC.tDirs)
     assert(dirsC.length == 1 && tDirsC.isEmpty)
     assert(census(retracted) == ((32L, 0L, 0L)), "compact purges the dead")
     // The folded postings hold no retracted rows at all.
@@ -1154,7 +1154,8 @@ class PipelineOperatorsSpec extends SparkSpec {
     // A 0-row delta writes a dir with no cell= children; committing it
     // would make every later readCells throw with no repair path.
     Similarity.appendToIvfIndex(d.filter(col("vec_id") < 0), dir)
-    assert(Similarity.indexManifest(spark, dir) == ((0L, Seq("cells"), Nil)))
+    assert(GenManifest.layout(spark, dir, Similarity.Family) ==
+      Similarity.Family.adopted)
     assert(topkRows(Similarity.ivfIndexTopK(spark, dir, q, k = 3, probes = 1))
       == before)
   }
@@ -1171,7 +1172,8 @@ class PipelineOperatorsSpec extends SparkSpec {
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
     assert(msgs(e).exists(_.contains("dims")))
-    assert(Similarity.indexManifest(spark, dir) == ((0L, Seq("cells"), Nil)))
+    assert(GenManifest.layout(spark, dir, Similarity.Family) ==
+      Similarity.Family.adopted)
   }
 
   test("appendToIvfPqIndex: search-after-append equals frozen-book rebuild") {
@@ -1234,9 +1236,9 @@ class PipelineOperatorsSpec extends SparkSpec {
     // The added near-duplicate of cluster 0's axis IS retrievable.
     assert(si.exists(_._2 == 100L), si.toString)
     // No-op sync: same manifest generation, same serve.
-    val seq0 = Similarity.indexManifest(spark, syncedI)._1
+    val seq0 = GenManifest.layout(spark, syncedI, Similarity.Family).seq
     Similarity.syncAnnIndex(v2, v2, syncedI)
-    assert(Similarity.indexManifest(spark, syncedI)._1 == seq0)
+    assert(GenManifest.layout(spark, syncedI, Similarity.Family).seq == seq0)
     assert(topkRows(Similarity.ivfIndexTopK(spark, syncedI, q, k = 3,
       probes = 4)) == si)
     // IVF-PQ layout — ONE sync implementation, PQ-coded append leg.
@@ -1268,8 +1270,8 @@ class PipelineOperatorsSpec extends SparkSpec {
     val before = topkRows(Similarity.ivfIndexTopK(spark, dir, q, k = 3, probes = 1))
     Similarity.compactIndex(spark, dir)
     // The manifest now references exactly ONE folded dir …
-    val (seq, dirs, _) = Similarity.indexManifest(spark, dir)
-    assert(seq == 2L && dirs == Seq("compact-0000000002"))
+    val layC = GenManifest.layout(spark, dir, Similarity.Family)
+    assert(layC.seq == 2L && layC("dirs") == Seq("compact-0000000002"))
     // … and the search is bit-identical (rows rewritten verbatim).
     val after = topkRows(Similarity.ivfIndexTopK(spark, dir, q, k = 3, probes = 1))
     assert(after == before && after.nonEmpty)
@@ -1300,7 +1302,8 @@ class PipelineOperatorsSpec extends SparkSpec {
     val before = topkRows(Similarity.ivfIndexTopK(spark, dir, q, k = 3, probes = 1))
     Similarity.compactIndex(spark, dir)
     // Nothing to fold: no manifest written, layout untouched.
-    assert(Similarity.indexManifest(spark, dir) == ((0L, Seq("cells"), Nil)))
+    assert(GenManifest.layout(spark, dir, Similarity.Family) ==
+      Similarity.Family.adopted)
     assert(topkRows(Similarity.ivfIndexTopK(spark, dir, q, k = 3, probes = 1)) == before)
   }
 
@@ -1317,8 +1320,7 @@ class PipelineOperatorsSpec extends SparkSpec {
     val before = topkRows(Similarity.ivfPqTopK(spark, dir, q, k = 3,
       probes = 1, candidates = 10))
     Similarity.compactIndex(spark, dir)
-    val (_, dirs, _) = Similarity.indexManifest(spark, dir)
-    assert(dirs.length == 1)
+    assert(GenManifest.layout(spark, dir, Similarity.Family)("dirs").length == 1)
     val after = topkRows(Similarity.ivfPqTopK(spark, dir, q, k = 3,
       probes = 1, candidates = 10))
     assert(after == before && after.nonEmpty)
@@ -1374,10 +1376,10 @@ class PipelineOperatorsSpec extends SparkSpec {
         d.filter(col("vec_id") === 2), dir)
     }
     assert(e1.getMessage.contains("not currently live"))
-    val (seqE, _, _) = Similarity.indexManifest(spark, dir)
+    val seqE = GenManifest.layout(spark, dir, Similarity.Family).seq
     // Empty takedown set is a no-op (no commit).
     Similarity.retractFromAnnIndex(d.filter(col("vec_id") < 0), dir)
-    assert(Similarity.indexManifest(spark, dir)._1 == seqE)
+    assert(GenManifest.layout(spark, dir, Similarity.Family).seq == seqE)
     // A takedown covering EVERY live vector throws BEFORE committing
     // (the lex/exact family guard) — an all-empty index would serve
     // silently-empty rows until a later compact finally failed.
@@ -1385,7 +1387,7 @@ class PipelineOperatorsSpec extends SparkSpec {
       Similarity.retractFromAnnIndex(d.filter(col("vec_id") % 5 =!= 2), dir)
     }
     assert(eAll.getMessage.contains("every live vector"))
-    assert(Similarity.indexManifest(spark, dir)._1 == seqE,
+    assert(GenManifest.layout(spark, dir, Similarity.Family).seq == seqE,
       "a refused full takedown commits nothing")
     // RE-INGEST of a vacant id restores membership exactly.
     Similarity.appendToIvfIndex(takedown, dir)
@@ -1397,7 +1399,8 @@ class PipelineOperatorsSpec extends SparkSpec {
     assert(preCompact == after)
     Similarity.compactIndex(spark, dir)
     assert(run() == preCompact)
-    val (_, dirsC, tDirsC) = Similarity.indexManifest(spark, dir)
+    val layAC = GenManifest.layout(spark, dir, Similarity.Family)
+    val (dirsC, tDirsC) = (layAC("dirs"), layAC.tDirs)
     assert(dirsC.length == 1 && tDirsC.isEmpty)
     val folded = spark.read.parquet(s"$dir/${dirsC.head}")
     assert(folded.filter(col("vec_id") % 5 === 2).isEmpty)
@@ -3450,13 +3453,13 @@ class PipelineOperatorsSpec extends SparkSpec {
     // COMPACT: serve identical across the fold; ONE generation remains.
     graft.operators.MediaIndex.compactMediaIndex(spark, appended)
     assert(serve(appended) == a)
-    val layMC = graft.operators.MediaIndex.mediaManifest(spark, appended)
-    val (seqC, bDirsC) = (layMC.seq, layMC.bDirs)
+    val layMC = GenManifest.layout(spark, appended, graft.operators.MediaIndex.Family)
+    val (seqC, bDirsC) = (layMC.seq, layMC("bdirs"))
     assert(bDirsC.length == 1 && bDirsC.head.startsWith("blocks-compact-"),
       bDirsC)
     // No-op compaction on the single-generation index.
     graft.operators.MediaIndex.compactMediaIndex(spark, appended)
-    assert(graft.operators.MediaIndex.mediaManifest(spark, appended).seq == seqC)
+    assert(GenManifest.layout(spark, appended, graft.operators.MediaIndex.Family).seq == seqC)
     assert(serve(appended) == a)
     // Build validates BEFORE destroying: a hash-less corpus refuses and
     // the previous index still serves.
@@ -3522,8 +3525,8 @@ class PipelineOperatorsSpec extends SparkSpec {
     // identical; the clean verdict resolves liveness too.
     graft.operators.MediaIndex.compactMediaIndex(spark, retracted)
     assert(serve(retracted) == r2)
-    val layMR = graft.operators.MediaIndex.mediaManifest(spark, retracted)
-    val (bD, tD) = (layMR.bDirs, layMR.tDirs)
+    val layMR = GenManifest.layout(spark, retracted, graft.operators.MediaIndex.Family)
+    val (bD, tD) = (layMR("bdirs"), layMR.tDirs)
     assert(bD.length == 1 && tD.isEmpty, s"$bD $tD")
     // Streaming twin over LIVE tombstones: the retracted payload must
     // not alert (fresh index, retract doc 3, stream its near-copy).
@@ -3586,9 +3589,9 @@ class PipelineOperatorsSpec extends SparkSpec {
     assert(s1.exists(p => p._1 == 5L && p._2 == 105L), s1.toString)
     // An unchanged corpus syncs as a complete no-op: same manifest
     // generation, same serve.
-    val seq0 = graft.operators.MediaIndex.mediaManifest(spark, synced).seq
+    val seq0 = GenManifest.layout(spark, synced, graft.operators.MediaIndex.Family).seq
     graft.operators.MediaIndex.syncMediaIndex(v2, v2, synced)
-    assert(graft.operators.MediaIndex.mediaManifest(spark, synced).seq == seq0)
+    assert(GenManifest.layout(spark, synced, graft.operators.MediaIndex.Family).seq == seq0)
     assert(serve(synced) == s1)
   }
 
@@ -4693,6 +4696,38 @@ class PipelineOperatorsSpec extends SparkSpec {
     }
   }
 
+  test("ivfPqRecall: a failed index leg surfaces its exception and strands no exact-leg barrier") {
+    // No index at `dir`: the serve leg throws while the exact leg runs on
+    // its own thread. The call must wait for that leg and release its
+    // checkpoint, so nothing it materialized outlives the call.
+    val emb = clusteredVecs
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_ivfpq_none").toString
+    val sc = spark.sparkContext
+    // An abandoned leg may not have started its first job when the call
+    // returns, and pins its barrier only once it lands — compare after the
+    // context has stayed idle for three seconds.
+    def idle(): Unit = {
+      val end = System.nanoTime() + 60000000000L
+      var quietSince = System.nanoTime()
+      while (System.nanoTime() - quietSince < 3000000000L &&
+          System.nanoTime() < end) {
+        if (sc.statusTracker.getActiveJobIds().nonEmpty)
+          quietSince = System.nanoTime()
+        Thread.sleep(50)
+      }
+    }
+    idle()
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val e = intercept[Exception] {
+      Similarity.ivfPqRecall(spark, dir, emb, k = 5, numQueries = 5)
+    }
+    assert(e.getMessage.contains("does not exist"), e.getMessage)
+    idle()
+    // New ids only: the ContextCleaner may drop older RDDs meanwhile.
+    assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty)
+  }
+
   // ---- selection (DSIR / caps / epoch shuffle) -------------------------
 
   test("dsirScores: target-like raw docs score above raw docs that aren't") {
@@ -5183,13 +5218,13 @@ class PipelineOperatorsSpec extends SparkSpec {
     // lists exactly one generation dir per table.
     DedupIndex.compactDedupIndex(spark, appended)
     assert(pairs(appended) == a)
-    val layC = DedupIndex.dedupManifest(spark, appended)
-    val (seqC, bDirsC, sDirsC) = (layC.seq, layC.bDirs, layC.sDirs)
+    val layC = GenManifest.layout(spark, appended, DedupIndex.Family)
+    val (seqC, bDirsC, sDirsC) = (layC.seq, layC("bdirs"), layC("sdirs"))
     assert(bDirsC.length == 1 && sDirsC.length == 1, s"$bDirsC / $sDirsC")
     assert(bDirsC.head.startsWith("buckets-compact-"))
     // No-op compaction on the already-single-generation index.
     DedupIndex.compactDedupIndex(spark, appended)
-    assert(DedupIndex.dedupManifest(spark, appended).seq == seqC)
+    assert(GenManifest.layout(spark, appended, DedupIndex.Family).seq == seqC)
     assert(pairs(appended) == a)
   }
 
@@ -5261,8 +5296,8 @@ class PipelineOperatorsSpec extends SparkSpec {
     // serve identical.
     DedupIndex.compactDedupIndex(spark, retracted)
     assert(pairs(retracted) == r2)
-    val layR = DedupIndex.dedupManifest(spark, retracted)
-    val (bD, sD, tD) = (layR.bDirs, layR.sDirs, layR.tDirs)
+    val layR = GenManifest.layout(spark, retracted, DedupIndex.Family)
+    val (bD, sD, tD) = (layR("bdirs"), layR("sdirs"), layR.tDirs)
     assert(bD.length == 1 && sD.length == 1 && tD.isEmpty, s"$bD $sD $tD")
     // Streaming twin over LIVE tombstones: retracted content must not
     // alert (fresh index, retract doc 3, stream a near-copy of it).
@@ -5322,9 +5357,9 @@ class PipelineOperatorsSpec extends SparkSpec {
     assert(s1.exists(p => p._1 == 5L && p._2 == 105L), s1.toString)
     // An unchanged corpus syncs as a complete no-op: no retraction, no
     // append, same manifest generation, same serve.
-    val seq0 = DedupIndex.dedupManifest(spark, synced).seq
+    val seq0 = GenManifest.layout(spark, synced, DedupIndex.Family).seq
     DedupIndex.syncDedupIndex(v2, v2, synced)
-    assert(DedupIndex.dedupManifest(spark, synced).seq == seq0)
+    assert(GenManifest.layout(spark, synced, DedupIndex.Family).seq == seq0)
     assert(pairs(synced) == s1)
   }
 
@@ -5909,23 +5944,24 @@ class PipelineOperatorsSpec extends SparkSpec {
     ExactDedupIndex.appendToIndex(
       docs(Seq.empty[(Long, String)]: _*), appended)
     assert(serve(appended) == a)
-    val (seqBefore, hDirsBefore, _, _) =
-      ExactDedupIndex.indexManifest(spark, appended)
-    assert(hDirsBefore.length == 2)
+    val layBefore = GenManifest.layout(spark, appended, ExactDedupIndex.Family)
+    val seqBefore = layBefore.seq
+    assert(layBefore("hdirs").length == 2)
     // n_hashes before compact: 3 + 2 = 5 (upper bound; true distinct 4).
     def nHashes(dir: String) = {
-      val (_, _, _, m) = ExactDedupIndex.indexManifest(spark, dir)
+      val m = GenManifest.layout(spark, dir, ExactDedupIndex.Family).meta
       spark.read.parquet(s"$dir/$m").head().getAs[Long]("n_hashes")
     }
     assert(nHashes(appended) == 5L)
     ExactDedupIndex.compactIndex(spark, appended)
     assert(serve(appended) == a)
     assert(nHashes(appended) == 4L)
-    val (seqC, hDirsC, _, _) = ExactDedupIndex.indexManifest(spark, appended)
+    val layXC = GenManifest.layout(spark, appended, ExactDedupIndex.Family)
+    val (seqC, hDirsC) = (layXC.seq, layXC("hdirs"))
     assert(seqC == seqBefore + 1 && hDirsC.length == 1, s"$hDirsC")
     // No-op compaction on the single-generation index.
     ExactDedupIndex.compactIndex(spark, appended)
-    assert(ExactDedupIndex.indexManifest(spark, appended)._1 == seqC)
+    assert(GenManifest.layout(spark, appended, ExactDedupIndex.Family).seq == seqC)
     assert(serve(appended) == a)
   }
 
@@ -5985,11 +6021,12 @@ class PipelineOperatorsSpec extends SparkSpec {
     // Compact folds tombstones away: serve identical, exactly one hash
     // generation, zero tombstone dirs, n_hashes back to the exact
     // member count (r also-gone physically purged).
-    val (_, _, tDirsB, _) = ExactDedupIndex.indexManifest(spark, retracted)
-    assert(tDirsB.nonEmpty)
+    assert(GenManifest.layout(spark, retracted, ExactDedupIndex.Family)
+      .tDirs.nonEmpty)
     ExactDedupIndex.compactIndex(spark, retracted)
     assert(serve(retracted) == r2)
-    val (_, hD, tD, m) = ExactDedupIndex.indexManifest(spark, retracted)
+    val layXR = GenManifest.layout(spark, retracted, ExactDedupIndex.Family)
+    val (hD, tD, m) = (layXR("hdirs"), layXR.tDirs, layXR.meta)
     assert(hD.length == 1 && tD.isEmpty, s"$hD $tD")
     assert(spark.read.parquet(s"$retracted/$m").head()
       .getAs[Long]("n_hashes") == 3L)
@@ -6046,9 +6083,9 @@ class PipelineOperatorsSpec extends SparkSpec {
     // (the dead hash is already tombstoned and skips; the born hashes
     // are already members and skip — no duplicate generation, n_hashes
     // stays exact).
-    val (seqR, _, _, _) = ExactDedupIndex.indexManifest(spark, synced)
+    val seqR = GenManifest.layout(spark, synced, ExactDedupIndex.Family).seq
     ExactDedupIndex.syncIndex(v1, v2, synced)
-    assert(ExactDedupIndex.indexManifest(spark, synced)._1 == seqR,
+    assert(GenManifest.layout(spark, synced, ExactDedupIndex.Family).seq == seqR,
       "a repeated sync commits nothing")
     assert(serve(synced) == s1)
     val c2 = ExactDedupIndex.takedownHealth(spark, synced).collect()(0)
@@ -6072,9 +6109,9 @@ class PipelineOperatorsSpec extends SparkSpec {
     }
     assert(serve(synced) == s1, "failed syncs commit nothing")
     // An unchanged corpus syncs as a complete no-op.
-    val (seq0, _, _, _) = ExactDedupIndex.indexManifest(spark, synced)
+    val seq0 = GenManifest.layout(spark, synced, ExactDedupIndex.Family).seq
     ExactDedupIndex.syncIndex(v2, v2, synced)
-    assert(ExactDedupIndex.indexManifest(spark, synced)._1 == seq0)
+    assert(GenManifest.layout(spark, synced, ExactDedupIndex.Family).seq == seq0)
     assert(serve(synced) == s1)
   }
 
@@ -6157,7 +6194,7 @@ class PipelineOperatorsSpec extends SparkSpec {
     // Compaction physically purges the cancelled groups from disk.
     StatsIndex.compactStatsIndex(spark, dir)
     assert(snap(dir) == snap(rebuilt))
-    val (_, cDirsC, _, _) = StatsIndex.statsManifest(spark, dir)
+    val cDirsC = GenManifest.layout(spark, dir, StatsIndex.Family)("cdirs")
     assert(spark.read.parquet(s"$dir/${cDirsC.head}")
       .where("lang = 'xx'").isEmpty)
     // Retracting more rows than the index holds fails loudly.
@@ -6174,10 +6211,10 @@ class PipelineOperatorsSpec extends SparkSpec {
     assert(cellRows(StatsIndex.statsCells(spark, dir))
       .contains(("zz", "alien", -1L, -2L, -5L)))
     // Empty retraction: no generation commits.
-    val seqB = StatsIndex.statsManifest(spark, dir)._1
+    val seqB = GenManifest.layout(spark, dir, StatsIndex.Family).seq
     StatsIndex.retractFromStatsIndex(
       statDocs(Seq.empty[(String, String, String)]: _*), dir)
-    assert(StatsIndex.statsManifest(spark, dir)._1 == seqB)
+    assert(GenManifest.layout(spark, dir, StatsIndex.Family).seq == seqB)
   }
 
   test("statsIndex: append ≡ rebuild EXACTLY; empty delta no-op; compact folds to one generation serve-identically") {
@@ -6200,24 +6237,25 @@ class PipelineOperatorsSpec extends SparkSpec {
     assert(StatsIndex.indexHealth(spark, appended).head()
       .getAs[Long]("n_rows") == 10L)
     // Empty (zero-row) delta: nothing lands, no generation commits.
-    val (seqBefore, cDirsBefore, _, _) =
-      StatsIndex.statsManifest(spark, appended)
+    val laySB = GenManifest.layout(spark, appended, StatsIndex.Family)
+    val (seqBefore, cDirsBefore) = (laySB.seq, laySB("cdirs"))
     StatsIndex.appendToStatsIndex(
       statDocs(Seq.empty[(String, String, String)]: _*), appended)
-    assert(StatsIndex.statsManifest(spark, appended)._1 == seqBefore)
+    assert(GenManifest.layout(spark, appended, StatsIndex.Family).seq == seqBefore)
     assert(snap(appended) == a)
     assert(cDirsBefore.length == 2)
     // Compact: one generation pair remains; serves identical; n_rows
     // carries over verbatim (it was exact all along).
     StatsIndex.compactStatsIndex(spark, appended)
-    val (seqC, cDirsC, hDirsC, _) = StatsIndex.statsManifest(spark, appended)
+    val laySC = GenManifest.layout(spark, appended, StatsIndex.Family)
+    val (seqC, cDirsC, hDirsC) = (laySC.seq, laySC("cdirs"), laySC("hdirs"))
     assert(seqC == seqBefore + 1 && cDirsC.length == 1 && hDirsC.length == 1)
     assert(snap(appended) == a)
     assert(StatsIndex.indexHealth(spark, appended).head()
       .getAs[Long]("n_rows") == 10L)
     // No-op compaction on the single-generation index.
     StatsIndex.compactStatsIndex(spark, appended)
-    assert(StatsIndex.statsManifest(spark, appended)._1 == seqC)
+    assert(GenManifest.layout(spark, appended, StatsIndex.Family).seq == seqC)
     assert(snap(appended) == a)
   }
 
@@ -6259,9 +6297,9 @@ class PipelineOperatorsSpec extends SparkSpec {
     assert(StatsIndex.indexHealth(spark, synced).head()
       .getAs[Long]("neg_cells") == 0L)
     // Unchanged corpus: no transition, neither leg commits.
-    val seqB = StatsIndex.statsManifest(spark, synced)._1
+    val seqB = GenManifest.layout(spark, synced, StatsIndex.Family).seq
     StatsIndex.syncStatsIndex(v2, v2, synced)
-    assert(StatsIndex.statsManifest(spark, synced)._1 == seqB)
+    assert(GenManifest.layout(spark, synced, StatsIndex.Family).seq == seqB)
     assert(snap(synced) == snap(rebuilt))
   }
 
@@ -6282,12 +6320,11 @@ class PipelineOperatorsSpec extends SparkSpec {
     // A manifest written by ANOTHER index family surfaces the curated
     // family-guard diagnostic, not an NPE.
     val alien = stxTmp()
-    val node = graft.operators.GenManifest.newNode()
-    node.putArray("hdirs").add("hashes")
-    node.put("meta", "meta")
-    graft.operators.GenManifest.commit(spark, alien, 1L, node)
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(alien, GenManifest.manifestName(1L)),
+      """{"hdirs":["hashes"],"meta":"meta"}""".getBytes("UTF-8"))
     val ex2 = intercept[IllegalStateException] {
-      StatsIndex.statsManifest(spark, alien)
+      GenManifest.layout(spark, alien, StatsIndex.Family)
     }
     assert(ex2.getMessage.contains("not a stats-index manifest"))
   }

@@ -857,8 +857,9 @@ class PlanShapeSpec extends SparkSpec {
     // dir list drives the serve read, so the lock reads it back rather
     // than hard-coding names.
     graft.operators.DedupIndex.compactDedupIndex(spark, dir)
-    val layC = graft.operators.DedupIndex.dedupManifest(spark, dir)
-    val (bDirs, sDirs) = (layC.bDirs, layC.sDirs)
+    val layC = graft.operators.GenManifest.layout(spark, dir,
+      graft.operators.DedupIndex.Family)
+    val (bDirs, sDirs) = (layC("bdirs"), layC("sdirs"))
     for ((partCol, dirs) <- Seq("bkt" -> bDirs, "sbkt" -> sDirs)) {
       val p = graft.operators.DedupIndex
         .readPruned(spark, dir, dirs, partCol, Seq(0L, 3L))
@@ -925,7 +926,8 @@ class PlanShapeSpec extends SparkSpec {
     assert("Exchange".r.findAllIn(hp).length <= 2, hp.take(2000))
     // COMPACTION restores exactly ONE pruned scan (manifest-driven).
     graft.operators.MediaIndex.compactMediaIndex(spark, dir)
-    val bDirs = graft.operators.MediaIndex.mediaManifest(spark, dir).bDirs
+    val bDirs = graft.operators.GenManifest.layout(spark, dir,
+      graft.operators.MediaIndex.Family)("bdirs")
     val pc = graft.operators.MediaIndex
       .readPruned(spark, dir, bDirs, Seq(0L, 3L))
       .queryExecution.executedPlan.toString
@@ -939,8 +941,9 @@ class PlanShapeSpec extends SparkSpec {
     graft.operators.MediaIndex.retractFromMediaIndex(
       graft.operators.Multimodal.withPayload(
         Seq((2L, "x")).toDF("doc_id", "text")), dir)
-    val layT = graft.operators.MediaIndex.mediaManifest(spark, dir)
-    val (bDirsT, tDirsT) = (layT.bDirs, layT.tDirs)
+    val layT = graft.operators.GenManifest.layout(spark, dir,
+      graft.operators.MediaIndex.Family)
+    val (bDirsT, tDirsT) = (layT("bdirs"), layT.tDirs)
     assert(tDirsT.nonEmpty)
     val pt = graft.operators.GenManifest
       .readPrunedLive(spark, dir, bDirsT, "bbkt", Seq(0L, 3L), tDirsT,
@@ -1041,8 +1044,9 @@ class PlanShapeSpec extends SparkSpec {
     graft.operators.DedupIndex.buildDedupIndex(docs, dir, nBuckets = 8)
     graft.operators.DedupIndex.retractFromDedupIndex(
       Seq((3L, "")).toDF("doc_id", "text"), dir)
-    val layR = graft.operators.DedupIndex.dedupManifest(spark, dir)
-    val (bDirs, tDirs) = (layR.bDirs, layR.tDirs)
+    val layR = graft.operators.GenManifest.layout(spark, dir,
+      graft.operators.DedupIndex.Family)
+    val (bDirs, tDirs) = (layR("bdirs"), layR.tDirs)
     assert(tDirs.nonEmpty)
     val p = graft.operators.DedupIndex
       .readPrunedLive(spark, dir, bDirs, "bkt", Seq(0L, 3L), tDirs)
