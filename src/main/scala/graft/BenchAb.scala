@@ -59,7 +59,7 @@ object BenchAb {
     require(qs != null && qs.isObject,
       s"$detail carries no queries object — not a bench detail file")
     import scala.jdk.CollectionConverters._
-    qs.fields().asScala
+    qs.properties().asScala
       .map(e => e.getKey -> e.getValue.asDouble()).toMap
   }
 

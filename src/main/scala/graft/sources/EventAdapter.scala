@@ -137,6 +137,13 @@ object EventAdapter {
     * the RecentChange column layout: `from_json` with the Wikimedia wire
     * schema (snake_case, nested length struct) then flatten — the
     * reference's `JSON.parse` (index.js:313) as a Catalyst expression.
+    *
+    * Each message is parsed once. The parse runs inside a one-row
+    * generator (`inline_outer` over a one-element array): Catalyst pushes no
+    * predicate on a generated column below its `Generate`, so a
+    * downstream filter on a decoded field (the trend stream's reference
+    * gate) reads the parsed struct; pushed below a plain projection, the
+    * filter would re-parse the message once per field it tests.
     */
   def decodeWire(raw: DataFrame): DataFrame = {
     import graft.model.RecentChange
@@ -159,8 +166,15 @@ object EventAdapter {
     // whose JS .length is 1 (gate CLOSED), where the reference's
     // `!params.length` on a number is !undefined = true (gate OPEN) —
     // exactly the one-row cmd-forgery parity class the A6 gate exists
-    // for. Jackson skips unrequested fields, so the four single-field
-    // parses cost token-walks, not full decodes.
+    // for. Each probe re-parses the whole message (each measured close
+    // to the main parse), so a probe runs only when it can be non-null:
+    // when the main parse captured log_params, or when the main parse
+    // hit an error. An error can end the main parse before it reaches
+    // log_params (a wrong-typed nested field without partial results
+    // stops the walk at the nested object's end) while a probe of the
+    // same message still succeeds; the main parse's corrupt-record
+    // column is non-null whenever it hit one. A message without
+    // log_params (most of the feed) is parsed once.
     val mapOnly = StructType(Seq(
       StructField("log_params", MapType(StringType, StringType))))
     val arrOnly = StructType(Seq(
@@ -169,12 +183,17 @@ object EventAdapter {
       StructField("log_params", org.apache.spark.sql.types.DoubleType)))
     val boolOnly = StructType(Seq(
       StructField("log_params", org.apache.spark.sql.types.BooleanType)))
+    val corrupt = "_corrupt_record"
+    val parsed = from_json(col("value"),
+      RecentChange.wireSchema.add(corrupt, StringType),
+      Map("columnNameOfCorruptRecord" -> corrupt))
+    def probe(form: StructType) =
+      when(col("e.log_params").isNotNull || col(s"e.$corrupt").isNotNull,
+        from_json(col("value"), form).getField("log_params"))
     raw
-      .select(from_json(col("value"), RecentChange.wireSchema).as("e"),
-        from_json(col("value"), mapOnly).getField("log_params").as("lpm"),
-        from_json(col("value"), arrOnly).getField("log_params").as("lpa"),
-        from_json(col("value"), dblOnly).getField("log_params").as("lpd"),
-        from_json(col("value"), boolOnly).getField("log_params").as("lpb"))
+      .select(inline_outer(array(struct(parsed.as("e"), col("value")))))
+      .select(col("e"), probe(mapOnly).as("lpm"), probe(arrOnly).as("lpa"),
+        probe(dblOnly).as("lpd"), probe(boolOnly).as("lpb"))
       .select(
         col("e.title").as("title"),
         col("e.comment").as("comment"),
@@ -196,6 +215,9 @@ object EventAdapter {
             col("e.log_params"))
             .otherwise(lit(null).cast("string")).as("str")).as("logParams"),
         col("e.log_action_comment").as("logActionComment"),
-        to_timestamp(col("e.meta.dt")).as("ts"))
+        // try_: under ANSI mode (Spark 4's default) to_timestamp throws on
+        // a malformed meta.dt, and one such message failed the whole
+        // query. A null ts is dropped downstream like any null-ts event.
+        try_to_timestamp(col("e.meta.dt")).as("ts"))
   }
 }

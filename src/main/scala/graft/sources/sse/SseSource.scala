@@ -23,9 +23,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Transports:
   *  - `file://path` (option `path`): replay a JSONL capture. Offsets are
-  *    line numbers; partitions re-read their [start, end) slice on the
-  *    executor — nothing is buffered on the driver, so a huge capture
-  *    streams at scan speed.
+  *    line numbers. A batch of fewer than [[SseSource.SplitMinLines]]
+  *    lines is one partition; a longer one (a backlog drain, a batch
+  *    read) is cut at line marks into up to `defaultParallelism` ranges.
+  *    Each partition seeks to a recorded line mark and reads its
+  *    [start, end) slice on the executor — nothing is buffered on the
+  *    driver, so a huge capture streams at scan speed on every core.
   *  - A live SSE client implements the same contract by appending lines
   *    to a growing file (or any append-only log): `latestOffset` then
   *    advances as data lands. The reference's 5-minute reconnect watchdog
@@ -61,29 +64,18 @@ object SseSource {
     StructField("offset", LongType, nullable = false),
     StructField("value", StringType, nullable = true)))
 
-  /** One-shot line count (batch reads only — the micro-batch stream keeps
-    * an incremental counter instead, see [[LogTailCounter]]). Counts
-    * '\n' BYTES, exactly the counter's semantics: the previous
-    * getLines()/readLine form was a THIRD line definition that split on
-    * bare '\r' and admitted a live log's torn final un-terminated line —
-    * a batch read must plan the same lines the reader yields and must
-    * not serve a writer's half-appended message. ('\n' is a single byte
-    * in UTF-8, so the byte scan is charset-exact.)
+  /** The line counter records a line mark (the byte position where a
+    * line begins) every `Stride` lines, so a reader can seek near any line
+    * and skip fewer than `Stride` lines to reach it.
     */
-  private[sse] def lineCount(path: String): Long = {
-    val in = new java.io.FileInputStream(path)
-    try {
-      val buf = new Array[Byte](1 << 16)
-      var c = 0L
-      var n = in.read(buf)
-      while (n > 0) {
-        var i = 0
-        while (i < n) { if (buf(i) == '\n') c += 1; i += 1 }
-        n = in.read(buf)
-      }
-      c
-    } finally in.close()
-  }
+  private[sse] val Stride: Int = 1024
+
+  /** A range of fewer lines is planned as one partition, so live
+    * micro-batches (a second of the feed, 500-1,000 lines) stay one task:
+    * a prototype that split 1,000-line batches read the benchmark's
+    * `latency_p50_ms` 7% higher on `trend_live` (4 cores).
+    */
+  private[sse] val SplitMinLines: Long = 4L * Stride
 }
 
 /** Byte/line primitives shared by the offset counter and the partition
@@ -180,14 +172,20 @@ private[sse] object SseIo {
   * whole-log rescan was a driver-side scan per trigger that grows without
   * bound on a long-lived stream.
   *
-  * Line semantics differ from the one-shot batch `lineCount` on purpose:
-  * only '\n'-TERMINATED lines are counted. Offsets are line counts and a
+  * Only '\n'-TERMINATED lines are counted. Offsets are line counts and a
   * consumed offset is never re-read, so admitting a torn final line (a
   * writer mid-append) would hand the partition reader a truncated message
   * and then permanently skip the completed one at the next trigger. The
   * paired [[SseClient]] always appends whole '\n'-terminated lines, so a
   * complete capture loses nothing; the final un-terminated chunk of a
   * foreign capture is simply picked up once its newline lands.
+  *
+  * The scan keeps ONE map of line marks (line number -> byte position
+  * where that line begins): line 0, every [[SseSource.Stride]]-th line,
+  * and every count returned as an offset. [[ranges]] plans readers from
+  * it: each partition seeks to the mark at or below its first line. After
+  * a restart the first scan covers the whole log, so a checkpointed
+  * offset this counter never returned still seeks to within one stride.
   *
   * Rotation/truncation is NOT supported and fails LOUDLY: a shrunken
   * file rescans from the start, but Spark's committed offsets cannot
@@ -213,10 +211,9 @@ private[sse] final class LogTailCounter(path: String) {
   // Byte position just after the most recent '\n' — the file position
   // where line number `newlines` begins.
   private var lastLineEnd = 0L
-  // count -> byte position of that line boundary, for every count this
-  // counter has RETURNED (the offsets Spark can hand back as a batch
-  // start). Pruned at commit; cleared on truncation.
-  private val posByCount = scala.collection.mutable.LongMap.empty[Long]
+  // Line marks: line number -> byte position where that line begins.
+  // Pruned at commit; reset on truncation.
+  private val marks = scala.collection.mutable.TreeMap(0L -> 0L)
 
   def count(): Long = synchronized {
     val f = new java.io.File(path)
@@ -235,7 +232,8 @@ private[sse] final class LogTailCounter(path: String) {
           s"capture log $path shrank ($len bytes after $scannedBytes " +
             "scanned) with offsets already returned — " +
             "rotation/truncation is not supported on a live stream")
-      scannedBytes = 0L; newlines = 0L; lastLineEnd = 0L; posByCount.clear()
+      scannedBytes = 0L; newlines = 0L; lastLineEnd = 0L
+      marks.clear(); marks(0L) = 0L
     }
     if (len > scannedBytes) {
       val in = new java.io.FileInputStream(f)
@@ -253,6 +251,7 @@ private[sse] final class LogTailCounter(path: String) {
               if (buf(i) == '\n') {
                 newlines += 1
                 lastLineEnd = pos + i + 1
+                if (newlines % SseSource.Stride == 0) marks(newlines) = lastLineEnd
               }
               i += 1
             }
@@ -266,7 +265,7 @@ private[sse] final class LogTailCounter(path: String) {
       // unaccounted, so the paired SseClient's restart truncation
       // (which cuts exactly to the last '\n' — every byte it removes
       // is un-terminated) can never read as shrinkage here, and a
-      // torn-tail rewrite can never desync the boundary map. The
+      // torn-tail rewrite can never desync the line marks. The
       // partial line re-scans next trigger (bounded by one message);
       // the shrink guards below now fire precisely when a counted
       // line was destroyed.
@@ -278,19 +277,48 @@ private[sse] final class LogTailCounter(path: String) {
           s"($newlines lines after rescan, $maxReturned returned) — " +
           "rotation/truncation is not supported on a live stream")
     maxReturned = newlines
-    posByCount.update(newlines, lastLineEnd)
+    marks(newlines) = lastLineEnd
     newlines
   }
 
-  /** Byte position where line `cnt` starts, if this counter returned
-    * `cnt` as an offset (None after a restart — the reader falls back to
-    * a skip-scan from byte 0 for that one batch).
-    */
-  def bytePosOf(cnt: Long): Option[Long] = synchronized(posByCount.get(cnt))
+  /** The mark at or below `line`: (line number, byte position). */
+  private def markAtOrBelow(line: Long): (Long, Long) = marks.maxBefore(line + 1).get
 
-  /** Drop boundary records below the committed offset (bounded memory). */
-  def prune(upTo: Long): Unit =
-    synchronized(posByCount.filterInPlace((k, _) => k >= upTo))
+  /** Plan [start, end) as reader ranges: one range below
+    * [[SseSource.SplitMinLines]] lines, else up to `defaultParallelism`
+    * ranges of about equal length cut at line marks. Each range seeks to
+    * the mark at or below its first line; a cut is itself a mark, so only
+    * the first range can skip lines, fewer than one stride once the log is
+    * scanned.
+    */
+  def ranges(start: Long, end: Long): Seq[SseRange] = synchronized {
+    if (end <= start) Nil
+    else {
+      // A checkpointed end this counter has not scanned to yet (the
+      // replay of an uncommitted batch right after a restart): scan first.
+      if (newlines < end) count()
+      val cuts =
+        if (end - start < SseSource.SplitMinLines) Nil
+        else {
+          val parts = org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism
+          (1 until parts).map(k => markAtOrBelow(start + (end - start) * k / parts)._1)
+            .filter(_ > start).distinct
+        }
+      val froms = start +: cuts
+      froms.zip(cuts :+ end).map { case (from, until) =>
+        val (markLine, markByte) = markAtOrBelow(from)
+        SseRange(path, from, until, markLine, markByte)
+      }
+    }
+  }
+
+  /** Drop the marks below the one at or below the committed offset
+    * (bounded memory).
+    */
+  def prune(upTo: Long): Unit = synchronized {
+    val keep = markAtOrBelow(upTo)._1
+    marks.filterInPlace((k, _) => k >= keep)
+  }
 }
 
 class SseTable(path: String,
@@ -308,8 +336,10 @@ class SseTable(path: String,
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new SseMicroBatchStream(path, stalenessWarnMs)
         override def toBatch: Batch = new Batch {
-          override def planInputPartitions(): Array[InputPartition] =
-            Array(SseRange(path, 0L, SseSource.lineCount(path), 0L))
+          override def planInputPartitions(): Array[InputPartition] = {
+            val tail = new LogTailCounter(path)
+            tail.ranges(0L, tail.count()).toArray
+          }
           override def createReaderFactory(): PartitionReaderFactory =
             new SseReaderFactory
         }
@@ -327,11 +357,12 @@ case class SseOffset(count: Long) extends Offset {
   override def json(): String = count.toString
 }
 
-/** `startByte` = file position where line `start` begins; −1 = unknown
-  * (post-restart) → the reader skip-scans from byte 0 for that batch.
+/** Lines [start, end) of the log. The reader seeks to `markByte`, the
+  * byte position where line `markLine` (<= start) begins, and skips the
+  * `start - markLine` lines before its first row.
   */
 case class SseRange(path: String, start: Long, end: Long,
-    startByte: Long = -1L) extends InputPartition
+    markLine: Long, markByte: Long) extends InputPartition
 
 class SseMicroBatchStream(path: String,
     stalenessWarnMs: Long = SseMicroBatchStream.DefaultStalenessWarnMs)
@@ -386,15 +417,8 @@ class SseMicroBatchStream(path: String,
 
   override def deserializeOffset(json: String): Offset = SseOffset(json.toLong)
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[SseOffset].count
-    val e = end.asInstanceOf[SseOffset].count
-    if (e <= s) Array.empty
-    // Byte position of the start line: known for every offset THIS
-    // driver's counter returned; unknown (-1) right after a checkpoint
-    // restart, where one skip-scan from byte 0 re-establishes it.
-    else Array(SseRange(path, s, e, tail.bytePosOf(s).getOrElse(-1L)))
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    tail.ranges(start.asInstanceOf[SseOffset].count, end.asInstanceOf[SseOffset].count).toArray
 
   override def createReaderFactory(): PartitionReaderFactory = new SseReaderFactory
 
@@ -408,43 +432,42 @@ class SseReaderFactory extends PartitionReaderFactory {
     val range = partition.asInstanceOf[SseRange]
     new PartitionReader[InternalRow] {
       // Explicit UTF-8 (SSE wire encoding) — never the JVM default charset.
-      // When the planner supplied the start line's byte position, SEEK to
-      // it — the per-trigger cost is O(batch), not O(log prefix); the
-      // whole-history skip-scan remains only as the post-restart fallback
-      // (startByte < 0) for a single batch.
+      // SEEK to the planned line mark: the per-batch cost is O(batch), not
+      // O(log prefix).
       private val in = new java.io.FileInputStream(range.path)
-      private val seek = range.startByte > 0
       locally {
         // Close-on-throw: a failed seek aborts the CONSTRUCTOR, and
         // Spark never calls close() on a reader it never got — the fd
         // would leak once per task attempt.
-        if (seek)
-          try SseIo.skipFully(in, range.startByte, range.path)
-          catch { case t: Throwable => in.close(); throw t }
+        try SseIo.skipFully(in, range.markByte, range.path)
+        catch { case t: Throwable => in.close(); throw t }
       }
       private val reader = new java.io.BufferedReader(
         new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
       // One reusable chunk buffer for the whole partition scan.
       private val lineBuf = SseIo.newLineBuf()
-      // Long line counter — an Int index would overflow on multi-billion-
-      // message logs, which the offsets deliberately allow.
+      // Number of the next line to read. Long — an Int would overflow on
+      // multi-billion-message logs, which the offsets deliberately allow.
+      private var line = range.markLine
+      private var current: String = _
+
       // '\n'-ONLY line splitting (SseIo.readLineLf, never readLine):
       // BufferedReader.readLine also terminates on a bare '\r', but the
       // offset counter counts '\n' bytes — one lone CR inside a foreign
       // capture line would desync every (offset, value) pairing after it
       // and permanently drop the line at the next batch boundary.
-      private val it = Iterator.continually(SseIo.readLineLf(reader, lineBuf))
-        .takeWhile(_ != null)
-        .zip(Iterator.iterate(if (seek) range.start else 0L)(_ + 1L))
-        .dropWhile(_._2 < range.start)
-        .takeWhile(_._2 < range.end)
-      private var current: (String, Long) = _
-
-      override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
+      override def next(): Boolean = {
+        while (line < range.end) {
+          val s = SseIo.readLineLf(reader, lineBuf)
+          if (s == null) return false
+          line += 1
+          if (line > range.start) { current = s; return true }
+        }
+        false
+      }
 
       override def get(): InternalRow =
-        InternalRow(current._2, UTF8String.fromString(current._1))
+        InternalRow(line - 1, UTF8String.fromString(current))
 
       override def close(): Unit = reader.close()
     }

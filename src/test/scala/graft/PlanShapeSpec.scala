@@ -1131,4 +1131,28 @@ class PlanShapeSpec extends SparkSpec {
     assert("Exchange hashpartitioning".r.findAllIn(pq).length <= 3,
       pq.take(3000))
   }
+
+  test("wire decode: classify(decodeWire(raw)) parses each message once outside a conditional branch") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Expression, If, JsonToStructs}
+    val log = java.nio.file.Files.createTempFile("graft_wire_plan", ".jsonl")
+    java.nio.file.Files.writeString(log,
+      """{"title":"A","namespace":0,"meta":{"dt":"2024-01-01T00:00:00Z"}}""" + "\n")
+    val raw = spark.read.format("graft-sse").option("path", log.toString).load()
+    val plan = graft.streaming.TrendStream.classify(
+      graft.sources.EventAdapter.decodeWire(raw).as[graft.model.RecentChange],
+      graft.model.TrendConfig()).queryExecution.executedPlan
+    // Parses run for every row: those outside the values of a CASE/IF.
+    def unconditional(e: Expression): Int = e match {
+      case j: JsonToStructs => 1 + j.children.map(unconditional).sum
+      case CaseWhen(branches, _) => unconditional(branches.head._1)
+      case If(predicate, _, _) => unconditional(predicate)
+      case other => other.children.map(unconditional).sum
+    }
+    val exprs = plan.collect { case node => node.expressions }.flatten
+    val p = plan.toString
+    assert(exprs.map(unconditional).sum == 1, p.take(6000))
+    // ...and the four log_params form probes, each behind its guard.
+    assert(exprs.map(_.collect { case j: JsonToStructs => j }.size).sum == 5, p.take(6000))
+  }
 }

@@ -27,6 +27,37 @@ class SseSourceSpec extends SparkSpec {
     f.toString
   }
 
+  import graft.sources.sse.{SseMicroBatchStream, SseOffset, SseRange, SseReaderFactory}
+
+  private def readRange(r: SseRange): Seq[(Long, String)] = {
+    val reader = new SseReaderFactory().createReader(r)
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    try while (reader.next()) {
+      val row = reader.get()
+      out += ((row.getLong(0), row.getUTF8String(1).toString))
+    } finally reader.close()
+    out.toSeq
+  }
+
+  /** The complete lines of a log as the source must serve them: split on
+    * '\n' bytes only, one trailing '\r' stripped, the un-terminated tail
+    * left out.
+    */
+  private def expectedLines(bytes: Array[Byte]): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var from = 0
+    for (i <- bytes.indices if bytes(i) == '\n') {
+      val s = new String(bytes, from, i - from, java.nio.charset.StandardCharsets.UTF_8)
+      out += (if (s.endsWith("\r")) s.dropRight(1) else s)
+      from = i + 1
+    }
+    out.toSeq
+  }
+
+  /** Byte position where each complete line begins. */
+  private def lineStarts(bytes: Array[Byte]): Seq[Long] =
+    0L +: bytes.indices.filter(bytes(_) == '\n').map(_ + 1L).dropRight(1)
+
   test("batch read: one row per message with line offsets") {
     val path = writeFeed()
     val rows = spark.read.format("graft-sse").option("path", path).load()
@@ -70,21 +101,11 @@ class SseSourceSpec extends SparkSpec {
   }
 
   test("micro-batch reader seeks to the planned byte position (no prefix re-scan)") {
-    import graft.sources.sse.{SseMicroBatchStream, SseOffset, SseRange, SseReaderFactory}
     val path = writeFeed()
     val stream = new SseMicroBatchStream(path)
     // Trigger the counter so line-boundary byte positions are recorded.
     val end = stream.latestOffset().asInstanceOf[SseOffset].count
     assert(end == 4L)
-    def readRange(r: SseRange): Seq[(Long, String)] = {
-      val reader = new SseReaderFactory().createReader(r)
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-      try while (reader.next()) {
-        val row = reader.get()
-        out += ((row.getLong(0), row.getUTF8String(1).toString))
-      } finally reader.close()
-      out.toSeq
-    }
     // The planner knows line 4's byte pos (it returned offset 4); a later
     // batch [4, 6) would seek. For [start=returned offset] we can assert
     // through planInputPartitions once more data lands.
@@ -95,10 +116,11 @@ class SseSourceSpec extends SparkSpec {
     val parts = stream.planInputPartitions(SseOffset(end), SseOffset(end2))
     assert(parts.length == 1)
     val seekRange = parts(0).asInstanceOf[SseRange]
-    assert(seekRange.startByte > 0L, "planner should supply the byte pos")
+    assert(seekRange.markLine == end && seekRange.markByte > 0L,
+      "planner should supply the start line's byte pos")
     assert(readRange(seekRange) == Seq(4L -> "tail-a", 5L -> "tail-b"))
-    // Fallback (post-restart: unknown byte pos) reads the same rows.
-    assert(readRange(SseRange(path, end, end2, -1L)) ==
+    // A seek to an earlier mark (here line 0) skips to the same rows.
+    assert(readRange(SseRange(path, end, end2, 0L, 0L)) ==
       Seq(4L -> "tail-a", 5L -> "tail-b"))
   }
 
@@ -311,5 +333,103 @@ class SseSourceSpec extends SparkSpec {
     assert(raw.count() == 4)
     val decoded = EventAdapter.decodeWire(raw)
     assert(decoded.filter(col("title") === "Foo").count() == 2)
+  }
+
+  test("splitter: split ranges read exactly the single-range rows (CRLF, multibyte, long lines, 64 KiB straddles, torn tail)") {
+    val n = 5 * 1024 + 300
+    val lines = (0 until n).map { i =>
+      val body =
+        if (i == 2000) "long-" + ("é" * 3000) + ("x" * 4000) // > the 4 KiB line buffer
+        else if (i % 5 == 0) s"$i-multibyte-é日本🙂-" + ("y" * (i % 97))
+        else if (i % 11 == 0) s"$i-bare\rcr-inside"         // a lone CR never ends a line
+        else s"$i-" + ("z" * (i % 131))
+      body + (if (i % 7 == 0) "\r\n" else "\n")
+    }
+    val bytes = (lines.mkString + "torn-tail-without-newline")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val starts = lineStarts(bytes)
+    assert(bytes.length > 3 * 65536)
+    assert((1 to 3).forall(k => !starts.contains(k * 65536L)),
+      "some lines must straddle the counter's 64 KiB scan buffer")
+    val path = Files.createTempFile("sse-split", ".jsonl")
+    Files.write(path, bytes)
+    val expected = expectedLines(bytes)
+    assert(expected.length == n)
+
+    val stream = new SseMicroBatchStream(path.toString)
+    assert(stream.latestOffset() == SseOffset(n.toLong), "the torn tail is not counted")
+    // Ranges starting on a mark (1024), one line past it (1025), at 0,
+    // and ranges below the split threshold.
+    val cases = Seq((0L, n.toLong), (1024L, n.toLong), (1025L, n.toLong),
+      (1025L, 1025L + 4096), (1025L, 1025L + 4095), (n - 100L, n.toLong))
+    for ((s, e) <- cases) {
+      val parts = stream.planInputPartitions(SseOffset(s), SseOffset(e))
+        .map(_.asInstanceOf[SseRange]).toSeq
+      val want = (s until e).map(o => o -> expected(o.toInt))
+      assert(readRange(SseRange(path.toString, s, e, 0L, 0L)) == want, s"single range [$s, $e)")
+      assert(parts.flatMap(readRange) == want, s"split ranges of [$s, $e): $parts")
+      if (e - s < 4096) assert(parts.length == 1, s"[$s, $e) is below the split threshold")
+      else assert(parts.length == spark.sparkContext.defaultParallelism, s"[$s, $e): $parts")
+      assert(parts.map(_.start) == s +: parts.map(_.end).init && parts.last.end == e)
+      for (r <- parts) {
+        assert(r.markByte == starts(r.markLine.toInt), s"$r seeks to its mark line")
+        assert(r.start - r.markLine < 1024, s"$r skips less than one stride")
+      }
+      assert(parts.tail.forall(r => r.markLine == r.start), s"every cut is a mark: $parts")
+    }
+    // A batch read plans the same split over the whole log.
+    val batch = spark.read.format("graft-sse").option("path", path.toString).load()
+    assert(batch.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    assert(batch.collect().map(r => r.getLong(0) -> r.getString(1)).toSeq ==
+      expected.indices.map(i => i.toLong -> expected(i)))
+  }
+
+  test("restart: a stream restarted from its checkpoint seeks to a line mark and serves the uninterrupted run's rows") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val msg = (i: Int) => s"""{"i":$i,"pad":"${"p" * (i % 53)}"}"""
+    val first = 2500 // not a multiple of the 1,024-line stride
+    val all = 7500
+    val bytes = (0 until all).map(msg(_) + "\n").mkString
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val starts = lineStarts(bytes)
+    val log = Files.createTempFile("sse-restart", ".jsonl")
+    Files.write(log, bytes.take(starts(first).toInt))
+
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
+    val sink: (DataFrame, Long) => Unit = (df, _) =>
+      df.collect().foreach(r => rows.add(r.getLong(0) -> r.getString(1)))
+    /** Drain the log; returns the ranges its last micro-batch planned. */
+    def run(path: String, ck: String): Seq[SseRange] = {
+      val q = spark.readStream.format("graft-sse").option("path", path).load()
+        .writeStream.option("checkpointLocation", ck).foreachBatch(sink)
+        .trigger(Trigger.AvailableNow()).start()
+      try assert(q.awaitTermination(120000)) finally q.stop()
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+        .collect { case s: MicroBatchScanExec => s.inputPartitions }
+        .flatten.map(_.asInstanceOf[SseRange])
+    }
+    val ck = Files.createTempDirectory("sse-restart-ck").toString
+    run(log.toString, ck)
+    assert(rows.size == first)
+    Files.write(log, bytes.drop(starts(first).toInt), java.nio.file.StandardOpenOption.APPEND)
+    // A new source instance: its counter starts empty.
+    val restarted = run(log.toString, ck).sortBy(_.start)
+    import scala.jdk.CollectionConverters._
+    assert(restarted.nonEmpty && restarted.head.start == first, restarted)
+    assert(restarted.forall(_.markByte >= 0L), s"no partition may start at byte -1: $restarted")
+    assert(restarted.forall(r => r.markByte == starts(r.markLine.toInt) && r.start - r.markLine < 1024),
+      s"each partition seeks to a mark within one stride: $restarted")
+    assert(restarted.length == spark.sparkContext.defaultParallelism, restarted)
+
+    val resumed = rows.asScala.toSeq.sortBy(_._1)
+    rows.clear()
+    val fullLog = Files.createTempFile("sse-uninterrupted", ".jsonl")
+    Files.write(fullLog, bytes)
+    run(fullLog.toString, Files.createTempDirectory("sse-uninterrupted-ck").toString)
+    val uninterrupted = rows.asScala.toSeq.sortBy(_._1)
+    assert(uninterrupted.length == all)
+    assert(resumed == uninterrupted)
   }
 }
