@@ -189,6 +189,12 @@ object TrendCollection {
     * pass `evict = false` + `Trigger.AvailableNow()` — with
     * processing-time timers armed the engine schedules batches to service
     * them forever and a drain-and-stop trigger never terminates.
+    *
+    * The checkpoint is written through
+    * [[graft.streaming.LocalCheckpointFileManager]] (installed by
+    * `TrendStream.pageStates`) unless the session already names a
+    * `spark.sql.streaming.checkpointFileManagerClass`; a user-set class
+    * wins.
     */
   def streaming(
       events: Dataset[RecentChange],

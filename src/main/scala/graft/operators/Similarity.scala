@@ -1947,7 +1947,11 @@ object Similarity {
           .filter(col("rk") <= candidates)
           .barrier()
       }
-      (r, Await.result(fBf, Duration.Inf))
+      // A failed exact leg must not strand the ranked barrier either.
+      val b = try Await.result(fBf, Duration.Inf) catch {
+        case t: Throwable => Barrier.release(r); throw t
+      }
+      (r, b)
     } catch {
       case t: Throwable =>
         // A failed leg must not abandon the exact one: await it, release

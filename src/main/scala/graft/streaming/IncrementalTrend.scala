@@ -653,6 +653,7 @@ object IncrementalTrend {
   def run(events: Dataset[RecentChange], stateDir: String,
       checkpointDir: String, cfg: TrendConfig = TrendConfig(),
       numBuckets: Int = 64, fullSweepEveryNBatches: Int = 10): StreamingQuery = {
+    LocalCheckpointFileManager.install(events.sparkSession)
     events.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

@@ -290,6 +290,7 @@ object StreamingNearDup {
         "block width would be 0 (all keys collide)")
     val spark = docs.sparkSession
     import spark.implicits._
+    LocalCheckpointFileManager.install(spark)
     val delayMs = delayToMs(delay)
     val blocks = maxDist + 1
     val width = 60 / blocks
@@ -354,6 +355,7 @@ object StreamingNearDup {
       maxBucketDf: Int = Int.MaxValue): Dataset[NearDupPair] = {
     val spark = docs.sparkSession
     import spark.implicits._
+    LocalCheckpointFileManager.install(spark)
     val delayMs = delayToMs(delay)
     // Batch cap convention: <= 0 = UNCAPPED (see streamingSimhashNearDups).
     val bucketCap = if (maxBucketDf <= 0) Int.MaxValue else maxBucketDf

@@ -239,6 +239,7 @@ object StreamingNearDupUpdating {
     // session conf).
     spark.conf.set(TrendStreamTws.rocksdbConf._1,
       TrendStreamTws.rocksdbConf._2)
+    LocalCheckpointFileManager.install(spark)
     val delayMs = StreamingNearDup.delayToMs(delay)
     val bucketCap = if (maxBucketDf <= 0) Int.MaxValue else maxBucketDf
     val versions = docs.select(col("doc_id"), col(tsCol).as("ts"),
@@ -474,6 +475,7 @@ object StreamingNearDupUpdating {
     import spark.implicits._
     spark.conf.set(TrendStreamTws.rocksdbConf._1,
       TrendStreamTws.rocksdbConf._2)
+    LocalCheckpointFileManager.install(spark)
     val delayMs = StreamingNearDup.delayToMs(delay)
     val blocks = maxDist + 1
     val width = 60 / blocks

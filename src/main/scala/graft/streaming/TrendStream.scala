@@ -384,6 +384,12 @@ object TrendStream {
     * `commands` (Q4): an optional control stream (drop / markSafe) unioned
     * with the edits — commands shuffle to the page's state partition and
     * apply in ts order interleaved with that batch's edits.
+    *
+    * Checkpoint I/O: installs [[LocalCheckpointFileManager]] as the
+    * session's `spark.sql.streaming.checkpointFileManagerClass`, which
+    * writes `file:` checkpoints without Hadoop's per-file shell launches
+    * and hands any other path to Spark's own manager. A class the user
+    * has already set, in the session or the Hadoop conf, wins.
     */
   def pageStates(events: Dataset[RecentChange],
       cfg: TrendConfig = TrendConfig(),
@@ -391,6 +397,7 @@ object TrendStream {
       commands: Option[Dataset[TrendCommand]] = None): Dataset[PageState] = {
     val spark = events.sparkSession
     import spark.implicits._
+    LocalCheckpointFileManager.install(spark)
     val timeout =
       if (evict) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout

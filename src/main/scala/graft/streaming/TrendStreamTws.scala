@@ -122,6 +122,7 @@ object TrendStreamTws {
       cfg: TrendConfig = TrendConfig(),
       evict: Boolean = true,
       commands: Option[Dataset[TrendCommand]] = None): Dataset[PageState] = {
+    LocalCheckpointFileManager.install(events.sparkSession)
     val classified = commands.foldLeft(TrendStream.classify(events, cfg))(
       (evs, cmds) => evs.unionByName(TrendStream.commandEvents(cmds)))
     val timeMode = if (evict) TimeMode.ProcessingTime() else TimeMode.None()

@@ -4728,6 +4728,46 @@ class PipelineOperatorsSpec extends SparkSpec {
     assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty)
   }
 
+  test("pqRecall: a failed exact leg surfaces its exception and strands no ranked barrier") {
+    // The PQ leg succeeds while the exact leg's tasks throw: a UDF over the
+    // embedding fails only under the exact leg's job description. The call
+    // must release the ranked barrier the PQ leg materialized. (Over a
+    // local relation the optimizer runs the UDF on the driver thread.)
+    val sc = spark.sparkContext
+    val failExact = udf { (v: Seq[Float]) =>
+      val key = "spark.job.description"
+      val desc = Option(org.apache.spark.TaskContext.get())
+        .fold(org.apache.spark.SparkContext.getOrCreate().getLocalProperty(key))(
+          _.getLocalProperty(key))
+      if (desc == "pqRecall: exact leg")
+        throw new IllegalStateException("injected exact-leg failure")
+      v
+    }
+    val emb = clusteredVecs.withColumn("embedding", failExact(col("embedding")))
+    def idle(): Unit = {
+      val end = System.nanoTime() + 60000000000L
+      var quietSince = System.nanoTime()
+      while (System.nanoTime() - quietSince < 3000000000L &&
+          System.nanoTime() < end) {
+        if (sc.statusTracker.getActiveJobIds().nonEmpty)
+          quietSince = System.nanoTime()
+        Thread.sleep(50)
+      }
+    }
+    idle()
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val e = intercept[Exception] {
+      Similarity.pqRecall(emb, m = 2, codes = 2, iters = 1, k = 3,
+        numQueries = 4, candidates = 6)
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse(""))
+      .mkString("\n")
+    assert(messages.contains("injected exact-leg failure"), messages)
+    idle()
+    assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty)
+  }
+
   // ---- selection (DSIR / caps / epoch shuffle) -------------------------
 
   test("dsirScores: target-like raw docs score above raw docs that aren't") {
