@@ -1000,9 +1000,22 @@ object SparkEntry {
           try {
             // The whole denominator (prefix join + verify + count)
             // materializes HERE, concurrent with the numerator future.
-            val exactCnt = graft.operators.Barrier(
+            val exactCnt = try graft.operators.Barrier(
               Dedup.prefixJaccardOver(sets, threshold = 0.5)
                 .agg(count(lit(1)).as("n_exact")))
+            catch {
+              case t: Throwable =>
+                // A failed denominator must not abandon the numerator:
+                // await it, release its pair table, and keep its own
+                // failure as suppressed (the ivfPqRecall shape).
+                scala.util.Try(Await.result(fCaught, Duration.Inf)) match {
+                  case scala.util.Success(c) =>
+                    graft.operators.Barrier.release(c)
+                  case scala.util.Failure(e) =>
+                    if (e ne t) t.addSuppressed(e)
+                }
+                throw t
+            }
             try {
               val caught = Await.result(fCaught, Duration.Inf)
               try {

@@ -65,15 +65,17 @@ object DedupIndex {
       lay: GenManifest.Layout): (Int, Int) =
     lay.metaVals match {
       case Some(mv) => (mv("n").toInt, mv("buckets").toInt)
-      case None     => readMeta(spark, dir, lay.meta)
+      case None =>
+        val meta = spark.read.parquet(s"$dir/${lay.meta}").head()
+        (meta.getAs[Int]("n"), meta.getAs[Int]("buckets"))
     }
 
   /** The inverse of [[metaOf]]: the geometry every commit carries, so
     * serves never pay the meta parquet job; the meta table stays the
     * at-rest record + adoption fallback.
     */
-  private def metaVals(n: Int, nBuckets: Int): Option[Map[String, Long]] =
-    Some(Map("n" -> n.toLong, "buckets" -> nBuckets.toLong))
+  private def metaVals(geom: (Int, Int)): Option[Map[String, Long]] =
+    Some(Map("n" -> geom._1.toLong, "buckets" -> geom._2.toLong))
 
   /** Write the bucket + set tables of `docs` under `dir/<bName>` and
     * `dir/<sName>`; returns the bucket row count (0 = nothing written
@@ -95,9 +97,7 @@ object DedupIndex {
       try {
         val rows = buckets.count()
         if (rows > 0L) {
-          buckets.repartition(col("bkt"))
-            .write.mode("overwrite").partitionBy("bkt")
-            .parquet(s"$dir/$bName")
+          GenManifest.writeParts(buckets, "bkt", dir, bName)
           // Sets for every doc WITH buckets (a shingle-less doc can
           // never be a candidate, and an empty partitioned write of a
           // degenerate delta must not leave a schema-less dir). The
@@ -105,11 +105,9 @@ object DedupIndex {
           // sset produces its Bands bucket rows by construction — and
           // costs ZERO exchanges, where a semi-join against the bucket
           // doc_ids would shuffle the corpus's shingle-set arrays.
-          sets.filter(size(col("sset")) > 0)
-            .withColumn("sbkt", sbktOf(col("doc_id"), nBuckets))
-            .repartition(col("sbkt"))
-            .write.mode("overwrite").partitionBy("sbkt")
-            .parquet(s"$dir/$sName")
+          GenManifest.writeParts(sets.filter(size(col("sset")) > 0)
+            .withColumn("sbkt", sbktOf(col("doc_id"), nBuckets)), "sbkt",
+            dir, sName)
         }
         rows
       } finally Barrier.release(buckets)
@@ -152,244 +150,96 @@ object DedupIndex {
     spark.range(1).select(lit(n).as("n"), lit(nBuckets).as("buckets"))
       .write.mode("overwrite").parquet(s"$dir/meta")
     GenManifest.commit(spark, dir, Family,
-      Family.adopted.copy(metaVals = metaVals(n, nBuckets)))
+      Family.adopted.copy(metaVals = metaVals((n, nBuckets))))
   }
 
   /** APPEND an ingest batch: its bucket/set rows become a new
-    * generation dir pair, committed by one atomic manifest rename. The
+    * generation dir pair under the shared [[GenManifest.append]]. The
     * hash family is stateless, so append ≡ rebuild over base∪delta
-    * EXACTLY (spec-pinned). An empty delta (no shingled docs) is a
-    * NO-OP — committing a schema-less generation would poison every
-    * later read (the ANN empty-delta lesson).
+    * EXACTLY (spec-pinned); a delta with no shingled docs commits
+    * nothing.
     */
   def appendToDedupIndex(newDocs: DataFrame, dir: String): Unit = {
     val spark = newDocs.sparkSession
-    val lay = GenManifest.layout(spark, dir, Family)
-    val (n, nBuckets) = metaOf(spark, dir, lay)
-    val newB = f"buckets-delta-${lay.seq + 1}%010d"
-    val newS = f"sets-delta-${lay.seq + 1}%010d"
-    val rows = writeTables(newDocs, dir, n, nBuckets, newB, newS)
-    if (rows == 0L) {
-      // writeTables wrote nothing for a 0-row delta; nothing to delete,
-      // nothing to commit.
-      System.err.println(
-        s"[graft] dedup-index append of an EMPTY delta to $dir skipped " +
-          "(no commit)")
-    } else {
-      // Tombstones carry over: a re-ingested doc_id's NEW generation
-      // outlives any older tombstone, so the append alone restores its
-      // membership (the newest-op-wins rule).
-      GenManifest.commit(spark, dir, Family,
+    GenManifest.append(spark, dir, Family) { lay =>
+      val (n, nBuckets) = metaOf(spark, dir, lay)
+      val newB = f"buckets-delta-${lay.seq + 1}%010d"
+      val newS = f"sets-delta-${lay.seq + 1}%010d"
+      Option.when(writeTables(newDocs, dir, n, nBuckets, newB, newS) > 0L)(
         lay.appended("bdirs" -> newB, "sdirs" -> newS)
-          .copy(metaVals = metaVals(n, nBuckets)))
+          .copy(metaVals = metaVals((n, nBuckets))))
     }
   }
 
-  /** COMPACT: fold every live generation of both tables back into ONE
-    * dir pair and commit with the same atomic manifest rename appends
-    * use — the maintenance pass that restores the
-    * single-pruned-scan-per-table plan an append history erodes (each
-    * generation is its own parquet source in the serve plan). Rows are
-    * rewritten VERBATIM — the partition columns ride the read, no hash
-    * is recomputed — so serve-after-compact is bit-identical to
-    * serve-before (spec-pinned). No-op on a single-generation index
-    * (but still sweeps garbage a previously-failed best-effort sweep
-    * left). Single-writer, like append.
+  /** COMPACT both tables under the shared [[GenManifest.compact]], the
+    * bucket table through [[GenManifest.foldLive]]: rows rewrite
+    * VERBATIM (the partition columns ride the read), so
+    * serve-after-compact is bit-identical to serve-before (spec-pinned);
+    * tombstoned docs are purged, and a fold with every document
+    * retracted is refused.
     */
-  def compactDedupIndex(spark: SparkSession, dir: String): Unit = {
-    val lay = GenManifest.layout(spark, dir, Family)
-    val (bDirs, sDirs, tDirs) = (lay("bdirs"), lay("sdirs"), lay.tDirs)
-    if (bDirs.length <= 1 && sDirs.length <= 1 && tDirs.isEmpty) {
-      GenManifest.sweep(spark, dir, Family, lay.seq)
-      return
-    }
-    val newB = f"buckets-compact-${lay.seq + 1}%010d"
-    val newS = f"sets-compact-${lay.seq + 1}%010d"
-    // Tombstone-free rows rewrite VERBATIM; with retraction generations
-    // live the fold keeps only LIVE rows (physically purging taken-down
-    // docs) and the tombstones fold away. A fully-retracted fold is
-    // unrepresentable (a partitioned write of an empty frame leaves a
-    // schema-less dir) — fail loudly with the recovery path.
-    if (tDirs.isEmpty) {
-      // Verbatim fold: a single read-to-write pipeline — barriering the
-      // whole index here would checkpoint the table into executor
-      // storage for nothing (the common routine-append compaction).
-      GenManifest.readGenerations(spark, dir, bDirs)
-        .repartition(col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt").parquet(s"$dir/$newB")
-    } else {
-      // With tombstones the emptiness probe and the write must see ONE
-      // materialization (validate-before-destroy discipline).
-      val fb = GenManifest.foldedLive(spark, dir, bDirs, tDirs, "doc_id")
-        .barrier()
-      try {
-        require(fb.count() > 0L,
-          s"compactDedupIndex at $dir: every document is retracted — an " +
-            "all-empty index is unrepresentable; rebuild with " +
-            "buildDedupIndex when content returns")
-        fb.repartition(col("bkt"))
-          .write.mode("overwrite").partitionBy("bkt").parquet(s"$dir/$newB")
-      } finally Barrier.release(fb)
-    }
-    GenManifest.foldedLive(spark, dir, sDirs, tDirs, "doc_id")
-      .repartition(col("sbkt"))
-      .write.mode("overwrite").partitionBy("sbkt").parquet(s"$dir/$newS")
-    val (n, nBuckets) = metaOf(spark, dir, lay)
-    GenManifest.commit(spark, dir, Family,
+  def compactDedupIndex(spark: SparkSession, dir: String): Unit =
+    GenManifest.compact(spark, dir, Family) { lay =>
+      val newB = f"buckets-compact-${lay.seq + 1}%010d"
+      val newS = f"sets-compact-${lay.seq + 1}%010d"
+      GenManifest.foldLive(spark, dir, lay, "bdirs", "doc_id", "bkt", newB,
+        s"compactDedupIndex at $dir: every document is retracted — an " +
+          "all-empty index is unrepresentable; rebuild with " +
+          "buildDedupIndex when content returns")
+      // The set table skips foldLive's barrier: every doc with set rows
+      // has bucket rows (writeTables), so the bucket fold's emptiness
+      // guard already covers it, and a second materialization measured
+      // ×1.11 on near.compact_s (perfbench, traced trend_live_low).
+      GenManifest.writeParts(GenManifest.foldedLive(spark, dir, lay("sdirs"),
+        lay.tDirs, "doc_id"), "sbkt", dir, newS)
       lay.compacted("bdirs" -> newB, "sdirs" -> newS)
-        .copy(metaVals = metaVals(n, nBuckets)))
-  }
+        .copy(metaVals = metaVals(metaOf(spark, dir, lay)))
+    }
 
-  /** RETRACT documents from the index — the takedown shape the stats
-    * index proved with negated sums and the exact-dedup index with hash
-    * tombstones, here keyed by DOCUMENT id (the near-dup index's unit:
-    * its at-rest rows are per-doc LSH memberships and shingle sets, so
-    * a doc-id tombstone removes exactly that document's pairing power).
-    * The takedown ids become a tombstone generation under one atomic
-    * manifest commit; liveness resolves per doc as "newest insert
-    * generation outlives newest tombstone" — serves, the streaming
-    * twin, and the health census stop seeing the doc immediately, and a
-    * LATER append of the same doc_id (legal once the id is vacant)
-    * restores it.
-    *
-    * OVER-RETRACTION throws before anything is written (the family
-    * rule): every takedown id must be currently live — retracting a
-    * never-ingested or already-retracted doc is a caller bug, not a
-    * no-op. An empty takedown set is a no-op. [[compactDedupIndex]]
-    * physically purges tombstoned rows and folds the tombstones away.
-    * SINGLE-WRITER, like every GenManifest family. The tombstone table
-    * is takedown-sized by contract (broadcast at serve time; compact
-    * regularly under sustained takedown volume).
+  /** RETRACT documents — the shared [[GenManifest.retract]] keyed by
+    * DOCUMENT id (the near-dup index's unit: its at-rest rows are
+    * per-doc LSH memberships and shingle sets, so a doc-id tombstone
+    * removes exactly that document's pairing power). The membership
+    * check reads only the sets table's `sbkt` partitions the takedown
+    * ids hash to (the serve discipline — takedowns are bounded, so this
+    * reads slivers), and the tombstones partition the same way.
+    * A takedown of every document is accepted; [[compactDedupIndex]]
+    * refuses the empty fold.
     */
   def retractFromDedupIndex(docs: DataFrame, dir: String): Unit = {
     val spark = docs.sparkSession
     val lay = GenManifest.layout(spark, dir, Family)
-    val tDirs = lay.tDirs
     val (n, nBuckets) = metaOf(spark, dir, lay)
     val newT = f"tombs-${lay.seq + 1}%010d"
-    // BARRIERED, not cached (the exact-index takedown discipline): the
-    // membership check and the WRITTEN tombstone rows must derive from
-    // one materialized id set — a persist can re-evaluate from lineage
-    // and commit an id that never passed the require.
-    val h = docs.where(col("doc_id").isNotNull)
-      .select(col("doc_id")).distinct()
-      .barrier()
-    try {
-      if (h.isEmpty) {
-        System.err.println(
-          s"[graft] dedup-index retraction of an EMPTY set at $dir " +
-            "skipped (no commit)")
-      } else {
-        // Membership check over the sets table's pruned sbkt partitions
-        // (the serve discipline) — the takedown set is bounded, so this
-        // reads slivers.
-        val sbkts = h.select(sbktOf(col("doc_id"), nBuckets)
-            .cast("long").as("s"))
-          .distinct().collect().map(_.getLong(0)).toIndexedSeq
-        val ins = GenManifest.readWithGen(spark, dir, lay("sdirs"))
+    GenManifest.retract(spark, dir, Family, docs, "doc_id", newT,
+        Some("sbkt" -> sbktOf(col("doc_id"), nBuckets))) { h =>
+      val sbkts = h.select(sbktOf(col("doc_id"), nBuckets)
+          .cast("long").as("s"))
+        .distinct().collect().map(_.getLong(0)).toIndexedSeq
+      GenManifest.requireLive(spark, dir, lay, h,
+        GenManifest.readWithGen(spark, dir, lay("sdirs"))
           .filter(col("sbkt").isin(sbkts: _*))
-          .join(broadcast(h), Seq("doc_id"), "left_semi")
-        val live =
-          (if (tDirs.isEmpty) ins
-           else GenManifest.liveRows(ins, "doc_id",
-             GenManifest.tombMax(spark, dir, tDirs, "doc_id")))
-            .select(col("doc_id")).distinct()
-        val nonMembers = h.join(live, Seq("doc_id"), "left_anti").count()
-        require(nonMembers == 0L,
-          s"retractFromDedupIndex at $dir: $nonMembers of the takedown " +
-            "ids are not currently live (never ingested, or already " +
-            "retracted) — a takedown of absent documents is a caller " +
-            "bug, not a no-op")
-        h.withColumn("sbkt", sbktOf(col("doc_id"), nBuckets))
-          .repartition(col("sbkt"))
-          .write.mode("overwrite").partitionBy("sbkt")
-          .parquet(s"$dir/$newT")
-        GenManifest.commit(spark, dir, Family,
-          lay.retracted(newT).copy(metaVals = metaVals(n, nBuckets)))
-      }
-    } finally Barrier.release(h)
+          .join(broadcast(h), Seq("doc_id"), "left_semi"),
+        "doc_id", "retractFromDedupIndex", "documents")
+      lay.retracted(newT).copy(metaVals = metaVals((n, nBuckets)))
+    }
   }
 
-  /** INCREMENTAL CORPUS SYNC — apply a v1 → v2 snapshot transition to an
-    * index currently holding v1's ingested membership, so serves
-    * afterwards equal a [[buildDedupIndex]] over v2 EXACTLY: the daily
-    * ingest loop, composed from [[Curation.corpusDiff]] and the
-    * lifecycle ops this family already proves piecewise. The diff's
-    * classes map onto the index's DOC-keyed unit directly —
-    * `removed` and `changed` ids are retracted (one tombstone
-    * generation), `added` and `changed` rows are appended from v2 (one
-    * insert generation); a changed doc's new rows outlive its tombstone
-    * (newest-op-wins) while its OLD generation's rows die with it, so
-    * re-ingest-under-the-same-id is exactly the update semantics.
-    * `unchanged` docs are never touched, re-hashed, or re-shuffled.
-    *
-    * Membership bookkeeping: the retraction leg is intersected with
-    * v1's INGESTED membership (≥ 1 token — token-less docs never had
-    * at-rest rows), and the append leg writes nothing for docs that
-    * shingle to nothing in v2, so both legs respect the family's
-    * membership contract on any input (the over-retraction guard stays
-    * a real guard: it still throws if the index does not actually hold
-    * v1 — wrong v1 frame, or a sync already applied).
-    *
-    * TORN-SYNC RECOVERY: two atomic commits (retract, then append). A
-    * crash between them leaves membership at v1 ∖ (removed ∪ changed);
-    * recover by applying the append leg alone —
-    * `appendToDedupIndex(v2 ⋉ (added ∪ changed ids), dir)` — or
-    * rebuild. Re-running the full sync after a crash trips the
-    * over-retraction guard on the already-tombstoned ids (the guard
-    * cannot distinguish a torn sync from a wrong v1 frame; the
-    * hash-keyed [[ExactDedupIndex.syncIndex]] IS resumable because its
-    * unit carries that evidence).
-    *
-    * 100 TB shape: the diff's hash-only co-partitioned full-outer join
-    * runs ONCE (the transition set barriers; text never shuffles
-    * there); each leg broadcast-semi-joins its transition-sized id set
-    * against a snapshot scan, and tokenization only ever touches
-    * transition-sized rows (the retract leg's membership filter runs on
-    * a barriered sliver — an unbarriered filter would be PUSHED below
-    * the join onto the full v1 scan). The transition sets are
-    * broadcast-sized by contract, like every takedown table in the
-    * family. At most two atomic commits; an unchanged corpus is a
-    * complete no-op. Both snapshot frames must be deterministic under
-    * re-evaluation (source scans — the family's multi-scan rule).
-    * SINGLE-WRITER.
+  /** INCREMENTAL CORPUS SYNC — the shared [[GenManifest.sync]] over the
+    * text diff ([[Curation.corpusDiff]]'s identity), so serves afterwards
+    * equal a [[buildDedupIndex]] over v2 EXACTLY. The retraction leg is
+    * intersected with v1's INGESTED membership (≥ 1 token — token-less
+    * docs never had at-rest rows), and the append leg writes nothing for
+    * docs that shingle to nothing in v2. Torn-sync recovery is the
+    * append leg alone: `appendToDedupIndex(v2 ⋉ (added ∪ changed ids),
+    * dir)`.
     */
   def syncDedupIndex(v1Docs: DataFrame, v2Docs: DataFrame,
-      dir: String): Unit = {
-    // The diff's full-outer hash join runs ONCE: the transition rows
-    // (everything but `unchanged`) barrier as a transition-sized
-    // (doc_id, status) table both legs filter — two independent actions
-    // over the lazy diff would each re-pay the corpus-sized join.
-    val transitions = Curation.corpusDiff(v1Docs, v2Docs)
-      .where(col("status") =!= "unchanged")
-      .select(col("doc_id"), col("status"))
-      .barrier()
-    try {
-      val retractIds = transitions
-        .filter(col("status").isin("removed", "changed"))
-        .select(col("doc_id"))
-      // Intersect with v1's INGESTED membership (≥ 1 token) WITHOUT
-      // tokenizing the whole snapshot: the broadcast semi join reduces
-      // v1 to the transition-sized rows first, those rows barrier (a
-      // deterministic-predicate filter would otherwise be pushed below
-      // the join onto the v1 scan — Catalyst pushdown ignores operator
-      // order), and only the materialized sliver pays wsTokens.
-      val retractDocs = v1Docs.where(col("doc_id").isNotNull)
-        .select(col("doc_id"), col("text"))
-        .join(broadcast(retractIds), Seq("doc_id"), "left_semi")
-        .barrier()
-      try {
-        retractFromDedupIndex(
-          retractDocs.where(
-            size(TextAnalysis.wsTokens(col("text"))) > 0), dir)
-      } finally Barrier.release(retractDocs)
-      val appendIds = transitions
-        .filter(col("status").isin("added", "changed"))
-        .select(col("doc_id"))
-      appendToDedupIndex(
-        v2Docs.join(broadcast(appendIds), Seq("doc_id"), "left_semi"), dir)
-    } finally Barrier.release(transitions)
-  }
+      dir: String): Unit =
+    GenManifest.sync(v1Docs, v2Docs, md5(coalesce(col("text"), lit(""))),
+        ingested = Some("text" ->
+          (size(TextAnalysis.wsTokens(col("text"))) > 0)))(
+      retractFromDedupIndex(_, dir), appendToDedupIndex(_, dir))
 
   /** The ingest ACTION over [[dedupIndexPairs]]: every delta document
     * with its keep verdict. BASE WINS unconditionally — a delta doc
@@ -565,11 +415,9 @@ object DedupIndex {
     * takedown-heavy history needs (dead rows still occupy both at-rest
     * tables until [[compactDedupIndex]] purges them).
     */
-  def takedownHealth(spark: SparkSession, dir: String): DataFrame = {
-    val lay = GenManifest.layout(spark, dir, Family)
-    GenManifest.takedownCensus(spark, dir, lay("sdirs"), lay.tDirs, "doc_id",
+  def takedownHealth(spark: SparkSession, dir: String): DataFrame =
+    GenManifest.takedownCensus(spark, dir, Family, "sdirs", "doc_id",
       "live_docs", "dead_docs")
-  }
 
   /** Bucket-health report over the persisted layout — the dedup analog
     * of [[Similarity.indexHealth]]'s retrain signal: per LSH band, the
@@ -658,16 +506,6 @@ object DedupIndex {
             col("jaccard")))
         .barrier()
     } finally { Barrier.release(internal); Barrier.release(cross) }
-  }
-
-  /** The index's meta row (shingle n, bucket count) — ONE reader for
-    * the append/serve/streaming paths, so a meta schema evolution (or a
-    * curated foreign-meta diagnostic) lands once, not three times.
-    */
-  private def readMeta(spark: SparkSession, dir: String,
-      metaDir: String): (Int, Int) = {
-    val meta = spark.read.parquet(s"$dir/$metaDir").head()
-    (meta.getAs[Int]("n"), meta.getAs[Int]("buckets"))
   }
 
   /** The serve, with its two legs kept apart and MATERIALIZED: the

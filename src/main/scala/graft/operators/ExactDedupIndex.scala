@@ -446,10 +446,9 @@ object ExactDedupIndex {
       .select(md5(coalesce(col("text"), lit(""))).as("text_hash"))
       .distinct()
     Barrier.withCached(hs) { h =>
-      h.withColumn("hbkt", hbktOf(col("text_hash"), buckets))
-        .repartition(col("hbkt"))
-        .write.mode("overwrite").partitionBy("hbkt")
-        .parquet(s"$dir/hashes")
+      GenManifest.writeParts(
+        h.withColumn("hbkt", hbktOf(col("text_hash"), buckets)), "hbkt",
+        dir, "hashes")
       val n = h.count()
       // shards > 1 is the past-the-conf-cap path: N per-shard filters
       // (expectedItems/numBits are PER SHARD), probed through the
@@ -530,11 +529,9 @@ object ExactDedupIndex {
     * until [[compactIndex]] purges the rows and rebuilds the filter —
     * dead_ppm is both the compact-now and the bloom-precision signal.
     */
-  def takedownHealth(spark: SparkSession, dir: String): DataFrame = {
-    val lay = GenManifest.layout(spark, dir, Family)
-    GenManifest.takedownCensus(spark, dir, lay("hdirs"), lay.tDirs,
-      "text_hash", "live_hashes", "dead_hashes")
-  }
+  def takedownHealth(spark: SparkSession, dir: String): DataFrame =
+    GenManifest.takedownCensus(spark, dir, Family, "hdirs", "text_hash",
+      "live_hashes", "dead_hashes")
 
   /** Append an ingested batch's hashes as a new generation: per-
     * generation-distinct hash rows (bucketed with the build's bucket
@@ -558,46 +555,39 @@ object ExactDedupIndex {
     * re-evaluate identically on executor loss — the bloomClean rule).
     */
   private def appendHashes(spark: SparkSession, hs: DataFrame,
-      dir: String): Unit = {
-    val lay = GenManifest.layout(spark, dir, Family)
-    val meta = spark.read.parquet(s"$dir/${lay.meta}").head()
-    val nHashes = meta.getAs[Long]("n_hashes")
-    require(nHashes > 0,
-      s"index at $dir has an empty base — rebuild with buildIndex " +
-        "instead of appending")
-    val buckets = meta.getAs[Int]("buckets")
-    val expectedItems = meta.getAs[Long]("expected_items")
-    val numBits = meta.getAs[Long]("num_bits")
-    val baseBlooms = readBlooms(meta)
-    val newH = s"hashes-${lay.seq + 1}"
-    val newM = s"meta-${lay.seq + 1}"
-    val (nNew, deltaBlooms) = Barrier.withCached(hs) { h =>
-      h.withColumn("hbkt", hbktOf(col("text_hash"), buckets))
-        .repartition(col("hbkt"))
-        .write.mode("overwrite").partitionBy("hbkt")
-        .parquet(s"$dir/$newH")
-      // The delta's filter MUST use the base's geometry (shard count +
-      // per-shard sizing) — mergeSharded is per-shard OR, exact only at
-      // identical geometry.
-      (h.count(), Bloom.shardedBloomBytes(h, col("text_hash"),
-        expectedItems, numBits, baseBlooms.length))
+      dir: String): Unit =
+    GenManifest.append(spark, dir, Family) { lay =>
+      val meta = spark.read.parquet(s"$dir/${lay.meta}").head()
+      val nHashes = meta.getAs[Long]("n_hashes")
+      require(nHashes > 0,
+        s"index at $dir has an empty base — rebuild with buildIndex " +
+          "instead of appending")
+      val buckets = meta.getAs[Int]("buckets")
+      val expectedItems = meta.getAs[Long]("expected_items")
+      val numBits = meta.getAs[Long]("num_bits")
+      val baseBlooms = readBlooms(meta)
+      val newH = s"hashes-${lay.seq + 1}"
+      val newM = s"meta-${lay.seq + 1}"
+      val (nNew, deltaBlooms) = Barrier.withCached(hs) { h =>
+        GenManifest.writeParts(
+          h.withColumn("hbkt", hbktOf(col("text_hash"), buckets)), "hbkt",
+          dir, newH)
+        // The delta's filter MUST use the base's geometry (shard count +
+        // per-shard sizing) — mergeSharded is per-shard OR, exact only at
+        // identical geometry.
+        (h.count(), Bloom.shardedBloomBytes(h, col("text_hash"),
+          expectedItems, numBits, baseBlooms.length))
+      }
+      if (nNew == 0L) {
+        val (fs, root) = GenManifest.fsRoot(spark, dir)
+        fs.delete(new org.apache.hadoop.fs.Path(root, newH), true)
+        None
+      } else {
+        writeMeta(spark, dir, newM, nHashes + nNew, buckets, expectedItems,
+          numBits, Bloom.mergeSharded(baseBlooms, deltaBlooms))
+        Some(lay.appended("hdirs" -> newH).copy(metaDir = Some(newM)))
+      }
     }
-    val (fs, root) = GenManifest.fsRoot(spark, dir)
-    if (nNew == 0L) {
-      fs.delete(new org.apache.hadoop.fs.Path(root, newH), true)
-      System.err.println(
-        s"[graft] exact-index append of an EMPTY delta to $dir skipped " +
-          "(no commit)")
-    } else {
-      writeMeta(spark, dir, newM, nHashes + nNew, buckets, expectedItems,
-        numBits, Bloom.mergeSharded(baseBlooms, deltaBlooms))
-      // Tombstones carry over: a re-ingested hash's NEW generation
-      // outlives any older tombstone, so the append alone restores its
-      // membership (resolveMembers' newest-op-wins rule).
-      GenManifest.commit(spark, dir, Family,
-        lay.appended("hdirs" -> newH).copy(metaDir = Some(newM)))
-    }
-  }
 
   /** Streaming ingest-time EXACT-dup alerts against the frozen index —
     * the exact-tier sibling of [[DedupIndex.streamingIndexDups]]: one
@@ -620,7 +610,6 @@ object ExactDedupIndex {
   def streamingExactDups(spark: SparkSession, dir: String,
       stream: DataFrame): DataFrame = {
     val lay = GenManifest.layout(spark, dir, Family)
-    val (hDirs, tDirs) = (lay("hdirs"), lay.tDirs)
     val meta = spark.read.parquet(s"$dir/${lay.meta}").head()
     require(meta.getAs[Long]("n_hashes") > 0, s"index at $dir is empty")
     val blooms = readBlooms(meta)
@@ -635,14 +624,8 @@ object ExactDedupIndex {
     // broadcast of the takedown-sized tombMax table, and the left_semi
     // below absorbs the duplicate live rows (a hash alerts iff SOME
     // insert generation outlives its newest tombstone — equivalent).
-    val hashes =
-      if (tDirs.isEmpty)
-        GenManifest.readGenerations(spark, dir, hDirs)
-          .select(col("text_hash"))
-      else GenManifest.liveRows(
-          GenManifest.readWithGen(spark, dir, hDirs), "text_hash",
-          GenManifest.tombMax(spark, dir, tDirs, "text_hash"))
-        .select(col("text_hash"))
+    val hashes = GenManifest.foldedLive(spark, dir, lay("hdirs"), lay.tDirs,
+      "text_hash").select(col("text_hash"))
     bloomPositives(
         stream
           // Null-id guard, mirroring the other streaming twins: a
@@ -685,9 +668,6 @@ object ExactDedupIndex {
   def retractFromIndex(docs: DataFrame, dir: String): Unit =
     retractHashes(docs.sparkSession, hashesOf(docs), dir)
 
-  /** Hash-level retraction internals — `hs` must be a frame of DISTINCT
-    * `text_hash` rows; it is barriered here before anything reads it.
-    */
   /** Bucket-pruned membership slivers of a (BARRIERED) hash set:
     * (insert rows, tombstone rows) among the generations, both bounded
     * by the set — the one definition of the probe discipline
@@ -720,43 +700,30 @@ object ExactDedupIndex {
     }
   }
 
+  /** Hash-level retraction internals — the shared
+    * [[GenManifest.retract]] keyed by `text_hash` (`hs` holds the
+    * takedown hashes), with the membership check over the SAME
+    * pruned-bucket slivers serves read (the takedown set is bounded) and
+    * the tombstones partitioned like the hash table.
+    */
   private def retractHashes(spark: SparkSession, hs: DataFrame,
       dir: String): Unit = {
     val lay = GenManifest.layout(spark, dir, Family)
     val buckets =
       spark.read.parquet(s"$dir/${lay.meta}").head().getAs[Int]("buckets")
     val newT = s"tombs-${lay.seq + 1}"
-    // BARRIERED, not cached (the indexClean discipline): the bucket
-    // literals, the over-retraction membership check, and the WRITTEN
-    // tombstone rows must all derive from the same materialized hash
-    // set — a persist can re-evaluate from lineage after executor loss,
-    // and a nondeterministic takedown frame could then commit a
-    // tombstone that never passed the require (or silently omit a
-    // checked one: a takedown the caller believes happened, un-done).
-    val h = hs.barrier()
-    try {
-      if (h.isEmpty) {
-        System.err.println(
-          s"[graft] exact-index retraction of an EMPTY set at $dir " +
-            "skipped (no commit)")
-      } else {
-        // Membership check over the SAME pruned-bucket discipline serves
-        // use — the takedown set is bounded, so this reads slivers.
-        val (ins, tmb) = prunedSlivers(spark, dir, lay, buckets, h)
-        val nonMembers = h.join(resolveMembers(ins, tmb),
-          Seq("text_hash"), "left_anti").count()
-        require(nonMembers == 0L,
-          s"retractFromIndex at $dir: $nonMembers of the takedown hashes " +
-            "are not current members (never ingested, or already " +
-            "retracted) — a takedown of absent content is a caller bug, " +
-            "not a no-op")
-        h.withColumn("hbkt", hbktOf(col("text_hash"), buckets))
-          .repartition(col("hbkt"))
-          .write.mode("overwrite").partitionBy("hbkt")
-          .parquet(s"$dir/$newT")
-        GenManifest.commit(spark, dir, Family, lay.retracted(newT))
-      }
-    } finally Barrier.release(h)
+    GenManifest.retract(spark, dir, Family, hs, "text_hash", newT,
+        Some("hbkt" -> hbktOf(col("text_hash"), buckets))) { h =>
+      val (ins, tmb) = prunedSlivers(spark, dir, lay, buckets, h)
+      val nonMembers = h.join(resolveMembers(ins, tmb),
+        Seq("text_hash"), "left_anti").count()
+      require(nonMembers == 0L,
+        s"retractFromIndex at $dir: $nonMembers of the takedown hashes " +
+          "are not current members (never ingested, or already " +
+          "retracted) — a takedown of absent content is a caller bug, " +
+          "not a no-op")
+      lay.retracted(newT)
+    }
   }
 
   /** INCREMENTAL CORPUS SYNC — apply a v1 → v2 snapshot transition to an
@@ -782,7 +749,9 @@ object ExactDedupIndex {
     * Mechanics: one tombstone generation for the dead hashes, one
     * append generation + OR-merged bloom for the born hashes — two
     * commits at most, each atomic; an unchanged corpus is a complete
-    * no-op.
+    * no-op. It keeps its own code instead of [[GenManifest.sync]]: its
+    * unit is the set difference of two hash sets, classified against
+    * current membership, not a per-key transition.
     *
     * RESUMABLE: both legs are filtered against CURRENT membership
     * before committing — already-tombstoned dead hashes and
@@ -861,54 +830,46 @@ object ExactDedupIndex {
     * fold carries it verbatim (it already covers the union).
     * Serve-after-compact ≡ serve-before bit-identically (membership is
     * unchanged); plan-wise the serve returns to exactly one pruned
-    * scan. No-op fold on a single-generation tombstone-free index, but
-    * the sweep still runs (garbage from a previously-failed best-effort
-    * sweep would otherwise live forever). Single-writer, like append.
+    * scan. The sweep-only prologue and the commit are the shared
+    * [[GenManifest.compact]]; the fold is this family's own, hash-keyed
+    * and bloom-rebuilding, so it does not use [[GenManifest.foldLive]].
     */
-  def compactIndex(spark: SparkSession, dir: String): Unit = {
-    val lay = GenManifest.layout(spark, dir, Family)
-    val (hDirs, tDirs) = (lay("hdirs"), lay.tDirs)
-    if (hDirs.length <= 1 && tDirs.isEmpty) {
-      GenManifest.sweep(spark, dir, Family, lay.seq)
-      return
+  def compactIndex(spark: SparkSession, dir: String): Unit =
+    GenManifest.compact(spark, dir, Family) { lay =>
+      val meta = spark.read.parquet(s"$dir/${lay.meta}").head()
+      val buckets = meta.getAs[Int]("buckets")
+      val expectedItems = meta.getAs[Long]("expected_items")
+      val numBits = meta.getAs[Long]("num_bits")
+      val newH = s"hashes-${lay.seq + 1}"
+      val newM = s"meta-${lay.seq + 1}"
+      val folded =
+        if (lay.tDirs.isEmpty)
+          GenManifest.readGenerations(spark, dir, lay("hdirs"))
+            .select(col("text_hash"), col("hbkt")).distinct()
+        else resolveMembers(GenManifest.readWithGen(spark, dir, lay("hdirs")),
+            GenManifest.readWithGen(spark, dir, lay.tDirs))
+          .withColumn("hbkt", hbktOf(col("text_hash"), buckets))
+      val (n, blooms) = Barrier.withCached(folded) { f =>
+        val cnt = f.count()
+        // A fully-retracted index folds to ZERO members — the
+        // GenManifest.foldLive emptiness rule, over this family's
+        // hash-keyed fold.
+        require(cnt > 0L,
+          s"compactIndex at $dir: every hash is retracted — an all-empty " +
+            "index is unrepresentable; rebuild with buildIndex when " +
+            "content returns")
+        GenManifest.writeParts(f, "hbkt", dir, newH)
+        // Geometry carries over (shard count + per-shard sizing): the
+        // tombstoned rebuild restores the FPR the guaranteed-positive
+        // dead hashes had eroded.
+        val bf =
+          if (lay.tDirs.isEmpty) readBlooms(meta)
+          else Bloom.shardedBloomBytes(f, col("text_hash"), expectedItems,
+            numBits, readBlooms(meta).length)
+        (cnt, bf)
+      }
+      writeMeta(spark, dir, newM, n, buckets, expectedItems, numBits, blooms)
+      lay.compacted("hdirs" -> newH).copy(metaDir = Some(newM))
     }
-    val meta = spark.read.parquet(s"$dir/${lay.meta}").head()
-    val buckets = meta.getAs[Int]("buckets")
-    val expectedItems = meta.getAs[Long]("expected_items")
-    val numBits = meta.getAs[Long]("num_bits")
-    val newH = s"hashes-${lay.seq + 1}"
-    val newM = s"meta-${lay.seq + 1}"
-    val folded =
-      if (tDirs.isEmpty)
-        GenManifest.readGenerations(spark, dir, hDirs)
-          .select(col("text_hash"), col("hbkt")).distinct()
-      else resolveMembers(GenManifest.readWithGen(spark, dir, hDirs),
-          GenManifest.readWithGen(spark, dir, tDirs))
-        .withColumn("hbkt", hbktOf(col("text_hash"), buckets))
-    val (n, blooms) = Barrier.withCached(folded) { f =>
-      val cnt = f.count()
-      // A fully-retracted index folds to ZERO members: a partitioned
-      // write of an empty frame leaves a parquet-less dir that poisons
-      // every later read (the build guard's reason) — fail loudly with
-      // the recovery path instead.
-      require(cnt > 0L,
-        s"compactIndex at $dir: every hash is retracted — an all-empty " +
-          "index is unrepresentable; rebuild with buildIndex when " +
-          "content returns")
-      f.repartition(col("hbkt"))
-        .write.mode("overwrite").partitionBy("hbkt").parquet(s"$dir/$newH")
-      // Geometry carries over (shard count + per-shard sizing): the
-      // tombstoned rebuild restores the FPR the guaranteed-positive
-      // dead hashes had eroded.
-      val bf =
-        if (tDirs.isEmpty) readBlooms(meta)
-        else Bloom.shardedBloomBytes(f, col("text_hash"), expectedItems,
-          numBits, readBlooms(meta).length)
-      (cnt, bf)
-    }
-    writeMeta(spark, dir, newM, n, buckets, expectedItems, numBits, blooms)
-    GenManifest.commit(spark, dir, Family,
-      lay.compacted("hdirs" -> newH).copy(metaDir = Some(newM)))
-  }
 
 }

@@ -2,7 +2,9 @@ package graft.operators
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import graft.operators.Barrier.BarrierOps
 
 /** Generation-manifest codec and lifecycle shared by the six persisted
   * index families ([[ExactDedupIndex]], [[DedupIndex]], [[MediaIndex]],
@@ -17,9 +19,12 @@ import org.apache.spark.sql.SparkSession
   * reads or writes a manifest — the [[layout]] read (including the
   * adoption of a pre-manifest index as generation 0), the decode with
   * its family guard, the [[commit]], and the [[sweep]] — so a format,
-  * guard or crash-safety fix lands exactly once. What a family's dirs
-  * HOLD (row encodings, bucket functions, the mapping from
-  * [[Layout.metaVals]] to its geometry) stays with the family.
+  * guard or crash-safety fix lands exactly once. On top of the codec
+  * sit the families' liveness kernels and their lifecycle skeletons
+  * ([[append]], [[retract]], [[compact]] with [[foldLive]], [[sync]]),
+  * each written once. What a family's dirs HOLD (row encodings, bucket
+  * functions, the mapping from [[Layout.metaVals]] to its geometry) and
+  * its membership probe stay with the family.
   *
   * Commit protocol (the [[graft.streaming.IncrementalTrend]] pattern):
   * data dirs exist on disk BEFORE any manifest references them, and the
@@ -301,9 +306,9 @@ private[graft] object GenManifest {
             s"commit re-collects): ${e.getMessage}")
     }
 
-  // ---- retraction kernels (shared by the doc-keyed tombstone families:
-  // DedupIndex + MediaIndex; ExactDedupIndex keeps its hash-keyed
-  // resolveMembers, which aggregates per hash rather than per row) ------
+  // ---- retraction kernels (the key-tombstone families' ONE liveness
+  // definition; ExactDedupIndex keeps its hash-keyed resolveMembers,
+  // which aggregates per hash rather than per row) ---------------------
 
   /** The generation number a data dir's rows belong to — encoded in the
     * dir name (an unsuffixed build dir is generation 0; "-<seq>" names
@@ -326,12 +331,12 @@ private[graft] object GenManifest {
     * wrong values.
     */
   def readWithGen(spark: SparkSession, dir: String,
-      dirs: Seq[String]): org.apache.spark.sql.DataFrame =
+      dirs: Seq[String]): DataFrame =
     dirs.map { d =>
       val t = spark.read.parquet(s"$dir/$d")
       Skew.requireScratchFree(t, Seq("__g"),
         "generation read (retraction scratch)")
-      t.withColumn("__g", org.apache.spark.sql.functions.lit(genOf(d)))
+      t.withColumn("__g", lit(genOf(d)))
     }.reduce(_.unionByName(_))
 
   /** Per-key newest tombstone generation `(keyCol, __tg)` — takedown-
@@ -339,20 +344,16 @@ private[graft] object GenManifest {
     * every use.
     */
   def tombMax(spark: SparkSession, dir: String, tDirs: Seq[String],
-      keyCol: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, max}
+      keyCol: String): DataFrame =
     readWithGen(spark, dir, tDirs)
       .groupBy(col(keyCol)).agg(max(col("__g")).as("__tg"))
-  }
 
   /** Liveness filter over generation rows carrying `__g`: a key's row
     * is live iff its insert generation outlives the key's newest
     * tombstone (re-ingest after takedown restores membership). `tm` is
     * the [[tombMax]] table for the SAME `keyCol`.
     */
-  def liveRows(rows: org.apache.spark.sql.DataFrame, keyCol: String,
-      tm: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+  def liveRows(rows: DataFrame, keyCol: String, tm: DataFrame): DataFrame = {
     Skew.requireScratchFree(rows, Seq("__tid", "__tg"),
       "liveness resolution (retraction scratch)")
     rows.join(broadcast(tm.withColumnRenamed(keyCol, "__tid")),
@@ -366,9 +367,8 @@ private[graft] object GenManifest {
     * EVERY family at once (each had its own verbatim copy).
     */
   def readGenerations(spark: SparkSession, dir: String,
-      dirs: Seq[String]): org.apache.spark.sql.DataFrame =
-    dirs.map(d => spark.read.parquet(s"$dir/$d"))
-      .reduce(_.unionByName(_))
+      dirs: Seq[String]): DataFrame =
+    dirs.map(d => spark.read.parquet(s"$dir/$d")).reduce(_.unionByName(_))
 
   /** The ONE liveness fold for a doc-/key-keyed tombstone family: a
     * bare generation read when tombstone-free (the common case — plan
@@ -377,7 +377,7 @@ private[graft] object GenManifest {
     * dedup and media families (it was a hand-synced pair).
     */
   def foldedLive(spark: SparkSession, dir: String, dirs: Seq[String],
-      tDirs: Seq[String], keyCol: String): org.apache.spark.sql.DataFrame =
+      tDirs: Seq[String], keyCol: String): DataFrame =
     if (tDirs.isEmpty) readGenerations(spark, dir, dirs)
     else liveRows(readWithGen(spark, dir, dirs), keyCol,
       tombMax(spark, dir, tDirs, keyCol))
@@ -390,10 +390,7 @@ private[graft] object GenManifest {
     */
   def readPrunedLive(spark: SparkSession, dir: String, dirs: Seq[String],
       partCol: String, keys: Seq[Long], tDirs: Seq[String],
-      keyCol: String,
-      tm: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
+      keyCol: String, tm: Option[DataFrame] = None): DataFrame =
     if (tDirs.isEmpty)
       readGenerations(spark, dir, dirs).filter(col(partCol).isin(keys: _*))
     else liveRows(
@@ -402,7 +399,6 @@ private[graft] object GenManifest {
       // tombMax (r18 fusion) instead of rebuilding + re-broadcasting
       // the takedown table per read.
       keyCol, tm.getOrElse(tombMax(spark, dir, tDirs, keyCol)))
-  }
 
   /** Liveness CLASSIFICATION over rows carrying a generation column —
     * the newest-insert-outlives-newest-tombstone rule as an appended
@@ -413,10 +409,8 @@ private[graft] object GenManifest {
     * max for pre-folded frames); `tm` is the [[tombMax]] table for the
     * SAME `keyCol`, broadcast here like every takedown-sized join.
     */
-  def classifyLiveness(rows: org.apache.spark.sql.DataFrame,
-      keyCol: String, genCol: String,
-      tm: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+  def classifyLiveness(rows: DataFrame, keyCol: String, genCol: String,
+      tm: DataFrame): DataFrame = {
     Skew.requireScratchFree(rows, Seq("__tid", "__tg", "__live"),
       "liveness classification (retraction scratch)")
     rows.join(broadcast(tm.withColumnRenamed(keyCol, "__tid")),
@@ -426,8 +420,8 @@ private[graft] object GenManifest {
       .drop("__tid", "__tg")
   }
 
-  /** Takedown-pressure census over a tombstone family's at-rest keys —
-    * ONE row (`liveName`, `deadName`, dead_ppm): how many distinct keys
+  /** Takedown-pressure census over the at-rest keys of `fam`'s
+    * `dirKey` tables — ONE row (`liveName`, `deadName`, dead_ppm): how many distinct keys
     * are live vs tombstoned (dead keys still occupy files and inflate
     * every scan until the family's compact purges them), with the dead
     * share in exact integer parts-per-million. The key-level liveness
@@ -438,10 +432,10 @@ private[graft] object GenManifest {
     * Tombstone-free indexes report all-live with zero extra work (no
     * join is planned at all).
     */
-  def takedownCensus(spark: SparkSession, dir: String, dirs: Seq[String],
-      tDirs: Seq[String], keyCol: String, liveName: String,
-      deadName: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
+  def takedownCensus(spark: SparkSession, dir: String, fam: Family,
+      dirKey: String, keyCol: String, liveName: String,
+      deadName: String): DataFrame = {
+    val lay = layout(spark, dir, fam)
     // The output names never reach SQL text: the arithmetic runs over
     // FIXED internal names and the caller's names attach by rename — a
     // name needing quoting (or spelling an expression) can't silently
@@ -451,12 +445,12 @@ private[graft] object GenManifest {
         liveName != "dead_ppm" && deadName != "dead_ppm",
       s"takedownCensus output names collide with kernel scratch or the " +
         s"fixed dead_ppm column: ($liveName, $deadName)")
-    val perKey = readWithGen(spark, dir, dirs)
+    val perKey = readWithGen(spark, dir, lay(dirKey))
       .groupBy(col(keyCol)).agg(max(col("__g")).as("__mg"))
     val classified =
-      if (tDirs.isEmpty) perKey.withColumn("__live", lit(true))
+      if (lay.tDirs.isEmpty) perKey.withColumn("__live", lit(true))
       else classifyLiveness(perKey, keyCol, "__mg",
-        tombMax(spark, dir, tDirs, keyCol))
+        tombMax(spark, dir, lay.tDirs, keyCol))
     classified.agg(
         coalesce(sum(when(col("__live"), lit(1L)).otherwise(lit(0L))),
           lit(0L)).as("__lv"),
@@ -471,5 +465,206 @@ private[graft] object GenManifest {
           "END AS BIGINT) AS dead_ppm")
       .withColumnRenamed("__lv", liveName)
       .withColumnRenamed("__dd", deadName)
+  }
+
+  // ---- lifecycle skeletons (append / retract / compact / sync) -------
+  //
+  // Each family's op is one of these plus what the family alone knows:
+  // its row encoding, partition column, integer meta and membership
+  // probe. Where families differ by policy (Lex and ANN refuse a
+  // takedown that would empty the index; Stats retracts by negated
+  // sums; Exact's sync is hash-keyed and resumable), the difference
+  // lives in the family's hook, not here.
+
+  /** Write `rows` as the generation dir `dir/name`, parquet-partitioned
+    * by `partCol` (one file set per partition value).
+    */
+  def writeParts(rows: DataFrame, partCol: String, dir: String,
+      name: String): Unit =
+    rows.repartition(col(partCol))
+      .write.mode("overwrite").partitionBy(partCol).parquet(s"$dir/$name")
+
+  /** APPEND: `write` writes the delta's dirs for generation `lay.seq + 1`
+    * and returns the layout to commit — or None when the delta held
+    * nothing, which commits nothing: a 0-row generation dir is
+    * schema-less and would poison every later read (the ANN empty-delta
+    * lesson). Tombstones carry over: a re-ingested key's new generation
+    * outlives its older tombstone, so the append alone restores its
+    * membership (newest-op-wins). SINGLE-WRITER.
+    */
+  def append(spark: SparkSession, dir: String, fam: Family)(
+      write: Layout => Option[Layout]): Unit =
+    write(layout(spark, dir, fam)) match {
+      case Some(next) => commit(spark, dir, fam, next)
+      case None => System.err.println(s"[graft] ${fam.name}-index append " +
+        s"of an EMPTY delta to $dir skipped (no commit)")
+    }
+
+  /** RETRACT for the key-tombstone families (dedup, media, lex, ANN):
+    * the takedown keys become ONE tombstone generation under one atomic
+    * commit. Liveness then resolves per key as "newest insert
+    * generation outlives newest tombstone", so every serve, streaming
+    * twin and census stops seeing a key the moment the manifest
+    * renames, and a LATER append of the vacant key restores it.
+    *
+    * The distinct non-null keys are BARRIERED, not cached: the family's
+    * membership check and the WRITTEN tombstone rows must derive from
+    * one materialized set (a persist can re-evaluate from lineage and
+    * commit a key that never passed the check). An empty set commits
+    * nothing. `checked` runs the family's OVER-RETRACTION guard — every
+    * key must be currently live; retracting a never-ingested or
+    * already-retracted key is a caller bug, not a no-op — plus any
+    * guard of its own, writes whatever else the generation carries, and
+    * returns the layout to commit. The tombstone rows land in
+    * `tombDir`, partitioned when `tombPart` names a column. The
+    * tombstone table is takedown-sized by contract (broadcast at every
+    * serve; compact regularly under sustained takedowns), and the
+    * family's compact physically purges tombstoned rows. SINGLE-WRITER.
+    */
+  def retract(spark: SparkSession, dir: String, fam: Family,
+      takedown: DataFrame, key: String, tombDir: String,
+      tombPart: Option[(String, Column)] = None)(
+      checked: DataFrame => Layout): Unit = {
+    val h = takedown.where(col(key).isNotNull).select(col(key)).distinct()
+      .barrier()
+    try {
+      if (h.isEmpty)
+        System.err.println(s"[graft] ${fam.name}-index retraction of an " +
+          s"EMPTY set at $dir skipped (no commit)")
+      else {
+        val next = checked(h)
+        tombPart match {
+          case Some((c, e)) => writeParts(h.withColumn(c, e), c, dir, tombDir)
+          case None => h.write.mode("overwrite").parquet(s"$dir/$tombDir")
+        }
+        commit(spark, dir, fam, next)
+      }
+    } finally Barrier.release(h)
+  }
+
+  /** The over-retraction guard over insert rows: `ins` carries the
+    * takedown keys' insert rows with `__g` (read over whatever slivers
+    * the family can prune to), and every key of `h` must have a live
+    * one.
+    */
+  def requireLive(spark: SparkSession, dir: String, lay: Layout,
+      h: DataFrame, ins: DataFrame, key: String, op: String,
+      noun: String): Unit = {
+    val live = (if (lay.tDirs.isEmpty) ins
+      else liveRows(ins, key, tombMax(spark, dir, lay.tDirs, key)))
+      .select(col(key)).distinct()
+    val nonMembers = h.join(live, Seq(key), "left_anti").count()
+    require(nonMembers == 0L,
+      s"$op at $dir: $nonMembers of the takedown ids are not currently " +
+        "live (never ingested, or already retracted) — a takedown of " +
+        s"absent $noun is a caller bug, not a no-op")
+  }
+
+  /** COMPACT: fold every live generation back into one dir per key and
+    * commit with the same atomic rename appends use — the maintenance
+    * pass that restores the single-scan-per-table plan an append
+    * history erodes (each generation is its own parquet source in a
+    * serve plan). An index of one generation per key and no tombstones
+    * has nothing to fold, but the sweep still runs: garbage a
+    * previously failed best-effort sweep left would otherwise live on.
+    * `fold` writes the folded dirs for generation `lay.seq + 1` and
+    * returns the layout to commit. SINGLE-WRITER, like append.
+    */
+  def compact(spark: SparkSession, dir: String, fam: Family)(
+      fold: Layout => Layout): Unit = {
+    val lay = layout(spark, dir, fam)
+    if (lay.dirs.values.forall(_.length <= 1) && lay.tDirs.isEmpty)
+      sweep(spark, dir, fam, lay.seq)
+    else commit(spark, dir, fam, fold(lay))
+  }
+
+  /** The compact fold of one key-tombstone dir list into `dir/to`,
+    * partitioned by `partCol`. Tombstone-free rows rewrite VERBATIM
+    * (the partition column rides the read; no hash is recomputed, so
+    * serve-after-compact is bit-identical to serve-before) as ONE
+    * read-to-write pipeline — barriering the whole index would
+    * checkpoint it into executor storage for nothing. With tombstones
+    * the fold keeps only LIVE rows (physically purging taken-down keys)
+    * and the emptiness probe and the write share ONE materialization
+    * (validate-before-write): a fully-retracted fold is unrepresentable
+    * — a partitioned write of an empty frame leaves a schema-less dir
+    * that poisons every later read — so it fails with `emptied`.
+    */
+  def foldLive(spark: SparkSession, dir: String, lay: Layout,
+      dirKey: String, key: String, partCol: String, to: String,
+      emptied: => String): Unit =
+    if (lay.tDirs.isEmpty)
+      writeParts(readGenerations(spark, dir, lay(dirKey)), partCol, dir, to)
+    else {
+      val f = foldedLive(spark, dir, lay(dirKey), lay.tDirs, key).barrier()
+      try {
+        require(f.count() > 0L, emptied)
+        writeParts(f, partCol, dir, to)
+      } finally Barrier.release(f)
+    }
+
+  /** INCREMENTAL CORPUS SYNC: apply a v1 → v2 snapshot transition to an
+    * index holding v1's ingested membership, so serves afterwards equal
+    * a build over v2 EXACTLY. [[Curation.corpusDiffBy]] classifies each
+    * `key` by `identity` (evaluated per snapshot row, non-null); the
+    * removed + changed keys go to `retract`, then v2's added + changed
+    * rows go to `append`. A changed key's old generation dies with its
+    * tombstone while the re-ingest outlives it (newest-op-wins), so
+    * re-ingest under the same key is exactly the update semantics;
+    * `unchanged` keys are never touched, re-hashed or re-shuffled.
+    *
+    * `ingested` = (content column, predicate) intersects the retract
+    * leg with v1's INGESTED membership (e.g. docs with at least one
+    * token): `retract` then receives the (key, content) rows of v1 that
+    * satisfy it — so a never-ingested key is not retracted and the
+    * family's over-retraction guard stays a real guard (it still throws
+    * if the index does not hold v1: wrong v1 frame, or a sync already
+    * applied). The predicate runs on a BARRIERED transition-sized
+    * sliver: unbarriered, Catalyst would push a deterministic filter
+    * below the semi join onto the full v1 scan. Without `ingested`,
+    * `retract` receives the bare removed + changed keys.
+    *
+    * TORN-SYNC RECOVERY: two atomic commits (retract, then append). A
+    * crash between them leaves membership at v1 ∖ (removed ∪ changed);
+    * recover by applying the append leg alone — the family's append of
+    * v2 ⋉ (added ∪ changed keys) — or rebuild. Re-running the whole sync
+    * trips the over-retraction guard on the already-tombstoned keys: a
+    * key-tombstone guard cannot tell a torn sync from a wrong v1 frame
+    * (the hash-keyed [[ExactDedupIndex.syncIndex]] can, and resumes).
+    *
+    * 100 TB shape: the diff's hash-only full-outer join runs ONCE (the
+    * transition set barriers — broadcast-sized by contract, like every
+    * takedown table); each leg broadcast-semi-joins its transition-sized
+    * key set against a snapshot scan, so tokenizing or hashing only
+    * ever touches transition rows. At most two commits; an unchanged
+    * corpus is a complete no-op. Both snapshot frames must be
+    * deterministic under re-evaluation (source scans). SINGLE-WRITER.
+    */
+  def sync(v1: DataFrame, v2: DataFrame, identity: Column,
+      key: String = "doc_id", ingested: Option[(String, Column)] = None)(
+      retract: DataFrame => Unit, append: DataFrame => Unit): Unit = {
+    def keyed(d: DataFrame) =
+      d.select(col(key).as("doc_id"), identity.as("__ident"))
+    val transitions =
+      Curation.corpusDiffBy(keyed(v1), keyed(v2), col("__ident"))
+        .where(col("status") =!= "unchanged")
+        .select(col("doc_id").as(key), col("status"))
+        .barrier()
+    def keysOf(statuses: String*) =
+      transitions.filter(col("status").isin(statuses: _*)).select(col(key))
+    try {
+      val gone = keysOf("removed", "changed")
+      ingested match {
+        case None => retract(gone)
+        case Some((content, member)) =>
+          val sliver = v1.where(col(key).isNotNull)
+            .select(col(key), col(content))
+            .join(broadcast(gone), Seq(key), "left_semi")
+            .barrier()
+          try retract(sliver.where(member)) finally Barrier.release(sliver)
+      }
+      append(v2.join(broadcast(keysOf("added", "changed")), Seq(key),
+        "left_semi"))
+    } finally Barrier.release(transitions)
   }
 }

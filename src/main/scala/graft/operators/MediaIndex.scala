@@ -93,11 +93,6 @@ object MediaIndex {
       .withColumn("bbkt", bbktCol(nBuckets))
   }
 
-  private def writeBlockTable(bl: DataFrame, dir: String,
-      name: String): Unit =
-    bl.repartition(col("bbkt"))
-      .write.mode("overwrite").partitionBy("bbkt").parquet(s"$dir/$name")
-
   /** Write the exploded block table of `payloads` under `dir/<name>`;
     * returns the row count (0 = nothing written worth referencing — a
     * corpus of sub-frame payloads emits no hashes).
@@ -109,7 +104,7 @@ object MediaIndex {
       .barrier()
     try {
       val rows = bl.count()
-      if (rows > 0L) writeBlockTable(bl, dir, name)
+      if (rows > 0L) GenManifest.writeParts(bl, "bbkt", dir, name)
       rows
     } finally Barrier.release(bl)
   }
@@ -138,7 +133,7 @@ object MediaIndex {
           s"(every payload under $frameBytes bytes?) — nothing to index " +
           "(previous index left intact)")
       GenManifest.resetDir(spark, dir)
-      writeBlockTable(bl, dir, "blocks")
+      GenManifest.writeParts(bl, "bbkt", dir, "blocks")
       // Meta table before the manifest: a readable COMMIT marks the
       // build complete (r18 — the gen-0 manifest carries the geometry,
       // so the first serve already skips the meta job; a crash between
@@ -153,189 +148,81 @@ object MediaIndex {
     } finally Barrier.release(bl)
   }
 
-  /** APPEND an ingest batch: its block rows become a new generation dir,
-    * committed by one atomic manifest rename. Stateless hash family ⇒
-    * append ≡ rebuild over base ∪ delta EXACTLY (spec-pinned). An empty
-    * delta is a NO-OP — committing a schema-less generation would
-    * poison every later read (the ANN empty-delta lesson).
+  /** APPEND an ingest batch: its block rows become a new generation dir
+    * under the shared [[GenManifest.append]]. Stateless hash family ⇒
+    * append ≡ rebuild over base ∪ delta EXACTLY (spec-pinned); a delta
+    * with no hashable payload commits nothing.
     */
   def appendToMediaIndex(newPayloads: DataFrame, dir: String): Unit = {
     val spark = newPayloads.sparkSession
-    val lay = GenManifest.layout(spark, dir, Family)
-    val geom = metaOf(spark, dir, lay)
-    val newB = f"blocks-delta-${lay.seq + 1}%010d"
-    val rows = writeBlocks(newPayloads, dir,
-      geom._1, geom._2, geom._3, geom._4, newB)
-    if (rows == 0L) {
-      System.err.println(
-        s"[graft] media-index append of an EMPTY delta to $dir skipped " +
-          "(no commit)")
-    } else {
-      // Tombstones carry over: a re-ingested doc_id's NEW generation
-      // outlives any older tombstone (the newest-op-wins rule).
-      GenManifest.commit(spark, dir, Family,
+    GenManifest.append(spark, dir, Family) { lay =>
+      val geom = metaOf(spark, dir, lay)
+      val newB = f"blocks-delta-${lay.seq + 1}%010d"
+      Option.when(writeBlocks(newPayloads, dir,
+          geom._1, geom._2, geom._3, geom._4, newB) > 0L)(
         lay.appended("bdirs" -> newB).copy(metaVals = metaVals(geom)))
     }
   }
 
-  /** COMPACT: fold every live generation back into ONE dir and commit
-    * with the same atomic manifest rename appends use. Rows rewrite
-    * VERBATIM (the partition column rides the read — no hash is
-    * recomputed), so serve-after-compact is bit-identical to
-    * serve-before. No-op on a single-generation index (but still sweeps
-    * garbage a previously-failed best-effort sweep left).
+  /** COMPACT under the shared [[GenManifest.compact]] and
+    * [[GenManifest.foldLive]]: rows rewrite VERBATIM (the partition
+    * column rides the read), so serve-after-compact is bit-identical to
+    * serve-before; tombstoned payloads are purged, and a fold with every
+    * payload retracted is refused.
     */
-  def compactMediaIndex(spark: SparkSession, dir: String): Unit = {
-    val lay = GenManifest.layout(spark, dir, Family)
-    val (bDirs, tDirs) = (lay("bdirs"), lay.tDirs)
-    if (bDirs.length <= 1 && tDirs.isEmpty) {
-      GenManifest.sweep(spark, dir, Family, lay.seq)
-      return
+  def compactMediaIndex(spark: SparkSession, dir: String): Unit =
+    GenManifest.compact(spark, dir, Family) { lay =>
+      val newB = f"blocks-compact-${lay.seq + 1}%010d"
+      GenManifest.foldLive(spark, dir, lay, "bdirs", "doc_id", "bbkt", newB,
+        s"compactMediaIndex at $dir: every payload is retracted — an " +
+          "all-empty index is unrepresentable; rebuild with " +
+          "buildMediaIndex when content returns")
+      lay.compacted("bdirs" -> newB)
+        .copy(metaVals = metaVals(metaOf(spark, dir, lay)))
     }
-    val newB = f"blocks-compact-${lay.seq + 1}%010d"
-    // Tombstone-free rows rewrite verbatim as a single read-to-write
-    // pipeline (barriering the whole index would checkpoint it for
-    // nothing); with retraction generations live the fold keeps only
-    // LIVE rows (physically purging taken-down docs), and the emptiness
-    // probe + write share ONE materialization — a fully-retracted fold
-    // is unrepresentable (schema-less dir), so fail loudly.
-    if (tDirs.isEmpty) {
-      GenManifest.readGenerations(spark, dir, bDirs)
-        .repartition(col("bbkt"))
-        .write.mode("overwrite").partitionBy("bbkt").parquet(s"$dir/$newB")
-    } else {
-      val fb = GenManifest.foldedLive(spark, dir, bDirs, tDirs, "doc_id")
-        .barrier()
-      try {
-        require(fb.count() > 0L,
-          s"compactMediaIndex at $dir: every payload is retracted — an " +
-            "all-empty index is unrepresentable; rebuild with " +
-            "buildMediaIndex when content returns")
-        fb.repartition(col("bbkt"))
-          .write.mode("overwrite").partitionBy("bbkt").parquet(s"$dir/$newB")
-      } finally Barrier.release(fb)
-    }
-    GenManifest.commit(spark, dir, Family, lay.compacted("bdirs" -> newB)
-      .copy(metaVals = metaVals(metaOf(spark, dir, lay))))
-  }
 
-  /** RETRACT payloads from the index — the doc-keyed takedown shape
-    * shared with [[DedupIndex.retractFromDedupIndex]] (the GenManifest
-    * liveness kernels are the ONE definition): takedown ids become a
-    * tombstone generation, liveness = newest insert generation outlives
-    * newest tombstone, a later append of the vacant id restores it.
-    * OVER-RETRACTION throws before anything is written; empty takedown
-    * sets are a no-op; [[compactMediaIndex]] physically purges. The
-    * membership check scans the blocks table's (doc_id, gen) columns —
+  /** RETRACT payloads — the shared [[GenManifest.retract]] keyed by doc
+    * id, as in [[DedupIndex.retractFromDedupIndex]]. The membership
+    * check scans the blocks table's (doc_id, gen) columns —
     * maintenance-grade like compaction (columnar-pruned longs, never
-    * payloads). SINGLE-WRITER, like every GenManifest family.
+    * payloads). A takedown of every payload is accepted;
+    * [[compactMediaIndex]] refuses the empty fold.
     */
   def retractFromMediaIndex(docs: DataFrame, dir: String): Unit = {
     val spark = docs.sparkSession
     val lay = GenManifest.layout(spark, dir, Family)
-    val tDirs = lay.tDirs
     val newT = f"tombs-${lay.seq + 1}%010d"
-    // BARRIERED, not cached (the exact-index takedown discipline): the
-    // membership check and the WRITTEN tombstone rows must derive from
-    // one materialized id set.
-    val h = docs.where(col("doc_id").isNotNull)
-      .select(col("doc_id")).distinct()
-      .barrier()
-    try {
-      if (h.isEmpty) {
-        System.err.println(
-          s"[graft] media-index retraction of an EMPTY set at $dir " +
-            "skipped (no commit)")
-      } else {
-        val ins = GenManifest.readWithGen(spark, dir, lay("bdirs"))
+    GenManifest.retract(spark, dir, Family, docs, "doc_id", newT) { h =>
+      GenManifest.requireLive(spark, dir, lay, h,
+        GenManifest.readWithGen(spark, dir, lay("bdirs"))
           .select(col("doc_id"), col("__g"))
-          .join(broadcast(h), Seq("doc_id"), "left_semi")
-        val live =
-          (if (tDirs.isEmpty) ins
-           else GenManifest.liveRows(ins, "doc_id",
-             GenManifest.tombMax(spark, dir, tDirs, "doc_id")))
-            .select(col("doc_id")).distinct()
-        val nonMembers = h.join(live, Seq("doc_id"), "left_anti").count()
-        require(nonMembers == 0L,
-          s"retractFromMediaIndex at $dir: $nonMembers of the takedown " +
-            "ids are not currently live (never ingested, or already " +
-            "retracted) — a takedown of absent payloads is a caller " +
-            "bug, not a no-op")
-        h.write.mode("overwrite").parquet(s"$dir/$newT")
-        GenManifest.commit(spark, dir, Family, lay.retracted(newT)
-          .copy(metaVals = metaVals(metaOf(spark, dir, lay))))
-      }
-    } finally Barrier.release(h)
+          .join(broadcast(h), Seq("doc_id"), "left_semi"),
+        "doc_id", "retractFromMediaIndex", "payloads")
+      lay.retracted(newT).copy(metaVals = metaVals(metaOf(spark, dir, lay)))
+    }
   }
 
-  /** INCREMENTAL CORPUS SYNC — apply a v1 → v2 snapshot transition to a
-    * media index currently holding v1's (ingested) payloads, so serves
-    * afterwards equal a [[buildMediaIndex]] over v2 EXACTLY — the
-    * [[DedupIndex.syncDedupIndex]] composition at the media tier, with
-    * the diff unit moved to PAYLOAD BYTES via
-    * [[Curation.corpusDiffBy]]: `md5(payload)` classifies a re-encode
-    * that leaves text equal but bytes different as `changed` (a
-    * text-hash diff would miss it — payloads are the index's content).
-    * Removed + changed payloads retract (doc-keyed tombstones), added +
-    * changed append from v2; a changed doc's old-generation block rows
-    * die with its tombstone while the re-ingest outlives it (per-ROW
-    * liveness), so sync ≡ rebuild-on-v2 exactly (spec-pinned).
-    *
-    * Membership bookkeeping: the retraction leg keeps only payloads
-    * with at least one sampled frame (length ≥ frame_bytes — sub-frame
-    * or null payloads never had at-rest rows), and the append leg
-    * writes nothing for frame-less v2 payloads, so both legs respect
-    * the family's membership contract on any input; the over-retraction
-    * guard stays a real guard (wrong v1 frame still throws).
-    *
-    * TORN-SYNC RECOVERY: two atomic commits (retract, then append). A
-    * crash between them leaves membership at v1 ∖ (removed ∪ changed);
-    * recover by applying the append leg alone —
-    * `appendToMediaIndex(v2 ⋉ (added ∪ changed ids), dir)` — or
-    * rebuild. Re-running the full sync after a crash trips the
-    * over-retraction guard on the already-tombstoned ids (by design:
-    * the guard cannot distinguish a torn sync from a wrong v1 frame).
-    *
-    * 100 TB shape: the diff join ships 16-byte hashes only and runs
-    * ONCE (the transition set barriers — broadcast-sized by contract);
-    * each leg broadcast-semi-joins its transition-sized id set against
-    * a snapshot scan, and frame hashing only ever touches transition
-    * payloads. Both snapshot frames must be deterministic under
-    * re-evaluation. SINGLE-WRITER, like every GenManifest family.
+  /** INCREMENTAL CORPUS SYNC — the shared [[GenManifest.sync]] with the
+    * diff unit moved to PAYLOAD BYTES: `md5(payload)` classifies a
+    * re-encode that leaves text equal but bytes different as `changed`
+    * (a text-hash diff would miss it — payloads are the index's
+    * content). A changed doc's old-generation block rows die with its
+    * tombstone while the re-ingest outlives it (per-ROW liveness), so
+    * sync ≡ rebuild-on-v2 exactly (spec-pinned). The retraction leg
+    * keeps only payloads with at least one sampled frame (length ≥
+    * frame_bytes — sub-frame or null payloads never had at-rest rows);
+    * the append leg writes nothing for frame-less v2 payloads. Torn-sync
+    * recovery: `appendToMediaIndex(v2 ⋉ (added ∪ changed ids), dir)`.
     */
   def syncMediaIndex(v1Payloads: DataFrame, v2Payloads: DataFrame,
       dir: String): Unit = {
     val spark = v1Payloads.sparkSession
     val frameBytes =
       metaOf(spark, dir, GenManifest.layout(spark, dir, Family))._1
-    val transitions = Curation.corpusDiffBy(v1Payloads, v2Payloads,
-        md5(coalesce(col("payload"), lit(Array.empty[Byte]))))
-      .where(col("status") =!= "unchanged")
-      .select(col("doc_id"), col("status"))
-      .barrier()
-    try {
-      val retractIds = transitions
-        .filter(col("status").isin("removed", "changed"))
-        .select(col("doc_id"))
-      // The broadcast semi reduces v1 to transition-sized rows FIRST
-      // and the sliver barriers before the frame-count membership
-      // filter (a deterministic-predicate filter would be pushed below
-      // the join onto the full v1 scan — the syncDedupIndex rule).
-      val retractDocs = v1Payloads.where(col("doc_id").isNotNull)
-        .select(col("doc_id"), col("payload"))
-        .join(broadcast(retractIds), Seq("doc_id"), "left_semi")
-        .barrier()
-      try {
-        retractFromMediaIndex(
-          retractDocs.where(length(col("payload")) >= frameBytes), dir)
-      } finally Barrier.release(retractDocs)
-      val appendIds = transitions
-        .filter(col("status").isin("added", "changed"))
-        .select(col("doc_id"))
-      appendToMediaIndex(
-        v2Payloads.join(broadcast(appendIds), Seq("doc_id"), "left_semi"),
-        dir)
-    } finally Barrier.release(transitions)
+    GenManifest.sync(v1Payloads, v2Payloads,
+        md5(coalesce(col("payload"), lit(Array.empty[Byte]))),
+        ingested = Some("payload" -> (length(col("payload")) >= frameBytes)))(
+      retractFromMediaIndex(_, dir), appendToMediaIndex(_, dir))
   }
 
   /** Takedown-pressure census (ONE row: live_docs, dead_docs,
@@ -345,11 +232,9 @@ object MediaIndex {
     * decide when to compact a takedown-heavy index (dead rows still
     * occupy block files until [[compactMediaIndex]] purges them).
     */
-  def takedownHealth(spark: SparkSession, dir: String): DataFrame = {
-    val lay = GenManifest.layout(spark, dir, Family)
-    GenManifest.takedownCensus(spark, dir, lay("bdirs"), lay.tDirs, "doc_id",
+  def takedownHealth(spark: SparkSession, dir: String): DataFrame =
+    GenManifest.takedownCensus(spark, dir, Family, "bdirs", "doc_id",
       "live_docs", "dead_docs")
-  }
 
   /** Per-block hot-key report over the index at rest (the indexHealth
     * analog): key count, membership rows, hottest key, and keys more

@@ -224,20 +224,16 @@ object Search {
       require(nDocs > 0,
         s"buildLexIndex at $dir: corpus has no tokenized documents — " +
           "nothing to index")
-      p.withColumn("bkt", pmod(hash(col("term")), lit(buckets)))
-        .repartition(col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt")
-        .parquet(s"$dir/postings")
+      GenManifest.writeParts(
+        p.withColumn("bkt", pmod(hash(col("term")), lit(buckets))),
+        "bkt", dir, "postings")
       // Stats table before the manifest: a readable COMMIT marks the
       // build complete (r18 — the gen-0 manifest carries the stats, so
       // the very first serve skips the stats job; a crash between the
       // stats write and the commit leaves the pre-r18 adoption layout,
       // which reads fine).
-      spark.range(1).select(lit(nDocs).as("n_docs"),
-          lit(t.getLong(1)).as("total_tokens"), lit(buckets).as("buckets"))
-        .write.mode("overwrite").parquet(s"$dir/stats")
-      GenManifest.commit(spark, dir, Family, Family.adopted.copy(
-        metaVals = statsVals(nDocs, t.getLong(1), buckets)))
+      GenManifest.commit(spark, dir, Family, withStats(spark, dir,
+        Family.adopted, "stats", nDocs, t.getLong(1), buckets))
     }
   }
 
@@ -362,8 +358,10 @@ object Search {
     Some(Map("n_docs" -> nDocs, "total_tokens" -> totalTokens,
       "buckets" -> buckets.toLong))
 
-  /** The ONE liveness fold over the postings generations (GenManifest's
-    * doc-keyed tombstone kernels, shared with DedupIndex/MediaIndex): a
+  /** The pruned liveness fold over the postings generations
+    * (GenManifest's doc-keyed tombstone kernels, shared with
+    * DedupIndex/MediaIndex; compaction's unpruned fold is
+    * [[GenManifest.foldLive]]): a
     * bare generation read when tombstone-free — byte-identical to the
     * pre-retraction plan — and the newest-insert-outlives-newest-
     * tombstone resolution otherwise. `prune` applies the serve's bkt
@@ -373,103 +371,88 @@ object Search {
     * [[GenManifest.liveRows]].
     */
   private def foldedLivePostings(spark: SparkSession, dir: String,
-      lay: GenManifest.Layout,
-      prune: DataFrame => DataFrame = identity): DataFrame =
+      lay: GenManifest.Layout, prune: DataFrame => DataFrame): DataFrame =
     if (lay.tDirs.isEmpty)
       prune(GenManifest.readGenerations(spark, dir, lay("dirs")))
     else GenManifest.liveRows(
       prune(GenManifest.readWithGen(spark, dir, lay("dirs"))), "doc_id",
       GenManifest.tombMax(spark, dir, lay.tDirs, "doc_id"))
 
-  /** APPEND new documents to a persisted inverted index: the delta's
-    * postings are written as a new bucket-partitioned generation dir
-    * (same term-hash expression, so pruning spans generations), the
-    * corpus stats roll forward ADDITIVELY into a new stats dir, and the
-    * manifest rename commits both at once. Search-after-append equals a
-    * full rebuild over base∪delta EXACTLY (spec-pinned) — df and scores
-    * are recomputed from the union at serve time, nothing is frozen.
-    *
-    * An empty delta (token-less docs only) is a NO-OP: a 0-row
-    * partitioned write leaves no bkt= dirs and committing it would
-    * poison every later read — the ANN append lesson.
+  /** Write the 1-row stats table `dir/name` and return `next` carrying
+    * it — the dir and the manifest's `metaVals` mirror, committed in the
+    * SAME atomic rename so they can never diverge.
+    */
+  private def withStats(spark: SparkSession, dir: String,
+      next: GenManifest.Layout, name: String, nDocs: Long,
+      totalTokens: Long, buckets: Int): GenManifest.Layout = {
+    spark.range(1).select(lit(nDocs).as("n_docs"),
+        lit(totalTokens).as("total_tokens"), lit(buckets).as("buckets"))
+      .write.mode("overwrite").parquet(s"$dir/$name")
+    next.copy(metaDir = Some(name),
+      metaVals = statsVals(nDocs, totalTokens, buckets))
+  }
+
+  /** APPEND new documents under the shared [[GenManifest.append]]: the
+    * delta's postings are written as a new bucket-partitioned generation
+    * dir (same term-hash expression, so pruning spans generations) and
+    * the corpus stats roll forward ADDITIVELY into a new stats dir, one
+    * commit for both. Search-after-append equals a full rebuild over
+    * base∪delta EXACTLY (spec-pinned) — df and scores are recomputed
+    * from the union at serve time, nothing is frozen. A re-ingested
+    * doc_id's new generation also restores its stats contribution (the
+    * stats were decremented when it was taken down). A delta of
+    * token-less docs only commits nothing.
     */
   def appendToLexIndex(newDocs: DataFrame, dir: String): Unit = {
     val spark = newDocs.sparkSession
-    val lay = GenManifest.layout(spark, dir, Family)
-    val (nDocs, totalTokens, buckets) = statsOf(spark, dir, lay)
-    // Fail-fast on an empty BASE (a build over a token-less corpus):
-    // its postings dir holds no parquet files, and committing a manifest
-    // that references it would poison every later read with "unable to
-    // infer schema" — the sweep can never collect a live-referenced dir.
-    // (Also guards the NULL total_tokens such a build writes, which
-    // getAs[Long] would silently unbox to 0.)
-    require(nDocs > 0,
-      s"index at $dir has an empty base (token-less build) — rebuild " +
-        "with buildLexIndex instead of appending")
-    val newPDir = s"postings-${lay.seq + 1}"
-    val newSDir = s"stats-${lay.seq + 1}"
-    val (deltaDocs, deltaTokens) = Barrier.withCached(postings(newDocs)) { p =>
-      // Totals FIRST (fills the cache): an empty delta is discovered
-      // before the partitioned write job runs at all — no scratch dir to
-      // write and then delete on the no-op path.
-      val t = corpusTotals(p).head()
-      if (t.getLong(0) > 0L)
-        p.withColumn("bkt", pmod(hash(col("term")), lit(buckets)))
-          .repartition(col("bkt"))
-          .write.mode("overwrite").partitionBy("bkt")
-          .parquet(s"$dir/$newPDir")
-      (t.getLong(0), t.getLong(1))
-    }
-    if (deltaDocs == 0L) {
-      System.err.println(
-        s"[graft] lex append of an EMPTY delta to $dir skipped " +
-          "(nothing written, no commit)")
-    } else {
-      spark.range(1).select(
-          lit(nDocs + deltaDocs).as("n_docs"),
-          lit(totalTokens + deltaTokens).as("total_tokens"),
-          lit(buckets).as("buckets"))
-        .write.mode("overwrite").parquet(s"$dir/$newSDir")
-      // Tombstones carry over: a re-ingested doc_id's NEW generation
-      // outlives any older tombstone, so the append alone restores its
-      // membership AND its stats contribution (the stats were
-      // decremented when it was taken down).
-      GenManifest.commit(spark, dir, Family,
-        lay.appended("dirs" -> newPDir).copy(metaDir = Some(newSDir),
-          metaVals = statsVals(nDocs + deltaDocs, totalTokens + deltaTokens,
-            buckets)))
+    GenManifest.append(spark, dir, Family) { lay =>
+      val (nDocs, totalTokens, buckets) = statsOf(spark, dir, lay)
+      // Fail-fast on an empty BASE (a build over a token-less corpus):
+      // its postings dir holds no parquet files, and committing a
+      // manifest that references it would poison every later read with
+      // "unable to infer schema" — the sweep can never collect a
+      // live-referenced dir. (Also guards the NULL total_tokens such a
+      // build writes, which getAs[Long] would silently unbox to 0.)
+      require(nDocs > 0,
+        s"index at $dir has an empty base (token-less build) — rebuild " +
+          "with buildLexIndex instead of appending")
+      val newPDir = s"postings-${lay.seq + 1}"
+      val (deltaDocs, deltaTokens) =
+        Barrier.withCached(postings(newDocs)) { p =>
+          // Totals FIRST (fills the cache): an empty delta is discovered
+          // before the partitioned write job runs at all — no scratch
+          // dir to write and then delete on the no-op path.
+          val t = corpusTotals(p).head()
+          if (t.getLong(0) > 0L)
+            GenManifest.writeParts(
+              p.withColumn("bkt", pmod(hash(col("term")), lit(buckets))),
+              "bkt", dir, newPDir)
+          (t.getLong(0), t.getLong(1))
+        }
+      Option.when(deltaDocs > 0L)(withStats(spark, dir,
+        lay.appended("dirs" -> newPDir), s"stats-${lay.seq + 1}",
+        nDocs + deltaDocs, totalTokens + deltaTokens, buckets))
     }
   }
 
-  /** RETRACT documents from a persisted inverted index — the takedown /
-    * right-to-be-forgotten path, completing the lifecycle (build /
-    * append / compact / retract) the stats, exact-dedup, dedup, and
-    * media indexes already have. The takedown ids become ONE tombstone
-    * generation (doc-keyed — postings rows are per-doc, so a doc_id
-    * tombstone removes exactly that document's postings); the corpus
-    * stats roll BACKWARD into a new stats dir (subtracting the live
-    * takedown docs' doc/token counts — the StatsIndex negated-sums
-    * shape, folded into the literal stats row this family serves from);
-    * one atomic manifest rename commits both. Because df and scores are
-    * recomputed from live postings at serve time, retraction ≡ rebuild
-    * over the retained corpus EXACTLY and unconditionally (spec-pinned)
-    * — the same argument as the append equivalence.
-    *
-    * OVER-RETRACTION throws before anything is written (the family
-    * rule): every takedown id must be currently live IN THE INDEX —
-    * token-less docs were never indexed, so retracting one is a caller
-    * bug, not a no-op. An empty takedown set is a no-op. A retraction
-    * that would empty the index throws (an all-retracted index is
-    * unrepresentable — n_docs = 0 fails every serve; rebuild when
-    * content returns). [[compactLexIndex]] physically purges tombstoned
-    * postings and folds the tombstones away. SINGLE-WRITER.
+  /** RETRACT documents — the shared [[GenManifest.retract]] keyed by
+    * doc id (postings rows are per-doc, so a doc_id tombstone removes
+    * exactly that document's postings), with the corpus stats rolled
+    * BACKWARD into a new stats dir in the same commit (subtracting the
+    * live takedown docs' doc/token counts — the StatsIndex negated-sums
+    * shape, folded into the literal stats row this family serves from).
+    * Because df and scores are recomputed from live postings at serve
+    * time, retraction ≡ rebuild over the retained corpus EXACTLY
+    * (spec-pinned). Token-less docs were never indexed, so retracting
+    * one is over-retraction. Unlike the dedup families, a retraction
+    * that would empty the index throws here (n_docs = 0 fails every
+    * serve; rebuild when content returns).
     *
     * Cost shape: the membership probe + stats decrement is ONE map-side
     * pass over the postings' `first_pos == 0` marker rows semi-joined
     * to the broadcast takedown set — postings partition by TERM hash,
     * so a doc-keyed probe cannot prune, but it never shuffles the
-    * postings either. The tombstone table is takedown-sized by contract
-    * (broadcast at serve; compact regularly under sustained takedowns).
+    * postings either.
     */
   def retractFromLexIndex(docs: DataFrame, dir: String): Unit = {
     val spark = docs.sparkSession
@@ -479,131 +462,69 @@ object Search {
       s"index at $dir has an empty base (token-less build) — nothing " +
         "to retract")
     val newT = s"tombs-${lay.seq + 1}"
-    val newS = s"stats-${lay.seq + 1}"
     import Barrier.BarrierOps
-    // BARRIERED, not cached (the family takedown discipline): the
-    // membership require and the WRITTEN tombstone rows must derive
-    // from one materialized id set — a persist can re-evaluate from
-    // lineage and commit an id that never passed the require.
-    val h = docs.where(col("doc_id").isNotNull)
-      .select(col("doc_id")).distinct()
-      .barrier()
-    try {
-      if (h.isEmpty) {
-        System.err.println(
-          s"[graft] lex-index retraction of an EMPTY set at $dir " +
-            "skipped (no commit)")
-      } else {
-        // LIVE marker rows (first_pos == 0 — exactly one per tokenized
-        // doc per live generation) for the takedown ids: membership
-        // evidence and the stats decrement in ONE map-side pass.
-        val markers = foldedLivePostings(spark, dir, lay,
-            _.join(broadcast(h), Seq("doc_id"), "left_semi"))
-          .filter(col("first_pos") === 0L)
-          .select(col("doc_id"), col("dl"))
-          .barrier() // takedown-sized
-        try {
-          val agg = markers.agg(
-            count(lit(1)).as("n"),
-            countDistinct(col("doc_id")).as("nd"),
-            coalesce(sum(col("dl")), lit(0L)).as("tok")).head()
-          val (mn, mnd, mtok) =
-            (agg.getLong(0), agg.getLong(1), agg.getLong(2))
-          val hCount = h.count()
-          require(mnd == hCount,
-            s"retractFromLexIndex at $dir: ${hCount - mnd} of the " +
-              "takedown ids are not currently live in the index (never " +
-              "indexed, token-less, or already retracted) — a takedown " +
-              "of absent documents is a caller bug, not a no-op")
-          // One live generation per doc by the append contract (caller
-          // owns doc_id uniqueness); duplicate markers mean the stats
-          // decrement would double-count — surface it.
-          require(mn == mnd,
-            s"retractFromLexIndex at $dir: ${mn - mnd} duplicate live " +
-              "postings generations for takedown ids — doc_id " +
-              "uniqueness across appends was violated; rebuild")
-          require(nDocs - mn > 0,
-            s"retractFromLexIndex at $dir: the takedown would retract " +
-              "every indexed document — an all-empty index is " +
-              "unrepresentable; rebuild with buildLexIndex when " +
-              "content returns")
-          h.write.mode("overwrite").parquet(s"$dir/$newT")
-          spark.range(1).select(
-              lit(nDocs - mn).as("n_docs"),
-              lit(totalTokens - mtok).as("total_tokens"),
-              lit(buckets).as("buckets"))
-            .write.mode("overwrite").parquet(s"$dir/$newS")
-          GenManifest.commit(spark, dir, Family,
-            lay.retracted(newT).copy(metaDir = Some(newS),
-              metaVals = statsVals(nDocs - mn, totalTokens - mtok, buckets)))
-        } finally Barrier.release(markers)
-      }
-    } finally Barrier.release(h)
+    GenManifest.retract(spark, dir, Family, docs, "doc_id", newT) { h =>
+      // LIVE marker rows (first_pos == 0 — exactly one per tokenized
+      // doc per live generation) for the takedown ids: membership
+      // evidence and the stats decrement in ONE map-side pass.
+      val markers = foldedLivePostings(spark, dir, lay,
+          _.join(broadcast(h), Seq("doc_id"), "left_semi"))
+        .filter(col("first_pos") === 0L)
+        .select(col("doc_id"), col("dl"))
+        .barrier() // takedown-sized
+      try {
+        val agg = markers.agg(
+          count(lit(1)).as("n"),
+          countDistinct(col("doc_id")).as("nd"),
+          coalesce(sum(col("dl")), lit(0L)).as("tok")).head()
+        val (mn, mnd, mtok) =
+          (agg.getLong(0), agg.getLong(1), agg.getLong(2))
+        val hCount = h.count()
+        require(mnd == hCount,
+          s"retractFromLexIndex at $dir: ${hCount - mnd} of the " +
+            "takedown ids are not currently live in the index (never " +
+            "indexed, token-less, or already retracted) — a takedown " +
+            "of absent documents is a caller bug, not a no-op")
+        // One live generation per doc by the append contract (caller
+        // owns doc_id uniqueness); duplicate markers mean the stats
+        // decrement would double-count — surface it.
+        require(mn == mnd,
+          s"retractFromLexIndex at $dir: ${mn - mnd} duplicate live " +
+            "postings generations for takedown ids — doc_id " +
+            "uniqueness across appends was violated; rebuild")
+        require(nDocs - mn > 0,
+          s"retractFromLexIndex at $dir: the takedown would retract " +
+            "every indexed document — an all-empty index is " +
+            "unrepresentable; rebuild with buildLexIndex when " +
+            "content returns")
+        withStats(spark, dir, lay.retracted(newT), s"stats-${lay.seq + 1}",
+          nDocs - mn, totalTokens - mtok, buckets)
+      } finally Barrier.release(markers)
+    }
   }
 
-  /** INCREMENTAL CORPUS SYNC — apply a v1 → v2 snapshot transition to a
-    * lex index currently holding v1's tokenized membership, so serves
-    * afterwards equal a [[buildLexIndex]] over v2 EXACTLY: the
-    * [[DedupIndex.syncDedupIndex]] composition at the lexical tier.
-    * `removed` and `changed` ids retract (one tombstone generation + a
-    * decremented stats row in one commit), `added` and `changed` rows
-    * append from v2 (stats roll forward); df/N/avgdl recompute from
-    * live postings at serve, so the re-ingested changed doc scores with
-    * its NEW content and nothing else moves — the same unconditional
-    * equivalence argument as retraction ≡ rebuild.
-    *
-    * Membership bookkeeping mirrors the dedup sync: the retraction leg
-    * intersects v1's INGESTED membership (tokenized docs) on a
-    * BARRIERED transition-sized sliver (an unbarriered filter would be
-    * pushed below the semi join onto the full v1 scan), and the append
-    * leg writes nothing for docs that tokenize to nothing in v2. The
-    * diff's full-outer hash join runs once (transition rows barrier).
-    * Transition sets are broadcast-sized by contract. SINGLE-WRITER.
+  /** INCREMENTAL CORPUS SYNC — the shared [[GenManifest.sync]] over the
+    * text diff at the lexical tier: retraction decrements the stats in
+    * its commit and the append rolls them forward; df/N/avgdl recompute
+    * from live postings at serve, so the re-ingested changed doc scores
+    * with its NEW content and nothing else moves. The retraction leg
+    * intersects v1's INGESTED membership (tokenized docs); the append
+    * leg writes nothing for docs that tokenize to nothing in v2.
     *
     * BOUND (the family's all-retracted guard, inherited): a transition
     * that removes or changes EVERY live doc retracts the index empty
     * before the append leg can refill it, and [[retractFromLexIndex]]
     * throws — a full corpus replacement is a [[buildLexIndex]] rebuild,
-    * not a sync.
-    *
-    * TORN-SYNC RECOVERY: two atomic commits (retract+stats, then
-    * append). A crash between them leaves membership at
-    * v1 ∖ (removed ∪ changed) with stats already decremented — a
-    * CONSISTENT index (serves stay exact over the remaining docs);
-    * recover by applying the append leg alone —
-    * `appendToLexIndex(v2 ⋉ (added ∪ changed ids), dir)` — or rebuild.
-    * Re-running the full sync trips the over-retraction guard on the
-    * already-tombstoned ids (the doc-keyed guard cannot distinguish a
-    * torn sync from a wrong v1 frame; the hash-keyed
-    * [[ExactDedupIndex.syncIndex]] is the resumable member).
+    * not a sync. A crash between the two commits leaves a CONSISTENT
+    * index (stats already decremented); recover with
+    * `appendToLexIndex(v2 ⋉ (added ∪ changed ids), dir)`.
     */
   def syncLexIndex(v1Docs: DataFrame, v2Docs: DataFrame,
-      dir: String): Unit = {
-    import Barrier.BarrierOps
-    val transitions = Curation.corpusDiff(v1Docs, v2Docs)
-      .where(col("status") =!= "unchanged")
-      .select(col("doc_id"), col("status"))
-      .barrier()
-    try {
-      val retractIds = transitions
-        .filter(col("status").isin("removed", "changed"))
-        .select(col("doc_id"))
-      val retractDocs = v1Docs.where(col("doc_id").isNotNull)
-        .select(col("doc_id"), col("text"))
-        .join(broadcast(retractIds), Seq("doc_id"), "left_semi")
-        .barrier()
-      try {
-        retractFromLexIndex(
-          retractDocs.where(
-            size(TextAnalysis.wsTokens(col("text"))) > 0), dir)
-      } finally Barrier.release(retractDocs)
-      val appendIds = transitions
-        .filter(col("status").isin("added", "changed"))
-        .select(col("doc_id"))
-      appendToLexIndex(
-        v2Docs.join(broadcast(appendIds), Seq("doc_id"), "left_semi"), dir)
-    } finally Barrier.release(transitions)
-  }
+      dir: String): Unit =
+    GenManifest.sync(v1Docs, v2Docs, md5(coalesce(col("text"), lit(""))),
+        ingested = Some("text" ->
+          (size(TextAnalysis.wsTokens(col("text"))) > 0)))(
+      retractFromLexIndex(_, dir), appendToLexIndex(_, dir))
 
   /** Takedown-pressure census (ONE row: live_docs, dead_docs,
     * dead_ppm) — the shared [[GenManifest.takedownCensus]] over the
@@ -613,66 +534,31 @@ object Search {
     * until [[compactLexIndex]] purges them, inflating each pruned
     * serve read proportionally to dead_ppm.
     */
-  def takedownHealth(spark: SparkSession, dir: String): DataFrame = {
-    val lay = GenManifest.layout(spark, dir, Family)
-    GenManifest.takedownCensus(spark, dir, lay("dirs"), lay.tDirs, "doc_id",
+  def takedownHealth(spark: SparkSession, dir: String): DataFrame =
+    GenManifest.takedownCensus(spark, dir, Family, "dirs", "doc_id",
       "live_docs", "dead_docs")
-  }
 
-  /** COMPACT a persisted inverted index: fold every live postings
-    * generation back into ONE bucket-partitioned dir and commit with the
-    * same atomic manifest rename appends use — the maintenance pass that
-    * restores the single-scan-per-pass plan an append history erodes
-    * (each generation is its own parquet source in the serve plan).
-    * Rows are rewritten VERBATIM (bkt rides the read — no re-hash) and
-    * the stats carry over unchanged into a generation-owned copy, so
-    * search-after-compact is bit-identical to search-before
-    * (spec-pinned). No-op on a single-generation index. Single-writer,
-    * like append.
+  /** COMPACT under the shared [[GenManifest.compact]] and
+    * [[GenManifest.foldLive]]: postings rewrite VERBATIM (bkt rides the
+    * read — no re-hash) and the stats carry over unchanged into a
+    * generation-owned copy, so search-after-compact is bit-identical to
+    * search-before (spec-pinned). The retraction guard keeps n_docs > 0,
+    * so the fold's emptiness probe only fires on a damaged index.
     */
-  def compactLexIndex(spark: SparkSession, dir: String): Unit = {
-    val lay = GenManifest.layout(spark, dir, Family)
-    val (pDirs, tDirs) = (lay("dirs"), lay.tDirs)
-    if (pDirs.length <= 1 && tDirs.isEmpty) {
-      // Nothing to fold, but compaction is the maintenance pass: still
-      // collect garbage a previously-failed best-effort sweep left
-      // behind (an otherwise idle index would keep it forever).
-      GenManifest.sweep(spark, dir, Family, lay.seq)
-      return
-    }
-    val newP = s"postings-${lay.seq + 1}"
-    val newS = s"stats-${lay.seq + 1}"
-    // Tombstone-free rows rewrite VERBATIM (one read-to-write pipeline);
-    // with retraction generations live the fold keeps only LIVE postings
-    // (physically purging taken-down docs) and the tombstones fold away.
-    // The retraction guard keeps n_docs > 0, so the fold cannot be
-    // empty on an undamaged index — but a partitioned write of an empty
-    // frame leaves a schema-less dir that would poison every later
-    // read, so the tombstoned arm still probes emptiness on the SAME
-    // materialization it writes (the dedup-compact discipline).
-    if (tDirs.isEmpty) {
-      GenManifest.readGenerations(spark, dir, pDirs)
-        .repartition(col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt").parquet(s"$dir/$newP")
-    } else {
-      import Barrier.BarrierOps
-      val fp = foldedLivePostings(spark, dir, lay).barrier()
-      try {
-        require(fp.count() > 0L,
-          s"compactLexIndex at $dir: every document is retracted — an " +
-            "all-empty index is unrepresentable; rebuild with " +
-            "buildLexIndex when content returns")
-        fp.repartition(col("bkt"))
-          .write.mode("overwrite").partitionBy("bkt").parquet(s"$dir/$newP")
-      } finally Barrier.release(fp)
-    }
-    spark.read.parquet(s"$dir/${lay.meta}")
-      .write.mode("overwrite").parquet(s"$dir/$newS")
-    val (nDocs, totalTokens, buckets) = statsOf(spark, dir, lay)
-    GenManifest.commit(spark, dir, Family,
+  def compactLexIndex(spark: SparkSession, dir: String): Unit =
+    GenManifest.compact(spark, dir, Family) { lay =>
+      val newP = s"postings-${lay.seq + 1}"
+      val newS = s"stats-${lay.seq + 1}"
+      GenManifest.foldLive(spark, dir, lay, "dirs", "doc_id", "bkt", newP,
+        s"compactLexIndex at $dir: every document is retracted — an " +
+          "all-empty index is unrepresentable; rebuild with " +
+          "buildLexIndex when content returns")
+      spark.read.parquet(s"$dir/${lay.meta}")
+        .write.mode("overwrite").parquet(s"$dir/$newS")
+      val (nDocs, totalTokens, buckets) = statsOf(spark, dir, lay)
       lay.compacted("dirs" -> newP).copy(metaDir = Some(newS),
-        metaVals = statsVals(nDocs, totalTokens, buckets)))
-  }
+        metaVals = statsVals(nDocs, totalTokens, buckets))
+    }
 
   /** Driver-side query-by-example term extraction — the client half of
     * [[lexIndexTopK]]'s contract: tokenize a probe text with the Scala

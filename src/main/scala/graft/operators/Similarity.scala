@@ -439,14 +439,12 @@ object Similarity {
     // with zero diagnostics — while the SAME row appended via
     // appendToIvfIndex throws, breaking the spec-pinned append ≡
     // rebuild equivalence (one path crashes, the other serves).
-    vv.select(col("vec_id"),
+    GenManifest.writeParts(vv.select(col("vec_id"),
         checkedDims(col("ev"), book.head._2.length, "IVF index (build)",
           noun = "corpus vectors")
           .as("ev"))
       .select(col("vec_id"), col("ev"), norm(col("ev")).as("nrm"),
-        nearestId(col("ev"), book).as("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
+        nearestId(col("ev"), book).as("cell")), "cell", dir, "cells")
   }
 
   // ---- persisted-index manifest (the append lifecycle) -----------------
@@ -514,52 +512,44 @@ object Similarity {
   def appendToIvfIndex(delta: DataFrame, dir: String): Unit = {
     val spark = delta.sparkSession
     val book = readBook(spark, dir)
-    val lay = GenManifest.layout(spark, dir, Family)
-    val newDir = f"delta-${lay.seq + 1}%010d"
-    // Null-id delta rows dropped like the build (the lex postings rule —
-    // see writeIvfIndex; also keeps append ≡ rebuild on nullable input).
-    delta.where(col("vec_id").isNotNull)
-      .select(col("vec_id"),
-        // The same fail-fast the SEARCH side runs (checkedDims): append
-        // is the one entry point that can introduce a width mismatch
-        // (the build defines the dims), and without the guard vecDot's
-        // NULL-on-mismatch would deterministically dump EVERY delta row
-        // into the smallest centroid id with a NULL norm — committed
-        // garbage with zero diagnostics.
-        checkedDims(asDouble(col("embedding")), book.head._2.length,
-          "IVF index (append)", noun = "delta vectors").as("ev"))
-      .select(col("vec_id"), col("ev"), norm(col("ev")).as("nrm"),
-        nearestId(col("ev"), book).as("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/$newDir")
-    commitAppendedDir(spark, dir, newDir, lay)
+    appendCells(spark, dir,
+      // Null-id delta rows dropped like the build (the lex postings rule
+      // — see writeIvfIndex; also keeps append ≡ rebuild on nullable
+      // input).
+      delta.where(col("vec_id").isNotNull)
+        .select(col("vec_id"),
+          // The same fail-fast the SEARCH side runs (checkedDims): append
+          // is the one entry point that can introduce a width mismatch
+          // (the build defines the dims), and without the guard vecDot's
+          // NULL-on-mismatch would deterministically dump EVERY delta row
+          // into the smallest centroid id with a NULL norm — committed
+          // garbage with zero diagnostics.
+          checkedDims(asDouble(col("embedding")), book.head._2.length,
+            "IVF index (append)", noun = "delta vectors").as("ev"))
+        .select(col("vec_id"), col("ev"), norm(col("ev")).as("nrm"),
+          nearestId(col("ev"), book).as("cell")))
   }
 
-  /** Commit an appended generation dir — unless the delta was EMPTY: a
-    * 0-row partitioned write leaves only _SUCCESS (no cell= dirs), and
-    * committing that dir into the manifest would poison every later
+  /** Write encoded delta `cells` as a new cell-partitioned generation
+    * under the shared [[GenManifest.append]]. An empty delta commits
+    * nothing: a 0-row partitioned write leaves only _SUCCESS (no cell=
+    * dirs), and a manifest referencing it would poison every later
     * [[readCells]] ("unable to infer schema") with no repair path — the
-    * sweep can never collect a dir the LIVE manifest references, and
-    * even [[compactIndex]] reads through readCells. An empty ingest is
-    * a no-op: the dir is dropped and no manifest is written.
+    * sweep never collects a dir the LIVE manifest references, and even
+    * [[compactIndex]] reads through readCells — so the dir is dropped.
     */
-  private def commitAppendedDir(spark: org.apache.spark.sql.SparkSession,
-      dir: String, newDir: String, lay: GenManifest.Layout): Unit = {
-    val (fs, root) = GenManifest.fsRoot(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(root, newDir)
-    val hasCells = fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("cell="))
-    if (!hasCells) {
-      fs.delete(p, true)
-      System.err.println(
-        s"[graft] append of an EMPTY delta to $dir skipped (no commit)")
-    } else {
-      // Tombstones carry over: a re-ingested vec_id's NEW generation
-      // outlives any older tombstone, so the append alone restores its
-      // membership (the newest-op-wins rule).
-      GenManifest.commit(spark, dir, Family, lay.appended("dirs" -> newDir))
+  private def appendCells(spark: org.apache.spark.sql.SparkSession,
+      dir: String, cells: DataFrame): Unit =
+    GenManifest.append(spark, dir, Family) { lay =>
+      val newDir = f"delta-${lay.seq + 1}%010d"
+      GenManifest.writeParts(cells, "cell", dir, newDir)
+      val (fs, root) = GenManifest.fsRoot(spark, dir)
+      val p = new org.apache.hadoop.fs.Path(root, newDir)
+      val hasCells = fs.exists(p) &&
+        fs.listStatus(p).exists(_.getPath.getName.startsWith("cell="))
+      if (!hasCells) fs.delete(p, true)
+      Option.when(hasCells)(lay.appended("dirs" -> newDir))
     }
-  }
 
   /** Top-k search against a PERSISTED index ([[buildIvfIndex]]): probe
     * cells resolve against the tiny centroid table, then the corpus scan
@@ -723,13 +713,11 @@ object Similarity {
     // pure expressions, so there is no assignment join at all. Build
     // guards dims like the append does (see writeIvfIndex for why the
     // asymmetry would break append ≡ rebuild).
-    pqEncodedCells(
+    GenManifest.writeParts(pqEncodedCells(
       embNN.select(col("vec_id"),
         checkedDims(asDouble(col("embedding")), m * sub,
           "IVF-PQ index (build)", noun = "corpus vectors").as("embedding")),
-      books, coarse, m, sub)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
+      books, coarse, m, sub), "cell", dir, "cells")
   }
 
   /** The (vec_id, ev, codes, nrm, cell) projection an IVF-PQ data file
@@ -771,8 +759,6 @@ object Similarity {
     val coarse = readBook(spark, dir)
     val m = books.length
     val sub = books.head.head.length
-    val lay = GenManifest.layout(spark, dir, Family)
-    val newDir = f"delta-${lay.seq + 1}%010d"
     // Same width guard as the IVF append (see there): a mismatched delta
     // would otherwise PQ-code every row to code 0 per subspace and
     // commit the garbage silently.
@@ -785,34 +771,22 @@ object Similarity {
       .withColumn("embedding",
         checkedDims(col("embedding"), dims, "IVF-PQ index (append)",
           noun = "delta vectors"))
-    pqEncodedCells(guarded, books, coarse, m, sub)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/$newDir")
-    commitAppendedDir(spark, dir, newDir, lay)
+    appendCells(spark, dir, pqEncodedCells(guarded, books, coarse, m, sub))
   }
 
-  /** COMPACT a persisted IVF / IVF-PQ index: fold every live generation
-    * back into ONE cell-partitioned dir and commit the move with the same
-    * atomic manifest rename appends use. The maintenance pass that
-    * restores the single-scan layout appends erode — [[readCells]] plans
-    * one partitioned parquet source per manifest dir, so after N appends
-    * every search carries N scans (each still partition-pruned by the
-    * probe filter — correct, but file listing, plan size, and scan
-    * overhead grow linearly with append count).
-    *
-    * Rows are rewritten VERBATIM: vectors, norms, PQ codes, and cell
-    * assignments are already materialized in the cells table, so no
-    * centroid book or codebook is consulted and search-after-compact is
-    * bit-identical to search-before (spec-pinned) — which is what lets
-    * ONE implementation serve both index layouts.
-    *
-    * Commit protocol: write the folded dir while nothing references it,
-    * atomic manifest rename, then the [[GenManifest.sweep]] — the
-    * pre-compaction generation keeps its files for one further commit so
-    * in-flight readers finish their scans ([[graft.streaming.IncrementalTrend.compact]]
-    * composes with its retention sweep the same way). SINGLE-WRITER, same
-    * contract as append: don't race appends or other compactions. No-op
-    * on a single-generation index (nothing to fold).
+  /** COMPACT a persisted IVF / IVF-PQ index under the shared
+    * [[GenManifest.compact]] and [[GenManifest.foldLive]] —
+    * [[readCells]] plans one partitioned source per manifest dir, so
+    * after N appends every search carries N scans (each still pruned by
+    * the probe filter, but listing, plan size and scan overhead grow
+    * with the append count). Rows rewrite VERBATIM: vectors, norms, PQ
+    * codes and cell assignments are already materialized, so no book is
+    * consulted and search-after-compact is bit-identical to
+    * search-before (spec-pinned) — which is what lets ONE implementation
+    * serve both layouts. The pre-compaction generation keeps its files
+    * for one further commit so in-flight readers finish their scans
+    * ([[graft.streaming.IncrementalTrend.compact]] composes with its
+    * retention sweep the same way).
     *
     * Scale shape: one shuffle of the corpus rows on `cell` (the same
     * exchange the build paid) and O(1) driver metadata; run it on the
@@ -820,124 +794,65 @@ object Similarity {
     * generation count crosses the operator's threshold.
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val lay = GenManifest.layout(spark, dir, Family)
-    val tDirs = lay.tDirs
-    if (lay("dirs").length <= 1 && tDirs.isEmpty) {
-      // Nothing to fold, but compaction is the maintenance pass: still
-      // collect garbage a previously-failed best-effort sweep left
-      // behind (an otherwise idle index would keep it forever).
-      GenManifest.sweep(spark, dir, Family, lay.seq)
-      return
+      dir: String): Unit =
+    GenManifest.compact(spark, dir, Family) { lay =>
+      val newDir = f"compact-${lay.seq + 1}%010d"
+      GenManifest.foldLive(spark, dir, lay, "dirs", "vec_id", "cell", newDir,
+        s"compactIndex at $dir: every vector is retracted — an all-empty " +
+          "index is unrepresentable; rebuild when content returns")
+      lay.compacted("dirs" -> newDir)
     }
-    val newDir = f"compact-${lay.seq + 1}%010d"
-    // readCells already resolves liveness, so with retraction
-    // generations present the fold physically purges tombstoned rows
-    // and the tombstones fold away. A fully-retracted fold is
-    // unrepresentable (a partitioned write of an empty frame leaves a
-    // schema-less dir poisoning every later read) — probe emptiness on
-    // the SAME materialization the write consumes (the dedup-compact
-    // discipline); the common tombstone-free fold stays one
-    // read-to-write pipeline.
-    if (tDirs.isEmpty) {
-      readCells(spark, dir)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/$newDir")
-    } else {
-      val fc = readCells(spark, dir).barrier()
-      try {
-        require(fc.count() > 0L,
-          s"compactIndex at $dir: every vector is retracted — an " +
-            "all-empty index is unrepresentable; rebuild when content " +
-            "returns")
-        fc.repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/$newDir")
-      } finally Barrier.release(fc)
-    }
-    GenManifest.commit(spark, dir, Family, lay.compacted("dirs" -> newDir))
-  }
 
-  /** RETRACT vectors from a persisted IVF / IVF-PQ index — the takedown
-    * / right-to-be-forgotten path, completing the lifecycle (build /
-    * append / compact / retract) across the whole index family. ONE
-    * implementation serves both layouts: the at-rest unit is a
-    * vec_id-keyed cell row either way, so the takedown ids become one
-    * tombstone generation under the shared [[GenManifest]] commit and
-    * liveness resolves as "newest insert generation outlives newest
-    * tombstone" inside [[readCells]] — every serve (IVF top-k, IVF-PQ
-    * ADC + rerank), [[indexHealth]], and [[compactIndex]] stop seeing
-    * the vector the moment the manifest renames. Search-after-retract
-    * equals a frozen-book rebuild over the retained corpus EXACTLY
-    * (cell assignment and codes are deterministic per row and already
-    * at rest — dropping a row cannot move any other row; spec-pinned
-    * for both layouts). A LATER append of the same vec_id (legal once
-    * the id is vacant) restores it.
-    *
-    * OVER-RETRACTION throws before anything is written (the family
-    * rule): every takedown id must be currently live. An empty takedown
-    * set is a no-op. [[compactIndex]] physically purges tombstoned rows
-    * and folds the tombstones away; [[takedownHealth]] is the takedown-
-    * pressure signal. SINGLE-WRITER, like append.
+  /** RETRACT vectors from a persisted IVF / IVF-PQ index — the shared
+    * [[GenManifest.retract]] keyed by vec_id. ONE implementation serves
+    * both layouts: the at-rest unit is a vec_id-keyed cell row either
+    * way, and liveness resolves inside [[readCells]], so every serve
+    * (IVF top-k, IVF-PQ ADC + rerank), [[indexHealth]] and
+    * [[compactIndex]] stop seeing the vector at the commit.
+    * Search-after-retract equals a frozen-book rebuild over the retained
+    * corpus EXACTLY (cell assignment and codes are per-row deterministic
+    * and already at rest; spec-pinned for both layouts). Unlike the
+    * dedup families, a takedown of every live vector throws here: an
+    * all-empty index would serve silently-empty top-k rows.
     *
     * Cost shape: the membership probe is one map-side scan of the cell
     * generations semi-joined to the broadcast takedown set — cells
     * partition by CELL, so a vec-keyed probe cannot prune, but it never
-    * shuffles the index either (the lex-retraction trade). The
-    * tombstone table is takedown-sized by contract (broadcast at every
-    * serve; compact regularly under sustained takedowns).
+    * shuffles the index either (the lex-retraction trade).
     */
   def retractFromAnnIndex(vecs: DataFrame, dir: String): Unit = {
     val spark = vecs.sparkSession
     val lay = GenManifest.layout(spark, dir, Family)
     val newT = f"tombs-${lay.seq + 1}%010d"
-    // BARRIERED, not cached (the family takedown discipline): the
-    // membership require and the WRITTEN tombstone rows must derive
-    // from one materialized id set.
-    val h = vecs.where(col("vec_id").isNotNull)
-      .select(col("vec_id")).distinct()
-      .barrier()
-    try {
-      if (h.isEmpty) {
-        System.err.println(
-          s"[graft] ANN-index retraction of an EMPTY set at $dir " +
-            "skipped (no commit)")
-      } else {
-        // BOTH guards from ONE liveness-resolving pass (the membership
-        // check always needs the full scan, so the old separate
-        // all-retracted anti-join probe paid a second one for nothing):
-        // count the DISTINCT takedown ids found live, and whether any
-        // live row falls outside the takedown set.
-        val nTakedown = h.count()
-        Skew.requireScratchFree(readCells(spark, dir), Seq("__tk"),
-          "retractFromAnnIndex")
-        val probe = readCells(spark, dir)
-          .join(broadcast(h.withColumn("__tk", lit(true))),
-            Seq("vec_id"), "left")
-          .agg(
-            count_distinct(when(col("__tk"), col("vec_id")))
-              .as("live_tk"),
-            max(when(col("__tk").isNull, lit(1)).otherwise(lit(0)))
-              .as("has_survivor"))
-          .head()
-        val nonMembers = nTakedown - probe.getAs[Long]("live_tk")
-        require(nonMembers == 0L,
-          s"retractFromAnnIndex at $dir: $nonMembers of the takedown " +
-            "ids are not currently live (never ingested, or already " +
-            "retracted) — a takedown of absent vectors is a caller " +
-            "bug, not a no-op")
-        // The lex/exact family guard: a takedown covering EVERY live
-        // vector must fail loudly BEFORE committing — an all-empty
-        // index would serve silently-empty top-k rows from every query
-        // until a later compactIndex finally failed with the rebuild
-        // message.
-        require(probe.getAs[Int]("has_survivor") == 1,
-          s"retractFromAnnIndex at $dir: the takedown covers every " +
-            "live vector — an all-empty index is unrepresentable; " +
-            "rebuild when content returns")
-        h.write.mode("overwrite").parquet(s"$dir/$newT")
-        GenManifest.commit(spark, dir, Family, lay.retracted(newT))
-      }
-    } finally Barrier.release(h)
+    GenManifest.retract(spark, dir, Family, vecs, "vec_id", newT) { h =>
+      // BOTH guards from ONE liveness-resolving pass (the membership
+      // check always needs the full scan, so a separate all-retracted
+      // anti-join probe would pay a second one for nothing): count the
+      // DISTINCT takedown ids found live, and whether any live row falls
+      // outside the takedown set.
+      val nTakedown = h.count()
+      Skew.requireScratchFree(readCells(spark, dir), Seq("__tk"),
+        "retractFromAnnIndex")
+      val probe = readCells(spark, dir)
+        .join(broadcast(h.withColumn("__tk", lit(true))),
+          Seq("vec_id"), "left")
+        .agg(
+          count_distinct(when(col("__tk"), col("vec_id"))).as("live_tk"),
+          max(when(col("__tk").isNull, lit(1)).otherwise(lit(0)))
+            .as("has_survivor"))
+        .head()
+      val nonMembers = nTakedown - probe.getAs[Long]("live_tk")
+      require(nonMembers == 0L,
+        s"retractFromAnnIndex at $dir: $nonMembers of the takedown " +
+          "ids are not currently live (never ingested, or already " +
+          "retracted) — a takedown of absent vectors is a caller " +
+          "bug, not a no-op")
+      require(probe.getAs[Int]("has_survivor") == 1,
+        s"retractFromAnnIndex at $dir: the takedown covers every " +
+          "live vector — an all-empty index is unrepresentable; " +
+          "rebuild when content returns")
+      lay.retracted(newT)
+    }
   }
 
   /** Takedown-pressure report over a persisted IVF / IVF-PQ index: per
@@ -971,72 +886,32 @@ object Similarity {
           "AS BIGINT) AS dead_ppm")
   }
 
-  /** INCREMENTAL CORPUS SYNC — apply a v1 → v2 snapshot transition to a
-    * persisted IVF or IVF-PQ index currently holding v1's vectors, so
-    * serves afterwards equal a FROZEN-BOOK rebuild over v2 EXACTLY (the
-    * index-family sync composition at the ANN tier; spec-pinned for
-    * both layouts): removed + changed vec_ids retract (one tombstone
-    * generation), added + changed vectors append ENCODED WITH THE
-    * FROZEN BOOKS — cell assignment and PQ codes are per-row
-    * deterministic, so the transition moves nothing else. The diff unit
-    * is the VECTOR VALUE via [[Curation.corpusDiffBy]] (the JSON
-    * rendering of the embedding array — engine-internal only, both
-    * snapshots hash through the same Spark codegen, so exactness needs
-    * no cross-engine argument); a re-embedded doc with the same vec_id
-    * reads `changed` and is retracted + re-encoded.
-    *
-    * NOTE the book is NOT retrained: like every append, sync encodes
-    * with the build-time centroids/codebooks. A transition that
-    * materially shifts the distribution shows up in [[indexHealth]]
-    * residual drift — the rebuild signal stays the operator's call.
-    *
-    * Membership precondition: the index holds exactly v1 (a built index
-    * contains every non-null-id v1 row — builds throw on bad vectors
-    * rather than dropping). Wrong v1, or a sync already applied, trips
-    * [[retractFromAnnIndex]]'s over-retraction guard before anything is
-    * written. Null-id rows are outside the diff (never ingested by
-    * builds — the same exclusion).
-    *
-    * TORN-SYNC RECOVERY: two atomic commits (retract, then append). A
-    * crash between them leaves membership at v1 ∖ (removed ∪ changed);
-    * recover by applying the append leg alone —
-    * `appendToIvf(Pq)Index(v2 ⋉ (added ∪ changed ids), dir)` — or
-    * rebuild. An unchanged corpus is a complete no-op; a transition
-    * retracting EVERY live vector is refused (all-empty guard).
-    *
-    * 100 TB shape: the diff join ships 16-byte hashes only and runs
-    * ONCE (the transition set barriers — broadcast-sized by contract);
-    * the append leg broadcast-semi-joins its id set against the v2
-    * scan, and encoding touches only transition vectors. Both snapshot
-    * frames must be deterministic under re-evaluation. SINGLE-WRITER.
+  /** INCREMENTAL CORPUS SYNC — the shared [[GenManifest.sync]] keyed by
+    * vec_id, so serves afterwards equal a FROZEN-BOOK rebuild over v2
+    * EXACTLY (spec-pinned for both layouts). The diff unit is the VECTOR
+    * VALUE (the JSON rendering of the embedding array — engine-internal
+    * only, both snapshots hash through the same Spark codegen); a
+    * re-embedded vector with the same vec_id reads `changed` and is
+    * retracted + re-encoded. The append leg encodes with the build-time
+    * books of whichever layout the index has (IVF or IVF-PQ): the book
+    * is NOT retrained, so a transition that shifts the distribution
+    * shows up as [[indexHealth]] residual drift. The index must hold
+    * exactly v1 (builds throw on bad vectors rather than dropping);
+    * a transition retracting EVERY live vector is refused. Torn-sync
+    * recovery: `appendToIvf(Pq)Index(v2 ⋉ (added ∪ changed ids), dir)`.
     */
   def syncAnnIndex(v1Emb: DataFrame, v2Emb: DataFrame,
       dir: String): Unit = {
     val spark = v1Emb.sparkSession
-    def keyed(d: DataFrame) = d.select(col("vec_id").as("doc_id"),
-      coalesce(to_json(struct(col("embedding"))), lit("")).as("text"))
-    val transitions = Curation.corpusDiffBy(keyed(v1Emb), keyed(v2Emb),
-        md5(col("text")))
-      .where(col("status") =!= "unchanged")
-      .select(col("doc_id").as("vec_id"), col("status"))
-      .barrier()
-    try {
-      val retractIds = transitions
-        .filter(col("status").isin("removed", "changed"))
-        .select(col("vec_id"))
-      retractFromAnnIndex(retractIds, dir)
-      val appendIds = transitions
-        .filter(col("status").isin("added", "changed"))
-        .select(col("vec_id"))
-      val delta = v2Emb.join(broadcast(appendIds), Seq("vec_id"),
-        "left_semi")
-      // ONE composition serves both layouts — the at-rest unit is the
-      // same vec_id-keyed cell row; only the append encoding differs.
-      val (fs, root) = GenManifest.fsRoot(spark, dir)
-      val isPq = fs.exists(new org.apache.hadoop.fs.Path(root, "codebooks"))
-      if (isPq) appendToIvfPqIndex(delta, dir)
-      else appendToIvfIndex(delta, dir)
-    } finally Barrier.release(transitions)
+    GenManifest.sync(v1Emb, v2Emb,
+        md5(coalesce(to_json(struct(col("embedding"))), lit(""))),
+        key = "vec_id")(
+      retractFromAnnIndex(_, dir), { delta =>
+        val (fs, root) = GenManifest.fsRoot(spark, dir)
+        if (fs.exists(new org.apache.hadoop.fs.Path(root, "codebooks")))
+          appendToIvfPqIndex(delta, dir)
+        else appendToIvfIndex(delta, dir)
+      })
   }
 
   /** Index-quality drift report over a persisted IVF / IVF-PQ index: one

@@ -62,9 +62,6 @@ object StatsIndex {
     Seq("cdirs" -> "cells", "hdirs" -> "hist"), Some("meta"),
     tombstones = false, "cells|hist|meta|(cells|hist|meta)-.*".r)
 
-  /** The (cells, hist, meta) dir names generation `g` writes. */
-  private def genDirs(g: Long): (String, String, String) =
-    (s"cells-$g", s"hist-$g", s"meta-$g")
 
   private def writeMeta(spark: SparkSession, dir: String, metaDir: String,
       nRows: Long): Unit =
@@ -112,6 +109,18 @@ object StatsIndex {
     histOf(m).write.mode("overwrite").parquet(s"$dir/$hDir")
   }
 
+  /** Write micro table `m` as generation `lay.seq + 1` (cells, hist and
+    * an `nRows` meta) and return the layout appending it.
+    */
+  private def writeGen(m: DataFrame, dir: String, lay: GenManifest.Layout,
+      nRows: Long): GenManifest.Layout = {
+    val g = lay.seq + 1
+    writeTables(m, dir, s"cells-$g", s"hist-$g")
+    writeMeta(m.sparkSession, dir, s"meta-$g", nRows)
+    lay.appended("cdirs" -> s"cells-$g", "hdirs" -> s"hist-$g")
+      .copy(metaDir = Some(s"meta-$g"))
+  }
+
   /** Build the index over a base corpus. ONE materialization (the
     * MediaIndex build rule): the micro aggregate is cached and counted
     * BEFORE the previous index is destroyed, so an empty corpus — or an
@@ -146,29 +155,17 @@ object StatsIndex {
     * disk and no generation commits. SINGLE-WRITER, like every
     * GenManifest family.
     */
-  def appendToStatsIndex(newDocs: DataFrame, dir: String): Unit = {
-    val spark = newDocs.sparkSession
-    val lay = GenManifest.layout(spark, dir, Family)
-    val nBase = readMetaRows(spark, dir, lay.meta)
-    require(nBase > 0L,
-      s"stats index at $dir has an empty base — rebuild with " +
-        "buildStatsIndex instead of appending")
-    val (newC, newH, newM) = genDirs(lay.seq + 1)
-    Barrier.withCached(microCells(newDocs)) { m =>
-      val nNew = countRows(m)
-      if (nNew == 0L) {
-        System.err.println(
-          s"[graft] stats-index append of an EMPTY delta to $dir skipped " +
-            "(nothing written, no commit)")
-      } else {
-        writeTables(m, dir, newC, newH)
-        writeMeta(spark, dir, newM, nBase + nNew)
-        GenManifest.commit(spark, dir, Family, lay
-          .appended("cdirs" -> newC, "hdirs" -> newH)
-          .copy(metaDir = Some(newM)))
+  def appendToStatsIndex(newDocs: DataFrame, dir: String): Unit =
+    GenManifest.append(newDocs.sparkSession, dir, Family) { lay =>
+      val nBase = readMetaRows(newDocs.sparkSession, dir, lay.meta)
+      require(nBase > 0L,
+        s"stats index at $dir has an empty base — rebuild with " +
+          "buildStatsIndex instead of appending")
+      Barrier.withCached(microCells(newDocs)) { m =>
+        val nNew = countRows(m)
+        Option.when(nNew > 0L)(writeGen(m, dir, lay, nBase + nNew))
       }
     }
-  }
 
   /** Retract previously-ingested rows — the takedown / right-to-be-
     * forgotten path no pair index can offer without a rebuild: a
@@ -187,7 +184,9 @@ object StatsIndex {
     * than masked. Retracting MORE rows than the index holds fails
     * loudly here; retracting exactly everything leaves an empty index
     * that every serve rejects (rebuild instead). Empty retraction is a
-    * no-op. SINGLE-WRITER, like append.
+    * no-op. SINGLE-WRITER, like append. It keeps its own code instead of
+    * [[GenManifest.retract]]: it writes negated sums, not key tombstones,
+    * so there is no key set to barrier and no membership to probe.
     */
   def retractFromStatsIndex(removedDocs: DataFrame, dir: String): Unit = {
     val spark = removedDocs.sparkSession
@@ -195,7 +194,6 @@ object StatsIndex {
     val nBase = readMetaRows(spark, dir, lay.meta)
     require(nBase > 0L,
       s"stats index at $dir is empty — nothing to retract from")
-    val (newC, newH, newM) = genDirs(lay.seq + 1)
     Barrier.withCached(microCells(removedDocs)) { m =>
       val nGone = countRows(m)
       require(nGone <= nBase,
@@ -208,32 +206,29 @@ object StatsIndex {
       } else {
         val neg = m.select(col("lang"), col("source"), col("len"),
           (-col("n_docs")).as("n_docs"), (-col("chars")).as("chars"))
-        writeTables(neg, dir, newC, newH)
-        writeMeta(spark, dir, newM, nBase - nGone)
-        GenManifest.commit(spark, dir, Family, lay
-          .appended("cdirs" -> newC, "hdirs" -> newH)
-          .copy(metaDir = Some(newM)))
+        GenManifest.commit(spark, dir, Family,
+          writeGen(neg, dir, lay, nBase - nGone))
       }
     }
   }
 
-  /** INCREMENTAL CORPUS SYNC — apply a v1 → v2 snapshot transition so
-    * serves afterwards equal a [[buildStatsIndex]] over v2 EXACTLY: the
-    * cheapest sync in the index family because exactness is ARITHMETIC
+  /** INCREMENTAL CORPUS SYNC — the shared [[GenManifest.sync]], the
+    * cheapest in the index family because exactness is ARITHMETIC
     * (commutative integer sums — retraction is a negated-sum generation,
     * append a positive one; the serve's re-aggregation nets the v1
     * contribution of every transitioned doc out and the v2 contribution
-    * in, no hash-family or liveness argument needed).
+    * in, no hash-family or liveness argument needed). Serves afterwards
+    * equal a [[buildStatsIndex]] over v2 EXACTLY.
     *
     * The diff unit is the full CELL IDENTITY (lang, source, text), not
     * text alone: a source reattribution or language relabel with
     * unchanged text MOVES the doc between cells, so it must read
-    * `changed` (retract the v1 row, append the v2 row) — the
-    * [[Curation.corpusDiffBy]] hook exists for exactly this. Fields
-    * coalesce to '' under the null ≡ empty contract and join with a
-    * U+0001 unit separator (a field containing that control char could in
-    * principle alias — acceptable for control-character-free corpus
-    * metadata, documented).
+    * `changed` (retract the v1 row, append the v2 row). Fields coalesce
+    * to '' under the null ≡ empty contract and join with a U+0001 unit
+    * separator (a field containing that control char could in principle
+    * alias — acceptable for control-character-free corpus metadata,
+    * documented). The retract leg hands [[retractFromStatsIndex]] the
+    * removed + changed ROWS of v1, whose negated sums it writes.
     *
     * Null-id rows are outside the diff (corpusDiff's contract): their
     * v1 contribution stays ingested, so sync ≡ rebuild-on-v2 holds
@@ -241,90 +236,74 @@ object StatsIndex {
     * the same precondition every registered oracle states with its
     * `doc_id IS NULL OR` arm.
     *
-    * TORN-SYNC RECOVERY: the retract and append legs are two separate
-    * atomic commits. A crash between them leaves the index at
-    * v1 ∖ (removed ∪ changed) — and because this family stores
-    * aggregates, it CANNOT detect that a re-run's retract leg was
-    * already applied (re-running the whole sync double-retracts,
-    * visible only as [[indexHealth]] `neg_cells`). Recover by applying
-    * the append leg alone:
-    * `appendToStatsIndex(v2Docs ⋉ (added ∪ changed ids), dir)` — the
-    * transition ids are recomputable from the two snapshots — or
-    * rebuild. The membership-carrying families (exact/dedup/media/lex)
-    * resume automatically; this one trades that for zero per-doc state.
-    *
-    * 100 TB shape: ONE hash-only co-partitioned full-outer diff join
-    * (the transition set barriers — broadcast-sized by contract, like
-    * every takedown table); each leg broadcast-semi-joins its
-    * transition-sized id set against a snapshot scan, and the
-    * tokenizing micro aggregation only ever touches transition rows.
-    * Both snapshot frames must be deterministic under re-evaluation.
-    * SINGLE-WRITER, like every lifecycle op.
+    * TORN-SYNC RECOVERY differs here: this family stores aggregates, so
+    * it CANNOT detect that a re-run's retract leg was already applied —
+    * re-running the whole sync double-retracts, visible only as
+    * [[indexHealth]] `neg_cells`, where a key-tombstone family's guard
+    * throws instead. Recover by applying the append leg alone:
+    * `appendToStatsIndex(v2Docs ⋉ (added ∪ changed ids), dir)` — or
+    * rebuild.
     */
   def syncStatsIndex(v1Docs: DataFrame, v2Docs: DataFrame,
-      dir: String): Unit = {
-    val cellIdentity = md5(concat_ws("\u0001",
-      coalesce(col("lang"), lit("")), coalesce(col("source"), lit("")),
-      coalesce(col("text"), lit(""))))
-    val transitions =
-      Curation.corpusDiffBy(v1Docs, v2Docs, cellIdentity)
-        .where(col("status") =!= "unchanged")
-        .select(col("doc_id"), col("status"))
-        .barrier()
-    try {
-      val retractIds = transitions
-        .filter(col("status").isin("removed", "changed"))
-        .select(col("doc_id"))
-      retractFromStatsIndex(
-        v1Docs.join(broadcast(retractIds), Seq("doc_id"), "left_semi"),
-        dir)
-      val appendIds = transitions
-        .filter(col("status").isin("added", "changed"))
-        .select(col("doc_id"))
-      appendToStatsIndex(
-        v2Docs.join(broadcast(appendIds), Seq("doc_id"), "left_semi"),
-        dir)
-    } finally Barrier.release(transitions)
-  }
+      dir: String): Unit =
+    GenManifest.sync(v1Docs, v2Docs, md5(concat_ws("\u0001",
+        coalesce(col("lang"), lit("")), coalesce(col("source"), lit("")),
+        coalesce(col("text"), lit("")))))(
+      gone => retractFromStatsIndex(
+        v1Docs.join(broadcast(gone), Seq("doc_id"), "left_semi"), dir),
+      appendToStatsIndex(_, dir))
 
-  /** Fold every live generation back into ONE pair of tables (the
-    * partial sums re-aggregate — values identical by commutativity, so
+  /** COMPACT under the shared [[GenManifest.compact]]: fold every
+    * generation back into ONE pair of tables (the partial sums
+    * re-aggregate — values identical by commutativity, so
     * serve-after-compact ≡ serve-before exactly). `n_rows` carries over
     * verbatim: unlike the dedup families' distinct counts it was exact
-    * all along. No-op fold on a single-generation index, but the sweep
-    * still runs (the exact-index discipline — garbage from a previously
-    * failed best-effort sweep would otherwise live forever).
+    * all along. The fold is this family's own, not
+    * [[GenManifest.foldLive]]: it re-aggregates sums rather than keeping
+    * live rows.
     */
-  def compactStatsIndex(spark: SparkSession, dir: String): Unit = {
-    val lay = GenManifest.layout(spark, dir, Family)
-    if (lay("cdirs").length <= 1 && lay("hdirs").length <= 1) {
-      GenManifest.sweep(spark, dir, Family, lay.seq)
-      return
+  def compactStatsIndex(spark: SparkSession, dir: String): Unit =
+    GenManifest.compact(spark, dir, Family) { lay =>
+      val g = lay.seq + 1
+      // Partial sums fold by the SAME group keys they were stored under —
+      // plain re-aggregation, not the micro derivation (cells rows carry
+      // tokens already; re-deriving len·n_docs would be meaningless
+      // here). Fully-cancelled groups (ingest + retraction netting to
+      // zero on EVERY measure) are purged from the folded tables —
+      // compaction is where retracted data physically leaves the disk; a
+      // group zero on some measures but not all is corruption and is
+      // kept visible.
+      foldedCells(spark, dir, lay).write.mode("overwrite")
+        .parquet(s"$dir/cells-$g")
+      foldedHist(spark, dir, lay).write.mode("overwrite")
+        .parquet(s"$dir/hist-$g")
+      writeMeta(spark, dir, s"meta-$g", readMetaRows(spark, dir, lay.meta))
+      lay.compacted("cdirs" -> s"cells-$g", "hdirs" -> s"hist-$g")
+        .copy(metaDir = Some(s"meta-$g"))
     }
-    val nRows = readMetaRows(spark, dir, lay.meta)
-    val (newC, newH, newM) = genDirs(lay.seq + 1)
-    // Partial sums fold by the SAME group keys they were stored under —
-    // plain re-aggregation, not the micro derivation (cells rows carry
-    // tokens already; re-deriving len·n_docs would be meaningless here).
-    // Fully-cancelled groups (ingest + retraction netting to zero on
-    // EVERY measure) are purged from the folded tables — compaction is
-    // where retracted data physically leaves the disk; a group zero on
-    // some measures but not all is corruption and is kept visible.
+
+  /** The (lang, source) partial sums re-aggregated across generations,
+    * groups a retraction cancelled to zero on every measure dropped —
+    * what compaction writes and [[statsCells]] serves.
+    */
+  private def foldedCells(spark: SparkSession, dir: String,
+      lay: GenManifest.Layout): DataFrame =
     GenManifest.readGenerations(spark, dir, lay("cdirs"))
       .groupBy(col("lang"), col("source"))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("tokens")).as("tokens"),
         sum(col("chars")).as("chars"))
       .where(col("n_docs") =!= 0L || col("tokens") =!= 0L ||
         col("chars") =!= 0L)
-      .write.mode("overwrite").parquet(s"$dir/$newC")
+
+  /** The (lang, len) histogram re-aggregated across generations, zero
+    * counts dropped — what compaction writes and [[statsQuantiles]]
+    * reads.
+    */
+  private def foldedHist(spark: SparkSession, dir: String,
+      lay: GenManifest.Layout): DataFrame =
     GenManifest.readGenerations(spark, dir, lay("hdirs"))
       .groupBy(col("lang"), col("len")).agg(sum(col("cnt")).as("cnt"))
       .where(col("cnt") =!= 0L)
-      .write.mode("overwrite").parquet(s"$dir/$newH")
-    writeMeta(spark, dir, newM, nRows)
-    GenManifest.commit(spark, dir, Family, lay
-      .compacted("cdirs" -> newC, "hdirs" -> newH).copy(metaDir = Some(newM)))
-  }
 
   private def readMetaRows(spark: SparkSession, dir: String,
       metaDir: String): Long =
@@ -343,12 +322,7 @@ object StatsIndex {
     val lay = GenManifest.layout(spark, dir, Family)
     require(readMetaRows(spark, dir, lay.meta) > 0L,
       s"stats index at $dir is empty")
-    GenManifest.readGenerations(spark, dir, lay("cdirs"))
-      .groupBy(col("lang"), col("source"))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("tokens")).as("tokens"),
-        sum(col("chars")).as("chars"))
-      .where(col("n_docs") =!= 0L || col("tokens") =!= 0L ||
-        col("chars") =!= 0L)
+    foldedCells(spark, dir, lay)
   }
 
   /** Serve exact per-language token-length quantiles from the histogram
@@ -366,10 +340,7 @@ object StatsIndex {
     // whose EVERY length cancelled would otherwise survive with
     // total = 0, where the rank test `cum·1e6 >= q·0` is vacuously true
     // and the tail would emit quantiles for a corpus-absent language.
-    val hist = GenManifest.readGenerations(spark, dir, lay("hdirs"))
-      .groupBy(col("lang"), col("len")).agg(sum(col("cnt")).as("cnt"))
-      .where(col("cnt") =!= 0L)
-    TextAnalysis.quantilesFromHist(hist, qsPpm)
+    TextAnalysis.quantilesFromHist(foldedHist(spark, dir, lay), qsPpm)
   }
 
   /** One-row diagnostics: live generation count, stored-table sizes vs

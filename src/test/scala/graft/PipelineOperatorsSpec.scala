@@ -4768,6 +4768,52 @@ class PipelineOperatorsSpec extends SparkSpec {
     assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty)
   }
 
+  test("doc_minhash_recall: a failed denominator surfaces its exception and strands no numerator barrier") {
+    // The prefix-join denominator runs on the calling thread while the LSH
+    // numerator materializes its pair table on its own thread. A listener
+    // cancels every query job started under the calling thread's
+    // description (the numerator's jobs carry their own; the parquet
+    // schema-inference job runs outside any query execution), so only the
+    // denominator fails. The call must wait for the numerator and release
+    // its barrier.
+    val sc = spark.sparkContext
+    val marker = "doc_minhash_recall spec: denominator"
+    val cancel = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(p =>
+            p.getProperty("spark.job.description") == marker &&
+              p.getProperty("spark.sql.execution.id") != null))
+          sc.cancelJob(js.jobId, "injected denominator failure")
+    }
+    def idle(): Unit = {
+      val end = System.nanoTime() + 60000000000L
+      var quietSince = System.nanoTime()
+      while (System.nanoTime() - quietSince < 3000000000L &&
+          System.nanoTime() < end) {
+        if (sc.statusTracker.getActiveJobIds().nonEmpty)
+          quietSince = System.nanoTime()
+        Thread.sleep(50)
+      }
+    }
+    idle()
+    val before = sc.getPersistentRDDs.keySet.toSet
+    sc.addSparkListener(cancel)
+    sc.setJobDescription(marker)
+    val e = try intercept[Exception] {
+      SparkEntry.queries("doc_minhash_recall")(spark, "/root/testdata/sf0.001")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(cancel)
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse(""))
+      .mkString("\n")
+    assert(messages.contains("injected denominator failure"), messages)
+    idle()
+    assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty)
+  }
+
   // ---- selection (DSIR / caps / epoch shuffle) -------------------------
 
   test("dsirScores: target-like raw docs score above raw docs that aren't") {
